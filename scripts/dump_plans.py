@@ -3,10 +3,19 @@
 The judge-facing analogue of the reference's golden plan files
 (gtest_planner_interpreter.out): concrete evidence of pushdown, pruning,
 broadcast choices, and exchange counts at sf0.1.
+
+With arguments it writes an optimization round's before/after evidence
+instead, one ``<round_dir>/<query>_<tag>.txt`` per named query:
+
+    python scripts/dump_plans.py plans/r11 before q2_min_cost_supplier lm_perplexity
+    python scripts/dump_plans.py plans/r11 after q2_min_cost_supplier
+
+``SPARK_GRAFT_SF_DIR`` overrides the scale-factor directory.
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
@@ -98,10 +107,18 @@ SHOW = [
 ]
 
 
-def main() -> None:
-    sf = "/root/testdata/sf0.1"
-    spark = get_spark("plans", master="local[8]")
-    spark.sparkContext.setLogLevel("ERROR")
+def dump_round(spark, sf: str, round_dir: str, tag: str, names: list[str]) -> None:
+    qs = all_queries()
+    os.makedirs(round_dir, exist_ok=True)
+    for name in names:
+        plan = formatted_plan(qs[name](spark, sf))
+        path = os.path.join(round_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(plan)
+        print(f"wrote {path} ({len(plan)} bytes)", flush=True)
+
+
+def write_plans_md(spark, sf: str) -> None:
     qs = all_queries()
     out = [
         "# PLANS — captured physical plans at sf0.1\n",
@@ -127,6 +144,17 @@ def main() -> None:
     with open("PLANS.md", "w") as f:
         f.write("\n".join(out) + "\n")
     print("wrote PLANS.md")
+
+
+def main() -> None:
+    sf = "/root/testdata/sf0.1"
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR", sf)
+    spark = get_spark("plans", master="local[8]")
+    spark.sparkContext.setLogLevel("ERROR")
+    if len(sys.argv) > 1:
+        dump_round(spark, sf, sys.argv[1], sys.argv[2], sys.argv[3:])
+    else:
+        write_plans_md(spark, sf)
     spark.stop()
 
 

@@ -141,6 +141,7 @@ def test_corpus_stats_persisted_matches_inline(spark, tmp_path, monkeypatch):
     import os
     import shutil
 
+    from tiflash_spark import cache
     from tiflash_spark.pipeline import fulltext as ft
 
     docs = spark.createDataFrame(DOCS)
@@ -149,7 +150,7 @@ def test_corpus_stats_persisted_matches_inline(spark, tmp_path, monkeypatch):
     postings, doclen = ft.index_tables(spark, sf_dir)
     try:
         stats = ft.corpus_stats(spark, sf_dir, doclen)
-        loc = os.path.join(ft._warehouse_path(spark), f"ft_stats_{ft._sf_tag(sf_dir)}")
+        loc = os.path.join(cache.warehouse_path(spark), f"ft_stats_{cache.sf_tag(sf_dir)}")
         assert os.path.isdir(loc)
         inline = doclen.agg(
             F.count(F.lit(1)).cast("double").alias("n_docs"),
@@ -164,13 +165,13 @@ def test_corpus_stats_persisted_matches_inline(spark, tmp_path, monkeypatch):
         without = ft.bm25_search(postings, doclen, ["quick", "fox"], k=10).collect()
         assert with_stats == without
     finally:
-        for t in (f"ft_postings_{ft._sf_tag(sf_dir)}", f"ft_doclen_{ft._sf_tag(sf_dir)}"):
+        for t in (f"ft_postings_{cache.sf_tag(sf_dir)}", f"ft_doclen_{cache.sf_tag(sf_dir)}"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
             shutil.rmtree(
-                os.path.join(ft._warehouse_path(spark), t.lower()), ignore_errors=True
+                os.path.join(cache.warehouse_path(spark), t.lower()), ignore_errors=True
             )
         shutil.rmtree(
-            os.path.join(ft._warehouse_path(spark), f"ft_stats_{ft._sf_tag(sf_dir)}"),
+            os.path.join(cache.warehouse_path(spark), f"ft_stats_{cache.sf_tag(sf_dir)}"),
             ignore_errors=True,
         )
 
@@ -181,6 +182,7 @@ def test_index_tables_reregister_from_files(spark, tmp_path, monkeypatch):
     — no rebuild, bucket locality preserved."""
     import os
 
+    from tiflash_spark import cache
     from tiflash_spark.pipeline import fulltext as ft
     from tiflash_spark.plans.explain import exchange_count
 
@@ -191,12 +193,12 @@ def test_index_tables_reregister_from_files(spark, tmp_path, monkeypatch):
     sf_dir = str(tmp_path / "sfX")
     p1, d1 = ft.index_tables(spark, sf_dir)
     n_postings = p1.count()
-    wh = ft._warehouse_path(spark)
-    loc = os.path.join(wh, f"ft_postings_{ft._sf_tag(sf_dir)}".lower())
+    wh = cache.warehouse_path(spark)
+    loc = os.path.join(wh, f"ft_postings_{cache.sf_tag(sf_dir)}".lower())
     assert os.path.isdir(loc)
     # external tables: DROP keeps files
-    spark.sql(f"DROP TABLE ft_postings_{ft._sf_tag(sf_dir)}")
-    spark.sql(f"DROP TABLE ft_doclen_{ft._sf_tag(sf_dir)}")
+    spark.sql(f"DROP TABLE ft_postings_{cache.sf_tag(sf_dir)}")
+    spark.sql(f"DROP TABLE ft_doclen_{cache.sf_tag(sf_dir)}")
     assert os.path.isdir(loc)
     p2, d2 = ft.index_tables(spark, sf_dir)
     assert p2.count() == n_postings
@@ -207,7 +209,7 @@ def test_index_tables_reregister_from_files(spark, tmp_path, monkeypatch):
     assert {r.doc_id for r in q.collect()} == {1, 2, 4}
     import shutil
 
-    for t in (f"ft_postings_{ft._sf_tag(sf_dir)}", f"ft_doclen_{ft._sf_tag(sf_dir)}"):
+    for t in (f"ft_postings_{cache.sf_tag(sf_dir)}", f"ft_doclen_{cache.sf_tag(sf_dir)}"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         shutil.rmtree(os.path.join(wh, t.lower()), ignore_errors=True)
 

@@ -10,8 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tiflash_spark.catalog import _PLAN_LITERALS, literal_memo
-from tiflash_spark.pipeline.text import _PREPARED, prepared
+from tiflash_spark.cache import _MEMO, literal_memo, prepared
 
 
 def test_prepared_returns_same_object(spark):
@@ -78,7 +77,5 @@ def test_memos_hold_no_dataframes():
     DataFrames/results keyed on testdata rows."""
     from pyspark.sql import DataFrame
 
-    for v in list(_PLAN_LITERALS.values()):
-        assert not isinstance(v, DataFrame)
-    for v in list(_PREPARED.values()):
+    for _stamp, v in list(_MEMO.values()):
         assert not isinstance(v, DataFrame)

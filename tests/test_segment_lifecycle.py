@@ -178,3 +178,36 @@ def test_ingest_bounds_follow_assignment(spark, tmp_path):
     assert {r[HANDLE]: r.v for r in store.read_range(-10, 0).collect()} == {
         -5: "ingest5hm5"
     }
+
+
+def test_handle_only_delete_batch_survives_maintain(spark, tmp_path):
+    """A delete batch that carries only the handle column is conformed to
+    the store's columns at write time: the delta then holds one schema,
+    and the incremental merge in maintain() resolves every payload
+    column whichever delta footer it samples."""
+    store = DeltaStore(spark, str(tmp_path / "hdel"))
+    rows = [(i, i * 10, f"b{i}") for i in range(80)]
+    store.write_batch(
+        spark.createDataFrame(rows, f"{HANDLE} long, a long, b string"), version=1
+    )
+    store.compact_range_segments(ts=1, num_segments=4)
+    model = {h: (a, b) for h, a, b in rows}
+
+    store.write_batch(
+        spark.createDataFrame([(3, -3, "u3"), (70, -70, "u70")], f"{HANDLE} long, a long, b string"),
+        version=2,
+    )
+    model[3], model[70] = (-3, "u3"), (-70, "u70")
+    store.write_batch(
+        spark.createDataFrame([(h,) for h in (5, 41, 70)], f"{HANDLE} long"),
+        version=3,
+        delete=True,
+    )
+    for h in (5, 41, 70):
+        del model[h]
+
+    report = store.maintain(3, delta_threshold=0)
+    assert report["compacted"] and report["segments_rewritten"] >= 1
+    assert store.delta_rows() == 0
+    got = {r[HANDLE]: (r.a, r.b) for r in store.read(3).collect()}
+    assert got == model

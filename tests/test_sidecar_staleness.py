@@ -62,7 +62,8 @@ def test_ft_index_and_stats_rebuild_on_source_rewrite(spark, tmp_path):
 
 
 def test_quant_scales_rebuild_on_source_rewrite(spark, tmp_path):
-    from tiflash_spark.pipeline.fulltext import _sf_tag, _warehouse_path
+    from tiflash_spark.cache import sf_tag as _sf_tag
+    from tiflash_spark.cache import warehouse_path as _warehouse_path
     from tiflash_spark.pipeline.similarity import ann_quantized_topk
 
     sf_dir = str(tmp_path / "sf_stale_q")
@@ -75,7 +76,7 @@ def test_quant_scales_rebuild_on_source_rewrite(spark, tmp_path):
 
     time.sleep(0.01)
     _write_embeddings(spark, sf_dir, scale=2.0)  # per-dim min/max double
-    from tiflash_spark.catalog import read_parquet_memo
+    from tiflash_spark.cache import read_parquet_memo
 
     ann_quantized_topk(spark, sf_dir).collect()
     with open(os.path.join(sloc, "_SOURCE_STAMP")) as fh:

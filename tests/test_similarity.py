@@ -312,3 +312,13 @@ def test_graph_probe_matches_exact_centroid_selection(spark):
     a = [(r.vec_id, r.cos_sim) for r in ann_ivf_graph_topk(spark, SF_MEDIUM).collect()]
     b = [(r.vec_id, r.cos_sim) for r in ann_ivf_topk(spark, SF_MEDIUM).collect()]
     assert a == b
+
+
+def test_fold_json_literal_keys_with_quotes_and_backslashes(spark):
+    """Map keys (source names) with ' and \\ round-trip through the folded
+    from_json literal instead of being rejected."""
+    from tiflash_spark.pipeline.similarity import _fold_json_literal
+
+    m = {"it's": 1, "back\\slash": 2, "both'\\": 3, "plain": 4}
+    c = _fold_json_literal(m, "map<string,bigint>")
+    assert spark.range(1).select(c.alias("m")).collect()[0].m == m

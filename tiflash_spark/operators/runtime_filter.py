@@ -106,7 +106,7 @@ def join_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     RSOperator index)."""
     import os
 
-    from tiflash_spark.catalog import literal_memo
+    from tiflash_spark.cache import literal_memo
 
     part = load_table(spark, sf_dir, "part").where(
         F.col("p_size") == 1

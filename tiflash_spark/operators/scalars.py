@@ -655,7 +655,7 @@ def scalar_stragglers(spark: SparkSession, sf_dir: str) -> DataFrame:
         mysql_to_seconds,
     )
 
-    from tiflash_spark.pipeline.text import prepared
+    from tiflash_spark.cache import prepared
 
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 400)
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tiflash_spark.cache import bucketed, frame_stamp, literal_memo, memo, prepared, sf_tag
 from tiflash_spark.catalog import load_table
 from tiflash_spark.pipeline.text import tokens
 
@@ -59,10 +60,6 @@ def word_ngrams_of(toks: Column, n: int = NGRAM_N) -> Column:
 # (like the synthetic %97 split) must not OOM every executor at scale
 BROADCAST_GRAM_LIMIT = 2_000_000
 
-# broadcast-sizing counts keyed by the eval-gram frame's analyzed-plan
-# semantic hash — planner decisions, not results (see contaminated_ids)
-_N_EVAL_MEMO: dict = {}
-
 
 def contaminated_ids(
     train: DataFrame,
@@ -90,8 +87,6 @@ def contaminated_ids(
     grams then derive from the staged array instead of re-tokenizing the
     text — identical grams, one less corpus tokenize per side.
     """
-
-    from tiflash_spark.pipeline.text import prepared
 
     def grams_of(df: DataFrame) -> Column:
         # constant deep HOF tree per (column, n) — prepared once per JVM
@@ -132,17 +127,14 @@ def contaminated_ids(
     if eval_grams_hint is not None:
         n_eval = eval_grams_hint
     else:
-        # the sizing count is a planner DECISION (broadcast vs shuffle),
-        # not a query result — memo it per analyzed-plan semantic hash so
-        # repeated builds of the same query skip the count job (~0.1-0.2 s
-        # of driver orchestration per build even cache-warm; the 8c/32c
-        # anti-scaling term). Process-local, same lifetime as Spark's own
-        # per-session file-listing cache: an in-place corpus rewrite
-        # mid-process would reuse only the broadcast decision, never rows.
-        key = eval_grams._jdf.queryExecution().analyzed().semanticHash()
-        n_eval = _N_EVAL_MEMO.get(key)
-        if n_eval is None:
-            n_eval = _N_EVAL_MEMO[key] = eval_grams.count()
+        # the sizing count is a planner decision (broadcast vs shuffle),
+        # not a query result: repeated builds over unchanged files skip
+        # the count job
+        n_eval = memo(
+            ("n_eval", eval_grams._jdf.queryExecution().analyzed().semanticHash()),
+            frame_stamp(eval_grams),
+            eval_grams.count,
+        )
     if n_eval <= broadcast_limit:
         eval_side = F.broadcast(eval_grams)
     else:
@@ -472,7 +464,6 @@ def sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source is present because the aggregate sees every row.
     import os as _os3
 
-    from tiflash_spark.catalog import literal_memo
     from tiflash_spark.pipeline.similarity import _fold_json_literal
 
     def _fetch_quota_literals():
@@ -835,7 +826,6 @@ def mix_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docs appears in bt by construction — so row identity is untouched).
     import os as _os2
 
-    from tiflash_spark.catalog import literal_memo
     from tiflash_spark.pipeline.similarity import _fold_json_literal
 
     def _fetch_mix_literals():
@@ -951,7 +941,6 @@ def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tiflash_spark.pipeline.text import (
         dup_frac_of,
         mean_word_len,
-        prepared,
         tokens,
         top_word_frac,
         word_grams,
@@ -1094,7 +1083,6 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tiflash_spark.pipeline.text import (
         dup_frac_of,
         mean_word_len,
-        prepared,
         scan_underparallelized,
         tokens,
         top_word_frac,
@@ -1377,11 +1365,6 @@ def line_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     read the pre-exploded table with bucket-local exchanges instead of
     re-Generating the corpus twice per run. At 100 TB the explode is the
     dominant scan cost, so this is a 2× cut on the heaviest stage."""
-    from tiflash_spark.pipeline.fulltext import (
-        _ensure_bucketed,
-        _sf_tag,
-        _source_stamp,
-    )
 
     def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
@@ -1391,9 +1374,8 @@ def line_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.posexplode(_line_array(F.col("text"))).alias("pos", "line"),
         )
 
-    return _ensure_bucketed(
-        spark, f"doc_lines_{_sf_tag(sf_dir)}", build, "line", 32,
-        source_stamp=_source_stamp(sf_dir, "documents"),
+    return bucketed(
+        spark, sf_dir, "documents", f"doc_lines_{sf_tag(sf_dir)}", build, ("line",), 32
     )
 
 

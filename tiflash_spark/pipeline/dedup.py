@@ -23,9 +23,12 @@ LSH band width and AQE skew-join splitting.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tiflash_spark.cache import bucketed, literal_memo, sf_tag
 from tiflash_spark.catalog import load_table
 from tiflash_spark.pipeline.text import fingerprint, tokens
 
@@ -164,26 +167,17 @@ def auto_band_params(n_docs: int) -> tuple[int, int]:
     return (7, 7)
 
 
-# one cheap count(*) per sf_dir per session (parquet metadata read)
-_AUTO_BAND_CACHE: dict[str, tuple[int, int]] = {}
-
-
 def _resolve_band_params(
     spark: SparkSession, sf_dir: str,
     bands: int | None, rows: int | None,
 ) -> tuple[int, int]:
     if bands is not None and rows is not None:
         return (bands, rows)
-    from tiflash_spark.pipeline.fulltext import _source_stamp
-
-    # keyed by (sf_dir, source stamp) like every sidecar: an in-place
-    # corpus rewrite re-counts instead of reusing a stale doc count
-    key = (sf_dir, _source_stamp(sf_dir, "documents"))
-    got = _AUTO_BAND_CACHE.get(key)
-    if got is None:
-        n = load_table(spark, sf_dir, "documents").count()
-        got = auto_band_params(n)
-        _AUTO_BAND_CACHE[key] = got
+    got = literal_memo(
+        os.path.join(sf_dir, "documents.parquet"),
+        "band_params",
+        lambda: auto_band_params(load_table(spark, sf_dir, "documents").count()),
+    )
     return (bands or got[0], rows or got[1])
 
 
@@ -268,8 +262,6 @@ def minhash_band_index(
     Band parameters default to corpus-sized auto_band_params (the table
     name carries them, so a re-sized corpus builds a fresh index instead
     of silently reading one banded for a different scale)."""
-    from tiflash_spark.pipeline.fulltext import _ensure_bucketed, _sf_tag
-
     bands, rows = _resolve_band_params(spark, sf_dir, bands, rows)
 
     def build() -> DataFrame:
@@ -285,11 +277,9 @@ def minhash_band_index(
             ).alias("band", "bh"),
         )
 
-    from tiflash_spark.pipeline.fulltext import _source_stamp
-
-    return _ensure_bucketed(
-        spark, f"mh_bands_{_sf_tag(sf_dir)}_{bands}x{rows}", build,
-        ("band", "bh"), 32, source_stamp=_source_stamp(sf_dir, "documents")
+    return bucketed(
+        spark, sf_dir, "documents", f"mh_bands_{sf_tag(sf_dir)}_{bands}x{rows}",
+        build, ("band", "bh"), 32,
     )
 
 
@@ -370,8 +360,6 @@ def simhash_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join keys (band, bh) — same warehouse contract as the
     MinHash band index: signatures and banding are paid once per scale
     factor, the candidate self-join runs bucket-co-located."""
-    from tiflash_spark.pipeline.fulltext import _ensure_bucketed, _sf_tag
-
     def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
         docs = simhash_table(
@@ -394,11 +382,8 @@ def simhash_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("band", "bh"),
         )
 
-    from tiflash_spark.pipeline.fulltext import _source_stamp
-
-    return _ensure_bucketed(
-        spark, f"sh_bands_{_sf_tag(sf_dir)}", build, ("band", "bh"), 32,
-        source_stamp=_source_stamp(sf_dir, "documents"),
+    return bucketed(
+        spark, sf_dir, "documents", f"sh_bands_{sf_tag(sf_dir)}", build, ("band", "bh"), 32
     )
 
 

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tiflash_spark.cache import bucketed, sf_tag, sidecar
 from tiflash_spark.catalog import load_table
 
 TOKEN_RE = "[^a-z0-9]+"
@@ -75,145 +76,30 @@ def build_doc_lengths(postings: DataFrame) -> DataFrame:
 # --- persisted index fixture (built once per sf, reused across queries) -----
 
 
-def _sf_tag(sf_dir: str) -> str:
-    return sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
-
-
-def _warehouse_path(spark: SparkSession) -> str | None:
-    from urllib.parse import unquote, urlparse
-
-    raw = spark.conf.get("spark.sql.warehouse.dir", "")
-    u = urlparse(raw)
-    if u.scheme in ("", "file"):
-        return unquote(u.path) or None
-    return None
-
-
-# --- sidecar staleness: every at-rest index/fixture derived from a source
-# table carries the source's (mtime, size) stamp, like read_parquet_memo's
-# keying — an existence-only check would serve stale postings/scales/codes
-# (silently wrong scores) if a corpus were rewritten IN PLACE at the same
-# sf_dir. The stamp file is underscore-prefixed so Spark's parquet reader
-# ignores it inside table directories.
-
-
-def _source_stamp(sf_dir: str, table: str = "documents") -> str:
-    """(mtime_ns, size) identity of the source parquet a sidecar derives
-    from. Directories stamp too (mtime changes when members are replaced)."""
-    import os
-
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(p)
-        return f"{st.st_mtime_ns}-{st.st_size}"
-    except OSError:
-        return "absent"
-
-
-def _sidecar_fresh(loc: str | None, stamp: str | None) -> bool:
-    """True when the sidecar at ``loc`` was built from the stamped source."""
-    import os
-
-    if stamp is None or not loc:
-        return True
-    try:
-        with open(os.path.join(loc, "_SOURCE_STAMP")) as fh:
-            return fh.read().strip() == stamp
-    except OSError:
-        return False
-
-
-def _write_source_stamp(loc: str, stamp: str | None) -> None:
-    import os
-
-    if stamp is None:
-        return
-    with open(os.path.join(loc, "_SOURCE_STAMP"), "w") as fh:
-        fh.write(stamp)
-
-
-def _ensure_bucketed(
-    spark: SparkSession,
-    name: str,
-    build,
-    bucket_col: str | tuple[str, ...],
-    buckets: int,
-    source_stamp: str | None = None,
-) -> DataFrame:
-    """Get a bucketed table, building it at most once per warehouse:
-    1) already in this session's catalog AND fresh → use it;
-    2) fresh files exist from a previous session → re-register the
-       external table with the same bucket spec (bucket ids live in file
-       names, so the DDL round-trip preserves co-location);
-    3) otherwise build, write bucketed, register, stamp.
-
-    ``source_stamp`` (from _source_stamp) keys the at-rest table to its
-    source's (mtime, size): a corpus rewritten in place at the same
-    sf_dir rebuilds the index instead of serving stale rows."""
-    import os
-
-    cols = (bucket_col,) if isinstance(bucket_col, str) else tuple(bucket_col)
-    wh = _warehouse_path(spark)
-    loc = os.path.join(wh, name.lower()) if wh else None
-    fresh = _sidecar_fresh(loc, source_stamp) if loc else True
-    if spark.catalog.tableExists(name):
-        if fresh:
-            return spark.table(name)
-        # stale: drop the (external) catalog entry; the overwrite below
-        # replaces the files
-        spark.sql(f"DROP TABLE `{name}`")
-    if (
-        loc
-        and fresh
-        and os.path.isdir(loc)
-        and any(f.endswith(".parquet") for f in os.listdir(loc))
-    ):
-        schema = spark.read.parquet(loc).schema
-        ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-        clause = ", ".join(cols)
-        spark.sql(
-            f"CREATE TABLE {name} ({ddl}) USING PARQUET "
-            f"CLUSTERED BY ({clause}) SORTED BY ({clause}) "
-            f"INTO {buckets} BUCKETS LOCATION '{loc}'"
-        )
-        return spark.table(name)
-    df = build()
-    w = (
-        df.write.mode("overwrite")
-        .bucketBy(buckets, cols[0], *cols[1:])
-        .sortBy(cols[0], *cols[1:])
-    )
-    if loc:
-        w = w.option("path", loc)
-    w.saveAsTable(name)
-    if loc:
-        _write_source_stamp(loc, source_stamp)
-    return spark.table(name)
-
-
 def index_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The at-rest index pair for a corpus: term-bucketed postings and
     doc-bucketed lengths. Search queries read THESE — the corpus scan and
     posting build are paid once per scale factor, like the reference's
     index build at write/compaction time (FullTextIndex is a storage-layer
     index, not a per-query structure)."""
-    tag = _sf_tag(sf_dir)
-    stamp = _source_stamp(sf_dir, "documents")
-    postings = _ensure_bucketed(
+    tag = sf_tag(sf_dir)
+    postings = bucketed(
         spark,
+        sf_dir,
+        "documents",
         f"ft_postings_{tag}",
         lambda: build_postings(load_table(spark, sf_dir, "documents")),
-        "term",
+        ("term",),
         64,
-        source_stamp=stamp,
     )
-    doclen = _ensure_bucketed(
+    doclen = bucketed(
         spark,
+        sf_dir,
+        "documents",
         f"ft_doclen_{tag}",
         lambda: build_doc_lengths(spark.table(f"ft_postings_{tag}")),
-        "doc_id",
+        ("doc_id",),
         16,
-        source_stamp=stamp,
     )
     return postings, doclen
 
@@ -224,24 +110,16 @@ def corpus_stats(spark: SparkSession, sf_dir: str, doclen: DataFrame) -> DataFra
     stats with the postings): per query it is a 1-row parquet read
     instead of a full doc-length aggregate + broadcast subtree. Falls
     back to computing inline when there is no local warehouse."""
-    import os
-
     agg = lambda: doclen.agg(  # noqa: E731
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
     )
-    wh = _warehouse_path(spark)
-    if not wh:
-        return agg()
-    loc = os.path.join(wh, f"ft_stats_{_sf_tag(sf_dir)}")
-    stamp = _source_stamp(sf_dir, "documents")
-    if not os.path.isdir(loc) or not _sidecar_fresh(loc, stamp):
-        agg().coalesce(1).write.mode("overwrite").parquet(loc)
-        _write_source_stamp(loc, stamp)
-        spark.catalog.refreshByPath(loc)
-    from tiflash_spark.catalog import read_parquet_memo
-
-    return read_parquet_memo(spark, loc)
+    got = sidecar(
+        spark, sf_dir, "documents",
+        lambda loc: agg().coalesce(1).write.mode("overwrite").parquet(loc),
+        f"ft_stats_{sf_tag(sf_dir)}",
+    )
+    return agg() if got is None else got[0]
 
 
 def keyword_search(

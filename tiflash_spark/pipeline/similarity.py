@@ -25,6 +25,7 @@ import os as _os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tiflash_spark.cache import literal_memo, sf_tag, sidecar, warehouse_path
 from tiflash_spark.catalog import load_table
 from tiflash_spark.functions.vector import (
     vec_cosine_similarity,
@@ -37,27 +38,17 @@ TOP_K = 10
 
 
 def _fold_json_literal(value, sql_type: str) -> Column:
-    """A (nested) numeric list as ONE ``from_json('<json>', '<type>')``
-    string literal: from_json over a foldable input constant-folds at plan
-    time, so the executor plan carries the array VALUE while the driver
-    parses one literal instead of thousands of nodes (the r10 PQ-LUT /
-    quant-scales finding). json.dumps round-trips IEEE doubles exactly;
-    allow_nan=False makes degenerate inputs (NaN/Inf embeddings or scales
-    — not valid JSON, from_json would silently NULL the whole array and
-    every downstream score) fail loudly at build time instead. The payload
-    is numeric-only by construction; asserted quote/backslash-free because
-    SQL-quoting escapes inside the literal are lexer-fragile ('' in Spark
-    concatenates adjacent strings rather than escaping)."""
-    return F.expr(_fold_json_sql(value, sql_type))
-
-
-def _fold_json_sql(value, sql_type: str) -> str:
-    """The SQL fragment behind _fold_json_literal, for callers splicing it
-    into a larger F.expr string."""
-    s = _json.dumps(value, allow_nan=False)
-    if "'" in s or "\\" in s:
-        raise ValueError("from_json literal payload must be numeric-only JSON")
-    return f"from_json('{s}', '{sql_type}')"
+    """A (nested) list or map as ONE ``from_json(<json literal>, <type>)``:
+    from_json over a foldable input constant-folds at plan time, so the
+    executor plan carries the VALUE while the driver builds one string
+    literal instead of thousands of nodes (the r10 PQ-LUT / quant-scales
+    finding). The payload rides as a Column literal, never inside SQL
+    text, so any map key (quotes, backslashes) round-trips. json.dumps
+    round-trips IEEE doubles exactly; allow_nan=False makes degenerate
+    inputs (NaN/Inf embeddings or scales — not valid JSON, from_json
+    would silently NULL the whole value and every downstream score) fail
+    loudly at build time instead."""
+    return F.from_json(F.lit(_json.dumps(value, allow_nan=False)), sql_type)
 
 
 def _as_double(a: Column) -> Column:
@@ -85,9 +76,6 @@ def _query_literals(spark: SparkSession, sf_dir: str) -> tuple[list[float], floa
     literal_memo (r11): the fetch itself was still one job per query
     BUILD; the (vector, norm) pair is now memoized per embeddings
     parquet (mtime, size), so repeated builds skip the job entirely."""
-    import os
-
-    from tiflash_spark.catalog import literal_memo
 
     def fetch():
         e = load_table(spark, sf_dir, "embeddings")
@@ -104,7 +92,7 @@ def _query_literals(spark: SparkSession, sf_dir: str) -> tuple[list[float], floa
         return list(qrow.qv), float(qrow.qn)
 
     return literal_memo(
-        os.path.join(sf_dir, "embeddings.parquet"), "query_literals", fetch
+        _os.path.join(sf_dir, "embeddings.parquet"), "query_literals", fetch
     )
 
 
@@ -451,37 +439,19 @@ def vector_index(
     Partitioning by cluster means an n-probe query prunes non-probed
     clusters at FILE LISTING time (PartitionFilters in the scan), the
     distributed analogue of only opening the probed posting lists."""
-    import os
-
-    from tiflash_spark.pipeline.fulltext import (
-        _sf_tag,
-        _sidecar_fresh,
-        _source_stamp,
-        _warehouse_path,
-        _write_source_stamp,
-    )
-
-    tag = _sf_tag(sf_dir)
-    wh = _warehouse_path(spark)
+    tag = sf_tag(sf_dir)
     e = load_table(spark, sf_dir, "embeddings")
-    if wh:
-        cloc = os.path.join(wh, f"ivf_cents_{tag}")
-        aloc = os.path.join(wh, f"ivf_assign_{tag}")
-        stamp = _source_stamp(sf_dir, "embeddings")
-        fresh = _sidecar_fresh(cloc, stamp) and _sidecar_fresh(aloc, stamp)
-        if not (os.path.isdir(cloc) and os.path.isdir(aloc)) or not fresh:
-            cents = refine_centroids(e, _centroids(e), iterations=2)
-            cents.coalesce(1).write.mode("overwrite").parquet(cloc)
-            _assign(e, spark.read.parquet(cloc)).write.mode(
-                "overwrite"
-            ).partitionBy("cluster").parquet(aloc)
-            _write_source_stamp(cloc, stamp)
-            _write_source_stamp(aloc, stamp)
-            spark.catalog.refreshByPath(cloc)
-            spark.catalog.refreshByPath(aloc)
-        from tiflash_spark.catalog import read_parquet_memo
 
-        return read_parquet_memo(spark, cloc), read_parquet_memo(spark, aloc)
+    def write(cloc: str, aloc: str) -> None:
+        cents = refine_centroids(e, _centroids(e), iterations=2)
+        cents.coalesce(1).write.mode("overwrite").parquet(cloc)
+        _assign(e, spark.read.parquet(cloc)).write.mode(
+            "overwrite"
+        ).partitionBy("cluster").parquet(aloc)
+
+    got = sidecar(spark, sf_dir, "embeddings", write, f"ivf_cents_{tag}", f"ivf_assign_{tag}")
+    if got is not None:
+        return got
     # no local warehouse (remote URI session): build inline, same plan shape
     cents = refine_centroids(e, _centroids(e), iterations=2).persist()
     return cents, _assign(e, cents)
@@ -508,9 +478,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe selection stays index navigation (which clusters to scan);
     # memoized like the query literals so repeated builds skip the
     # 16-row job (literal_memo keys on embeddings (mtime, size))
-    from tiflash_spark.catalog import literal_memo as _literal_memo
-
-    probe_ids = _literal_memo(
+    probe_ids = literal_memo(
         _os.path.join(sf_dir, "embeddings.parquet"),
         "ivf_probe_ids",
         lambda: [
@@ -785,11 +753,9 @@ def centroid_graph(spark: SparkSession, sf_dir: str, cents: DataFrame) -> dict:
     Spark ignores underscore files) and rebuilds on mismatch."""
     import os
 
-    from tiflash_spark.pipeline.fulltext import _sf_tag, _warehouse_path
-
-    wh = _warehouse_path(spark)
+    wh = warehouse_path(spark)
     if wh:
-        gloc = os.path.join(wh, f"ivf_graph_{_sf_tag(sf_dir)}")
+        gloc = os.path.join(wh, f"ivf_graph_{sf_tag(sf_dir)}")
         fp_path = os.path.join(gloc, "_FINGERPRINT")
         fp = _centroid_fingerprint(cents)
         stale = True
@@ -898,30 +864,13 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per sf beside the IVF index (the codebook lives with the index in
     any real vector store), so the query pays a 1-row read, not a
     corpus pass."""
-    import os
-
-    from tiflash_spark.pipeline.fulltext import (
-        _sf_tag,
-        _sidecar_fresh,
-        _source_stamp,
-        _warehouse_path,
-        _write_source_stamp,
-    )
-
     e = load_table(spark, sf_dir, "embeddings")
-    wh = _warehouse_path(spark)
-    if wh:
-        sloc = os.path.join(wh, f"quant_scales_{_sf_tag(sf_dir)}")
-        stamp = _source_stamp(sf_dir, "embeddings")
-        if not os.path.isdir(sloc) or not _sidecar_fresh(sloc, stamp):
-            _quant_scales(e).coalesce(1).write.mode("overwrite").parquet(sloc)
-            _write_source_stamp(sloc, stamp)
-            spark.catalog.refreshByPath(sloc)
-        from tiflash_spark.catalog import read_parquet_memo
-
-        scales = read_parquet_memo(spark, sloc)
-    else:
-        scales = _quant_scales(e)
+    got = sidecar(
+        spark, sf_dir, "embeddings",
+        lambda loc: _quant_scales(e).coalesce(1).write.mode("overwrite").parquet(loc),
+        f"quant_scales_{sf_tag(sf_dir)}",
+    )
+    scales = _quant_scales(e) if got is None else got[0]
     # the 2·dim per-dim scales are fetched ONCE driver-side (a 1-row read
     # off the memoized parquet) and folded into the plan as two
     # from_json literals — removing the two BroadcastNestedLoopJoin
@@ -931,9 +880,7 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-trips the doubles exactly and the arithmetic is unchanged).
     # The dim-64 literal is ~1.5 kB — index metadata in the plan, exactly
     # like the PQ LUT.
-    from tiflash_spark.catalog import literal_memo
-
-    _emb_path = os.path.join(sf_dir, "embeddings.parquet")
+    _emb_path = _os.path.join(sf_dir, "embeddings.parquet")
 
     def _fetch_scales():
         srow = scales.first()
@@ -1080,9 +1027,7 @@ def ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe selection stays index navigation (which clusters to scan);
     # memoized like the query literals so repeated builds skip the
     # 16-row job (literal_memo keys on embeddings (mtime, size))
-    from tiflash_spark.catalog import literal_memo as _literal_memo
-
-    probe_ids = _literal_memo(
+    probe_ids = literal_memo(
         _os.path.join(sf_dir, "embeddings.parquet"),
         "ivf_probe_ids",
         lambda: [
@@ -1386,71 +1331,48 @@ def pq_index(spark: SparkSession, sf_dir: str):
     import numpy as np
     import pandas as pd
 
-    from tiflash_spark.pipeline.fulltext import (
-        _sf_tag,
-        _sidecar_fresh,
-        _source_stamp,
-        _warehouse_path,
-        _write_source_stamp,
-    )
+    def build(books):
+        def encode(batches):
+            dsub = books[0].shape[1]
+            for pdf in batches:
+                v = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+                v /= np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
+                codes = np.empty((len(v), PQ_M), dtype=np.int32)
+                for m in range(PQ_M):
+                    sub = v[:, m * dsub:(m + 1) * dsub]
+                    d2 = ((sub[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
+                    codes[:, m] = d2.argmin(axis=1)
+                yield pd.DataFrame(
+                    {
+                        "vec_id": pdf["vec_id"],
+                        "label": pdf["label"],
+                        "codes": list(codes.tolist()),
+                    }
+                )
 
-    tag = _sf_tag(sf_dir)
-    wh = _warehouse_path(spark)
-    bloc = os.path.join(wh, f"pq_books_{tag}.json") if wh else None
-    cloc = os.path.join(wh, f"pq_codes_{tag}") if wh else None
-    # books and codes share the codes dir's source stamp: a corpus
-    # rewritten in place retrains BOTH (stale codebooks would silently
-    # skew every ADC score)
-    stamp = _source_stamp(sf_dir, "embeddings")
-    fresh = _sidecar_fresh(cloc, stamp)
-    if bloc and os.path.exists(bloc) and fresh:
-        # codebooks persisted with the code table: a query session pays
-        # one small JSON read, never a retrain (the reference reads its
-        # index metadata the same way — built once at write time)
-        with open(bloc) as fh:
-            books = [np.array(b) for b in json.load(fh)]
-    else:
-        books = _pq_train(spark, sf_dir)
-        if bloc:
-            tmp = bloc + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump([b.tolist() for b in books], fh)
-            os.replace(tmp, bloc)
-
-    def encode(batches):
-        bs = [np.asarray(b) for b in books]
-        dsub = bs[0].shape[1]
-        for pdf in batches:
-            v = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            v /= np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
-            codes = np.empty((len(v), PQ_M), dtype=np.int32)
-            for m in range(PQ_M):
-                sub = v[:, m * dsub:(m + 1) * dsub]
-                d2 = ((sub[:, None, :] - bs[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "label": pdf["label"],
-                    "codes": list(codes.tolist()),
-                }
-            )
-
-    def build():
         e = load_table(spark, sf_dir, "embeddings")
         return e.mapInPandas(
             encode, schema="vec_id long, label int, codes array<int>"
         )
 
-    if wh:
-        if not os.path.isdir(cloc) or not fresh:
-            build().write.mode("overwrite").parquet(cloc)
-            _write_source_stamp(cloc, stamp)
-            spark.catalog.refreshByPath(cloc)
-        from tiflash_spark.catalog import read_parquet_memo
+    # the codebooks are written beside the code table and retrained with
+    # it, so a corpus rewritten in place never scores against stale books;
+    # a query session pays one small JSON read, never a retrain
+    bloc = os.path.join(warehouse_path(spark) or "", f"pq_books_{sf_tag(sf_dir)}.json")
 
-        return books, read_parquet_memo(spark, cloc)
-    return books, build()
+    def write(cloc: str) -> None:
+        books = _pq_train(spark, sf_dir)
+        build(books).write.mode("overwrite").parquet(cloc)
+        with open(bloc + ".tmp", "w") as fh:
+            json.dump([b.tolist() for b in books], fh)
+        os.replace(bloc + ".tmp", bloc)
+
+    got = sidecar(spark, sf_dir, "embeddings", write, f"pq_codes_{sf_tag(sf_dir)}")
+    if got is None:
+        books = _pq_train(spark, sf_dir)
+        return books, build(books)
+    with open(bloc) as fh:
+        return [np.array(b) for b in json.load(fh)], got[0]
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1476,24 +1398,19 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         for m in range(PQ_M)
     ]
-    # the LUT rides as ONE from_json('...') string literal, not a nested
-    # array(...) literal tree: parsing + analyzing 2048 Literal nodes cost
-    # ~0.4 s of DRIVER time per query build (measured: build 0.50-0.77 s →
-    # 0.35-0.43 s, collect total 0.70-1.11 s → 0.55-0.69 s, identical
-    # rows). from_json on a foldable input constant-folds to the same
-    # array value once at plan time, so the executor-side plan is
+    # the LUT rides as ONE from_json literal (_fold_json_literal), not a
+    # nested array(...) literal tree: parsing + analyzing 2048 Literal
+    # nodes cost ~0.4 s of DRIVER time per query build (measured: build
+    # 0.50-0.77 s → 0.35-0.43 s, identical rows). It constant-folds to the
+    # same array value once at plan time, so the executor-side plan is
     # unchanged. (A broadcast one-row LUT table was also measured and
     # loses: the BroadcastNestedLoopJoin costs more at exec than the
-    # literal saves at build — total 0.99-1.33 s.) json.dumps round-trips
-    # IEEE doubles exactly, so the folded values are bit-identical; the
-    # shared helper also rejects NaN/Inf and quote characters (numeric
-    # JSON has neither — a quote-doubling escape here would be mangled by
-    # Spark's lexer, which concatenates ''-adjacent strings).
-    lut_sql = _fold_json_sql(lut, "array<array<double>>")
-    adc = F.expr(
-        "aggregate(sequence(0, {M}), cast(0.0 as double),"
-        " (acc, m) -> acc + element_at(element_at({LUT}, m + 1),"
-        " codes[m] + 1))".format(M=PQ_M - 1, LUT=lut_sql)
+    # literal saves at build.)
+    lut_c = _fold_json_literal(lut, "array<array<double>>")
+    adc = F.aggregate(
+        F.sequence(F.lit(0), F.lit(PQ_M - 1)),
+        F.lit(0.0),
+        lambda acc, m: acc + F.element_at(F.element_at(lut_c, m + 1), F.col("codes")[m] + 1),
     )
     cands = (
         codes.filter(F.col("vec_id") != 0)

@@ -14,38 +14,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tiflash_spark.cache import bucketed, prepared, sf_tag, sidecar
 from tiflash_spark.catalog import load_table
 
 STOPWORDS = ("the", "a", "of", "and", "to")
-
-# --- prepared expressions -----------------------------------------------------
-# Deep higher-order-function trees (word_grams' zip_with chain,
-# top_word_frac's aggregate fold) cost hundreds of py4j round-trips to
-# CONSTRUCT — measured 0.3-0.4 s of pure driver time per query build for
-# the curation keep rule alone, the dominant term of the anti-scaling
-# (8c/32c < 1) query builds the r10 verdict called out. The trees are
-# CONSTANT per (helper, input column name, params): unresolved Catalyst
-# expressions are immutable, so one instance can appear in any number of
-# plans (Catalyst copies on transform). This memo holds expression
-# STRUCTURE only — never data, never results; it is the expression-side
-# analogue of catalog.read_parquet_memo. Keyed by the live py4j gateway
-# so a fresh JVM invalidates entries.
-
-_PREPARED: dict = {}
-
-
-def prepared(key: tuple, build):
-    """Memoized constant expression tree(s): ``build()`` may return one
-    Column or a tuple of Columns; whatever it returns is reused verbatim
-    on later builds in the same JVM."""
-    from pyspark import SparkContext
-
-    k = (id(SparkContext._gateway),) + key if SparkContext._gateway else key
-    c = _PREPARED.get(k)
-    if c is None:
-        c = _PREPARED[k] = build()
-    return c
-
 
 def scan_underparallelized(df, parallelism: int) -> bool:
     """True when a file-backed scan would yield fewer tasks than cores
@@ -218,11 +190,6 @@ def ws_token_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw explode is the dominant cost, and each query should pay the
     (pre-aggregated, ~10× smaller) doc-term table instead. tok-bucketing
     makes the vocabulary groupBy and any term join exchange-free."""
-    from tiflash_spark.pipeline.fulltext import (
-        _ensure_bucketed,
-        _sf_tag,
-        _source_stamp,
-    )
 
     def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
@@ -232,9 +199,8 @@ def ws_token_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("long").alias("tf"))
         )
 
-    return _ensure_bucketed(
-        spark, f"ws_tokens_{_sf_tag(sf_dir)}", build, "tok", 32,
-        source_stamp=_source_stamp(sf_dir, "documents"),
+    return bucketed(
+        spark, sf_dir, "documents", f"ws_tokens_{sf_tag(sf_dir)}", build, ("tok",), 32
     )
 
 
@@ -601,17 +567,7 @@ def _lm_vocab_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the inline form and round-tripped losslessly (parquet doubles) —
     bit-identical scores. Stamped to the source corpus like every
     sidecar; inline fallback when there is no local warehouse."""
-    import os
-
     from pyspark.sql import Window
-
-    from tiflash_spark.pipeline.fulltext import (
-        _sf_tag,
-        _sidecar_fresh,
-        _source_stamp,
-        _warehouse_path,
-        _write_source_stamp,
-    )
 
     t = ws_token_table(spark, sf_dir)
     vocab = (
@@ -631,18 +587,12 @@ def _lm_vocab_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bench delta was load noise, the window form stands.)
     total = F.sum("tf").over(Window.partitionBy())
     probs = vocab.select("tok", (F.col("tf") / total).alias("p"))
-    wh = _warehouse_path(spark)
-    if not wh:
-        return probs
-    loc = os.path.join(wh, f"lm_vocab_{_sf_tag(sf_dir)}")
-    stamp = _source_stamp(sf_dir, "documents")
-    if not os.path.isdir(loc) or not _sidecar_fresh(loc, stamp):
-        probs.coalesce(1).write.mode("overwrite").parquet(loc)
-        _write_source_stamp(loc, stamp)
-        spark.catalog.refreshByPath(loc)
-    from tiflash_spark.catalog import read_parquet_memo
-
-    return read_parquet_memo(spark, loc)
+    got = sidecar(
+        spark, sf_dir, "documents",
+        lambda loc: probs.coalesce(1).write.mode("overwrite").parquet(loc),
+        f"lm_vocab_{sf_tag(sf_dir)}",
+    )
+    return probs if got is None else got[0]
 
 
 def _unigram_doc_nll(spark: SparkSession, sf_dir: str) -> DataFrame:

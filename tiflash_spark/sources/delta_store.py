@@ -1001,6 +1001,8 @@ class DeltaStore:
                     f"batch columns {extra} not in schema v{self.schema_version()}"
                 )
             df = self._conform_user_write(df, fields)
+        elif delete:
+            df = self._with_null_payload(df)
         nn = self.current_not_null() if not delete else set()
         if nn:
             checks = [c for c in nn if c in df.columns]
@@ -1025,6 +1027,25 @@ class DeltaStore:
             DELMARK, F.lit(1 if delete else 0).cast("int")
         )
         out.write.mode("append").parquet(self.delta_path())
+
+    def _with_null_payload(self, df: DataFrame) -> DataFrame:
+        """A delete batch needs only its handles: give it the store's other
+        columns as typed NULLs, so every delta file carries the full
+        schema (a layer read without mergeSchema samples one footer, and
+        a handle-only footer hides the payload from the merge)."""
+        schema = self._stable_schema()
+        if schema is None:
+            layer = self._layer("stable")
+            layer = layer if layer is not None else self._layer("delta")
+            schema = layer.schema if layer is not None else None
+        if schema is None:
+            return df
+        missing = [
+            F.lit(None).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+            if f.name not in df.columns and f.name not in (VERSION, DELMARK, "_seg")
+        ]
+        return df.select("*", *missing) if missing else df
 
     def write_log_batch(self, df: DataFrame) -> None:
         """Append a batch that ALREADY carries per-row ``_INTERNAL_VERSION``
