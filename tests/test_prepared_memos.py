@@ -79,3 +79,23 @@ def test_memos_hold_no_dataframes():
 
     for _stamp, v in list(_MEMO.values()):
         assert not isinstance(v, DataFrame)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def test_prepared_trees_follow_their_module_constants(spark, monkeypatch):
+    """A constant baked into a prepared tree is part of its key: patching
+    it builds a new tree instead of reusing the one built before."""
+    from tests.conftest import SF_SMALL
+    from tiflash_spark.pipeline import text
+    from tiflash_spark.pipeline.curation import dataset_card
+
+    assert "zebra" not in _plan(text.quality_model_score(spark, SF_SMALL))
+    monkeypatch.setattr(text, "QUALITY_MODEL_WEIGHTS", [("zebra", 2.5)])
+    assert "zebra" in _plan(text.quality_model_score(spark, SF_SMALL))
+
+    assert "12345" not in _plan(dataset_card(spark, SF_SMALL))
+    monkeypatch.setitem(text.QUALITY_RULE, "max_tokens", 12345)
+    assert "12345" in _plan(dataset_card(spark, SF_SMALL))

@@ -27,10 +27,10 @@ def _write_docs(spark, sf_dir: str, texts: list[str]) -> None:
     spark.catalog.refreshByPath(p)
 
 
-def _write_embeddings(spark, sf_dir: str, scale: float) -> None:
+def _write_embeddings(spark, sf_dir: str, scale: float, n: int = 8) -> None:
     rows = [
         Row(vec_id=i, embedding=[float(i + d) * scale for d in range(64)], label=i % 2)
-        for i in range(8)
+        for i in range(n)
     ]
     spark.createDataFrame(rows).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(sf_dir, "embeddings.parquet")
@@ -102,3 +102,18 @@ def test_ivf_index_rebuilds_on_source_rewrite(spark, tmp_path):
     assert assigned1.count() == n0  # same corpus size ...
     first1 = cents1.orderBy("cid").first().cvec[0]
     assert first1 != first0 or first0 == 0.0  # ... but re-derived centroids
+
+
+def test_ivf_graph_rebuilds_on_source_rewrite(spark, tmp_path):
+    from tiflash_spark.pipeline.similarity import centroid_graph, vector_index
+
+    sf_dir = str(tmp_path / "sf_stale_graph")
+    os.makedirs(sf_dir)
+    _write_embeddings(spark, sf_dir, scale=1.0)
+    cents, _ = vector_index(spark, sf_dir)
+    assert set(centroid_graph(spark, sf_dir, cents)) == set(range(8))
+
+    time.sleep(0.01)
+    _write_embeddings(spark, sf_dir, scale=1.0, n=12)  # 12 centroids now
+    cents, _ = vector_index(spark, sf_dir)
+    assert set(centroid_graph(spark, sf_dir, cents)) == set(range(12))

@@ -7,7 +7,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_MEDIUM
+from tests.conftest import SF_MEDIUM, SF_SMALL
 from tiflash_spark.pipeline.similarity import (
     TOP_K,
     ann_cosine_topk,
@@ -312,6 +312,25 @@ def test_graph_probe_matches_exact_centroid_selection(spark):
     a = [(r.vec_id, r.cos_sim) for r in ann_ivf_graph_topk(spark, SF_MEDIUM).collect()]
     b = [(r.vec_id, r.cos_sim) for r in ann_ivf_topk(spark, SF_MEDIUM).collect()]
     assert a == b
+
+
+def test_warm_ivf_graph_build_runs_no_job(spark):
+    """With the IVF pair and the graph sidecar fresh, a repeated build
+    takes the graph, the centroid vectors and the probe literals from
+    memos stamped with the embeddings file: no Spark job."""
+    import uuid
+
+    from tiflash_spark.pipeline.similarity import ann_ivf_graph_topk
+
+    ann_ivf_graph_topk(spark, SF_SMALL)
+    sc = spark.sparkContext
+    group = f"ivf-graph-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "warm ann_ivf_graph_topk build")
+    try:
+        ann_ivf_graph_topk(spark, SF_SMALL)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_fold_json_literal_keys_with_quotes_and_backslashes(spark):

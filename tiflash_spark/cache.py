@@ -6,8 +6,11 @@ write or compaction time. The engine follows the same rule in one place:
 
 - A **stamp** names one version of a source: ``(abspath, st_mtime_ns,
   st_size)`` of a parquet file or directory (:func:`source_stamp`), the
-  stamps of every file a frame scans (:func:`frame_stamp`), or the JVM
-  epoch for values that live in the JVM (:func:`jvm_epoch`).
+  ``(relpath, mtime_ns, size)`` of every data file under a directory
+  (:func:`tree_stamp`, for partitioned layers whose own mtime does not
+  move when a partition dir gains a file), the stamps of every file a
+  frame scans (:func:`frame_stamp`), or the JVM epoch for values that
+  live in the JVM (:func:`jvm_epoch`).
 - The **memo** (:func:`memo`) holds one live value per key and rebuilds it
   when the key's stamp changes, which also drops the superseded value. A
   value whose stamp cannot be taken (missing or non-local source, no
@@ -20,12 +23,13 @@ write or compaction time. The engine follows the same rule in one place:
   builds inline.
 
 Why this is safe: every memoized value is derived metadata that plans are
-built from (physical schemas, plan literals, broadcast-sizing counts,
-band parameters, unresolved Column trees), never query rows, so a query
-still computes its result from its scans. Sidecars hold rows, but only
-rows rebuilt from the stamped source. JVM-bound values (Column trees)
-carry the JVM epoch, which moves whenever ``SparkContext._gateway`` is a
-different object, so a new gateway never sees a Column of an old JVM.
+built from (physical schemas of parquet files and of DeltaStore layers,
+plan literals, broadcast-sizing counts, band parameters, unresolved
+Column trees), never query rows, so a query still computes its result
+from its scans. Sidecars hold rows, but only rows rebuilt from the
+stamped source. JVM-bound values (Column trees) carry the JVM epoch,
+which moves whenever ``SparkContext._gateway`` is a different object, so
+a new gateway never sees a Column of an old JVM.
 """
 
 from __future__ import annotations
@@ -63,6 +67,33 @@ def source_stamp(path: str) -> tuple | None:
     except OSError:
         return None
     return (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+
+
+def _listed(name: str) -> bool:
+    # Spark's file-listing rule: "_" and "." names are metadata, except
+    # "_k=v" partition directories
+    return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
+
+
+def tree_stamp(root: str) -> tuple | None:
+    """Sorted ``(relpath, mtime_ns, size)`` of every data file Spark would
+    list under ``root`` (partition dirs included, metadata names skipped);
+    None when ``root`` is not a directory or changes under the walk."""
+    if not os.path.isdir(root):
+        return None
+    stamps = []
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if _listed(d)]
+        rel = os.path.relpath(dirpath, root)
+        for f in files:
+            if not _listed(f):
+                continue
+            try:
+                st = os.stat(os.path.join(dirpath, f))
+            except OSError:
+                return None
+            stamps.append((os.path.normpath(os.path.join(rel, f)), st.st_mtime_ns, st.st_size))
+    return tuple(sorted(stamps))
 
 
 def frame_stamp(df: DataFrame) -> tuple | None:

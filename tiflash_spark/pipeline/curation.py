@@ -939,8 +939,10 @@ def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle via Spark's distinct-aggregate expansion. No second corpus
     pass for any column."""
     from tiflash_spark.pipeline.text import (
+        QUALITY_RULE,
         dup_frac_of,
         mean_word_len,
+        quality_keep,
         tokens,
         top_word_frac,
         word_grams,
@@ -967,11 +969,8 @@ def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
             top_word_frac(w).alias("_twf"),
             word_grams(w, 3).alias("_g3"),
         )
-        keep = (
-            (F.col("_n") >= 10) & (F.col("_n") <= 100_000)
-            & (F.col("_mwl") >= 3) & (F.col("_mwl") <= 10)
-            & (F.col("_twf") <= 0.2)
-            & (dup_frac_of(F.col("_g3")) <= 0.2)
+        keep = quality_keep(
+            F.col("_n"), F.col("_mwl"), F.col("_twf"), dup_frac_of(F.col("_g3"))
         )
         return sig_cols + (
             F.col("_n").cast("long").alias("n_tok"),
@@ -979,7 +978,7 @@ def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     *sig_cols, n_tok_c, keep_c = prepared(
-        ("dataset_card", "sig_cols"), _build_sig_cols
+        ("dataset_card", "sig_cols", tuple(QUALITY_RULE.items())), _build_sig_cols
     )
     sig = d.select("source", "lang", *sig_cols)
     # the 5-column NARROW proxy (source, lang, fp, n_tok, keep) is
@@ -1081,8 +1080,10 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from tiflash_spark.pipeline.dedup import fingerprint
     from tiflash_spark.pipeline.text import (
+        QUALITY_RULE,
         dup_frac_of,
         mean_word_len,
+        quality_keep,
         scan_underparallelized,
         tokens,
         top_word_frac,
@@ -1124,11 +1125,8 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.col("w"))
         )
         mwl = mean_word_len(F.col("w"))
-        keep = (
-            (n >= 10) & (n <= 100_000)
-            & (mwl >= 3) & (mwl <= 10)
-            & (top_word_frac(F.col("w")) <= 0.2)
-            & (dup_frac_of(word_grams(F.col("w"), 3)) <= 0.2)
+        keep = quality_keep(
+            n, mwl, top_word_frac(F.col("w")), dup_frac_of(word_grams(F.col("w"), 3))
         )
         is_eval = F.col("doc_id") % 97 == 0
         return (
@@ -1138,7 +1136,8 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     n_tok_c, q_c, is_eval_c = prepared(
-        ("curation_pipeline", "staged_cols"), _build_staged_cols
+        ("curation_pipeline", "staged_cols", tuple(QUALITY_RULE.items())),
+        _build_staged_cols,
     )
     staged = base.select("doc_id", "source", "fp", "w", n_tok_c, q_c, is_eval_c)
     # min(when(q, doc_id)) ignores NULLs, so the keeper pick sees only
@@ -1197,7 +1196,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (chunk,) + aggs
 
     chunk_c, *agg_cs = prepared(
-        ("curation_pipeline", "report_cols"), _build_report_cols
+        ("curation_pipeline", "report_cols", PACK_CAPACITY), _build_report_cols
     )
     flagged = qf.join(
         F.broadcast(dirty.withColumn("_dirty", F.lit(1))), "doc_id", "left"

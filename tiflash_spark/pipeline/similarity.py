@@ -727,54 +727,29 @@ def graph_probe(graph: dict[int, list[int]],
     )[:n_probe]
 
 
-def _centroid_fingerprint(cents: DataFrame) -> str:
-    """Order-independent fingerprint of the centroid set (count + summed
-    per-row crc32 over cid:vec) — one small agg job on the centroid
-    table. Stamped into the graph sidecar so a rebuilt index (data or K
-    change) invalidates the persisted NSW graph instead of silently
-    degrading the walk."""
-    row = cents.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.crc32(F.concat_ws(
-                ":", F.col("cid").cast("string"),
-                F.col("cvec").cast("array<double>").cast("string"),
-            ).cast("binary"))
-        ).alias("h"),
-    ).collect()[0]
-    return f"{int(row.n)}-{int(row.h or 0)}"
-
-
 def centroid_graph(spark: SparkSession, sf_dir: str, cents: DataFrame) -> dict:
     """The persisted NSW graph sidecar (ivf_graph_{tag}) — built with the
     index by the DISTRIBUTED banded kNN join (build_centroid_graph_df),
-    read as (cid, neighbors) rows, broadcast-sized by design. The
-    sidecar carries a fingerprint of the centroid set (_FINGERPRINT,
-    Spark ignores underscore files) and rebuilds on mismatch."""
-    import os
+    read as (cid, neighbors) rows, broadcast-sized by design. Like the IVF
+    pair it derives from, it is a sidecar of ``embeddings``: an in-place
+    rewrite of the corpus rebuilds it, and its rows are held per version
+    of that source."""
 
-    wh = warehouse_path(spark)
-    if wh:
-        gloc = os.path.join(wh, f"ivf_graph_{sf_tag(sf_dir)}")
-        fp_path = os.path.join(gloc, "_FINGERPRINT")
-        fp = _centroid_fingerprint(cents)
-        stale = True
-        if os.path.isdir(gloc) and os.path.exists(fp_path):
-            with open(fp_path) as fh:
-                stale = fh.read().strip() != fp
-        if stale:
-            build_centroid_graph_df(spark, cents).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(gloc)
-            with open(fp_path, "w") as fh:
-                fh.write(fp)
-            spark.catalog.refreshByPath(gloc)
-        rows = spark.read.parquet(gloc).collect()
-        return {int(r.cid): [int(n) for n in r.neighbors] for r in rows}
-    return {
-        int(r.cid): [int(n) for n in r.neighbors]
-        for r in build_centroid_graph_df(spark, cents).collect()
-    }
+    def rows(df: DataFrame) -> dict:
+        return {int(r.cid): [int(n) for n in r.neighbors] for r in df.collect()}
+
+    def write(gloc: str) -> None:
+        build_centroid_graph_df(spark, cents).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(gloc)
+
+    got = sidecar(spark, sf_dir, "embeddings", write, f"ivf_graph_{sf_tag(sf_dir)}")
+    if got is None:
+        # no local warehouse: build inline
+        return rows(build_centroid_graph_df(spark, cents))
+    return literal_memo(
+        _os.path.join(sf_dir, "embeddings.parquet"), "ivf_graph", lambda: rows(got[0])
+    )
 
 
 def ann_ivf_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -785,7 +760,11 @@ def ann_ivf_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     that the walk recovers the exact probe set on this corpus."""
     cents, assigned = vector_index(spark, sf_dir)
     qv_list, qn = _query_literals(spark, sf_dir)
-    cent_vecs = {int(r.cid): list(r.cvec) for r in cents.collect()}
+    cent_vecs = literal_memo(
+        _os.path.join(sf_dir, "embeddings.parquet"),
+        "ivf_cent_vecs",
+        lambda: {int(r.cid): list(r.cvec) for r in cents.collect()},
+    )
     graph = centroid_graph(spark, sf_dir, cents)
     probe_ids = graph_probe(graph, cent_vecs, qv_list, N_PROBE)
     cands = assigned.where(

@@ -427,6 +427,28 @@ def mean_word_len(toks: Column) -> Column:
     ) / F.size(toks)
 
 
+# the heuristic quality rule's windows (Gopher-style): token count, mean
+# word length, top-word fraction and duplicate-trigram fraction
+QUALITY_RULE = {
+    "min_tokens": 10, "max_tokens": 100_000,
+    "min_word_len": 3, "max_word_len": 10,
+    "max_top_word_frac": 0.2, "max_dup_trigram_frac": 0.2,
+}
+
+
+def quality_keep(n: Column, mwl: Column, twf: Column, dup3: Column) -> Column:
+    """QUALITY_RULE over a document's token count, mean word length,
+    top-word fraction and duplicate-trigram fraction. Prepared trees that
+    embed it key on ``tuple(QUALITY_RULE.items())``."""
+    r = QUALITY_RULE
+    return (
+        (n >= r["min_tokens"]) & (n <= r["max_tokens"])
+        & (mwl >= r["min_word_len"]) & (mwl <= r["max_word_len"])
+        & (twf <= r["max_top_word_frac"])
+        & (dup3 <= r["max_dup_trigram_frac"])
+    )
+
+
 def quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document repetition/quality signals + the conjunctive keep rule
     (thresholds adapted to this corpus's length scale; the rule SHAPE is
@@ -474,12 +496,7 @@ def quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         dup_frac_of(F.col("_g3")).alias("_dup3"),
         "_mwl",
     )
-    keep = (
-        (F.col("_n") >= 10) & (F.col("_n") <= 100_000)
-        & (F.col("_mwl") >= 3) & (F.col("_mwl") <= 10)
-        & (F.col("_twf") <= 0.2)
-        & (F.col("_dup3") <= 0.2)
-    )
+    keep = quality_keep(F.col("_n"), F.col("_mwl"), F.col("_twf"), F.col("_dup3"))
     return sig.select(
         "doc_id",
         "source",
@@ -827,7 +844,8 @@ def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     dl_c, logit_c, score_c, keep_c = prepared(
-        ("quality_model_score", "model_cols"), _build_model_cols
+        ("quality_model_score", "model_cols", tuple(QUALITY_MODEL_WEIGHTS), QUALITY_MODEL_BIAS),
+        _build_model_cols,
     )
     return d.select("doc_id", "source", dl_c, logit_c, score_c, keep_c)
 

@@ -48,6 +48,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tiflash_spark import cache
 from tiflash_spark.operators.mvcc import DELMARK, HANDLE, VERSION, snapshot_read
 
 
@@ -55,6 +56,9 @@ _INTERNAL_COLS = (VERSION, DELMARK, "_seg")
 
 # sentinel for update_table_def key removal (pk=None is a real value)
 UNSET = object()
+
+# the footer entry in which Spark's parquet writer stores the Spark schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _render_dec65_cols(df: DataFrame, td: dict | None) -> DataFrame:
@@ -1229,32 +1233,76 @@ class DeltaStore:
                 return T.StructType.fromJson(__import__("json").load(fh))
         return None
 
+    def _footers(self, name: str, p: str, files: tuple) -> tuple[int, bytes | None]:
+        """(rows, written schema) of a layer's data files, read from their
+        parquet footers once per version of the files: the row count, and
+        the Spark schema JSON that Spark's writer stores in every footer
+        when all files carry the same one (else None)."""
+
+        def read():
+            import pyarrow.parquet as pq
+
+            rows, written = 0, set()
+            for rel, _mtime, _size in files:
+                md = pq.read_metadata(os.path.join(p, rel))
+                rows += md.num_rows
+                written.add((md.metadata or {}).get(_SPARK_SCHEMA_KEY))
+            return rows, (written.pop() if len(written) == 1 else None)
+
+        return cache.memo(
+            ("layer_footers", os.path.abspath(self.path), name),
+            (os.path.abspath(p), files),
+            read,
+        )
+
     def _layer(self, name: str) -> DataFrame | None:
+        """The live ``stable`` or ``delta`` layer as a DataFrame, None when
+        it holds no data file. The footer-inferred schema is memoized and
+        handed to the reader, so reading a warm layer runs no Spark job.
+        It is inferred again when the layer's files move
+        (``cache.tree_stamp``: a new batch, a rewritten segment, a new
+        version dir) unless every file carries the same written schema
+        and sits in the same partition dirs as when it was last inferred:
+        Spark infers a file's schema from that footer entry alone, so an
+        append or compaction in an unchanged schema needs no new job. One
+        memo entry per (store, layer): a retired version dir's schema is
+        replaced, not kept."""
         p = self.stable_path() if name == "stable" else self.delta_path()
-        try:
-            r = self.spark.read
-            if self._schema_versions():
-                # files span schema versions → merge footers so added
-                # columns are visible regardless of which file is sampled
-                r = r.option("mergeSchema", "true")
-            df = r.parquet(p)
-            return df if df.columns else None
-        except Exception as ex:
-            if "CANNOT_MERGE_SCHEMAS" in str(ex) and self._schema_versions():
-                # files span a MODIFY COLUMN widening (int-chain /
-                # float->double / decimal growth): footers conflict, but
-                # an explicit schema at the CURRENT (widest) types reads
-                # every file via the parquet type-widening path
-                widened = self._widened_layer(p)
-                if widened is not None:
-                    return widened
-            if name == "stable":
-                schema = self._stable_schema()
-                if schema is not None:
-                    # all rows GC'd at the last compaction: a valid,
-                    # EMPTY table — not an error
-                    return self.spark.createDataFrame([], schema)
-            return None  # empty layer
+        # files span schema versions → merge footers so added columns are
+        # visible regardless of which file is sampled
+        merge = bool(self._schema_versions())
+        files = cache.tree_stamp(p)
+        if files:
+            def infer():
+                r = self.spark.read.option("mergeSchema", "true") if merge else self.spark.read
+                return r.parquet(p).schema
+
+            dirs = tuple(sorted({os.path.dirname(rel) for rel, _mtime, _size in files}))
+            try:
+                written = self._footers(name, p, files)[1]
+                schema = cache.memo(
+                    ("layer_schema", os.path.abspath(self.path), name, merge),
+                    (written, dirs) if written else (os.path.abspath(p), files),
+                    infer,
+                )
+                df = self.spark.read.schema(schema).parquet(p)
+                return df if df.columns else None
+            except Exception as ex:
+                if "CANNOT_MERGE_SCHEMAS" in str(ex) and merge:
+                    # files span a MODIFY COLUMN widening (int-chain /
+                    # float->double / decimal growth): footers conflict,
+                    # but an explicit schema at the CURRENT (widest) types
+                    # reads every file via the parquet type-widening path
+                    widened = self._widened_layer(p)
+                    if widened is not None:
+                        return widened
+        if name == "stable":
+            schema = self._stable_schema()
+            if schema is not None:
+                # all rows GC'd at the last compaction: a valid, EMPTY
+                # table — not an error
+                return self.spark.createDataFrame([], schema)
+        return None  # empty layer
 
     def _widened_layer(self, p: str) -> DataFrame | None:
         """Read a layer whose footers disagree only by lossless widening:
@@ -1682,6 +1730,29 @@ class DeltaStore:
         self._rebuild_ftsidx(prior_fts)
         return n
 
+    def _stable_segments(self, segs: list[int]) -> DataFrame:
+        """Stable rows of the range segments ``segs``, without ``_seg``. A
+        range layout always stages ``_STABLE_SCHEMA``, so the layer is
+        never None; without a ``_seg`` column it is the empty, fully
+        GC'd layer and is returned as is."""
+        stable = self._layer("stable")
+        if "_seg" not in stable.columns:
+            return stable
+        return stable.filter(F.col("_seg").isin(list(segs))).drop("_seg")
+
+    def _seg_counts(self) -> dict[int, int]:
+        """Stable row count per segment (one grouped count job); empty for
+        an empty stable layer."""
+        stable = self._layer("stable")
+        if stable is None or "_seg" not in stable.columns:
+            return {}
+        return {
+            r.s: r.n
+            for r in stable.groupBy(F.col("_seg").alias("s"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+
     def _manifest(self) -> dict | None:
         import json
 
@@ -1794,11 +1865,15 @@ class DeltaStore:
         # after split/merge reshapes the segment ranges
         seg_of = self._seg_assign_expr(man)
         dirty_set: set[int] = set()
+        # one pass over the delta: its dirty segments and its handle range
+        # (materialized NOW — the df is lazy and the backing files are
+        # deleted below)
+        dlo = dhi = None
         if delta is not None:
-            dirty_set |= {
-                int(r.s)
-                for r in delta.select(seg_of.alias("s")).distinct().collect()
-            }
+            segs, dlo, dhi = delta.agg(
+                F.collect_set(seg_of), F.min(HANDLE), F.max(HANDLE)
+            ).collect()[0]
+            dirty_set |= {int(s) for s in segs}
         # a range tombstone at/below the safe-point dirties every segment
         # its range overlaps — those partitions must be rewritten with
         # the tombstone applied so the entry can be GC'd afterwards
@@ -1813,20 +1888,9 @@ class DeltaStore:
             if rd_applied:
                 self._write_range_dels(rd_carry)
             return (0, n)
-        # materialize the delta handle range NOW — the df is lazy and the
-        # backing files are deleted below
-        dlo = dhi = None
-        if delta is not None:
-            dlo, dhi = delta.agg(F.min(HANDLE), F.max(HANDLE)).collect()[0]
-        stable_r = self.spark.read
-        if self._schema_versions():
-            # cold segments may predate a DDL — merge footers so the union
-            # below sees every column, then conform both sides
-            stable_r = stable_r.option("mergeSchema", "true")
-        stable = stable_r.parquet(self.stable_path())
-        part = self._conform(
-            stable.filter(F.col("_seg").isin(dirty)).drop("_seg"), internal=True
-        )
+        # cold segments may predate a DDL — the layer read merges footers
+        # so the union below sees every column, then both sides conform
+        part = self._conform(self._stable_segments(dirty), internal=True)
         if delta is not None:
             part = part.unionByName(
                 self._conform(
@@ -2057,14 +2121,8 @@ class DeltaStore:
         if not man:
             raise ValueError("segment split needs range segments "
                              "(run compact_range_segments first)")
-        stable = self.spark.read.parquet(self.stable_path())
         if seg_id is None:
-            counts = {
-                r.s: r.n
-                for r in stable.groupBy(F.col("_seg").alias("s"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+            counts = self._seg_counts()
             if not counts:
                 raise ValueError("empty stable layer — nothing to split")
             seg_id = max(counts, key=lambda s: (counts[s], -s))
@@ -2072,7 +2130,7 @@ class DeltaStore:
         if key not in man["bounds"]:
             raise ValueError(f"segment {seg_id} not in manifest")
         blo, bhi = man["bounds"][key]
-        rows = stable.filter(F.col("_seg") == seg_id).drop("_seg")
+        rows = self._stable_segments([seg_id])
         if isinstance(blo, str):
             # common-handle segment: median = smallest handle of the upper
             # half (an actual key, so strictly inside when splittable)
@@ -2168,8 +2226,7 @@ class DeltaStore:
             raise ValueError(
                 f"segments not range-adjacent: [{llo},{lhi}) vs [{rlo},{rhi})"
             )
-        stable = self.spark.read.parquet(self.stable_path())
-        rows = stable.filter(F.col("_seg").isin([left_id, right_id])).drop("_seg")
+        rows = self._stable_segments([left_id, right_id])
         tmp = self._stage_dir("mergedata")
         (
             rows.withColumn("_seg", F.lit(left_id))
@@ -2230,21 +2287,20 @@ class DeltaStore:
         return left_id
 
     def delta_rows(self) -> int:
-        """Size of the un-compacted delta tail (rows)."""
-        delta = self._layer("delta")
-        return delta.count() if delta is not None else 0
+        """Size of the un-compacted delta tail (rows), summed from the
+        parquet footers of the delta's data files — no Spark job, so a
+        below-threshold ``maintain()`` costs only file metadata."""
+        d = self.delta_path()
+        files = cache.tree_stamp(d)
+        return self._footers("delta", d, files)[0] if files else 0
 
     def _delta_has_files(self) -> bool:
         """Cheap driver-side emptiness probe: does the delta dir hold any
         data file? Listing beats a delta.count() Spark job when the only
         question is 'is there a tail at all' (read_where's rescue-join
-        decision). Conservative: any parquet file ⇒ True, even if every
-        row in it is a tombstone — a false True only adds a no-op join."""
-        droot = self.delta_path()
-        for dirpath, _dirnames, filenames in os.walk(droot):
-            if any(f.endswith(".parquet") for f in filenames):
-                return True
-        return False
+        decision). Conservative: any data file ⇒ True, even if every row
+        in it is a tombstone — a false True only adds a no-op join."""
+        return bool(cache.tree_stamp(self.delta_path()))
 
     # --- rough-set filter: per-segment zone map (min-max index) -------------
     #
@@ -2333,10 +2389,7 @@ class DeltaStore:
                 )
         zm = {"cols": {c: dtypes[c] for c in cols}, "segs": {}}
         self._write_zonemap(zm)
-        segs = [
-            int(r.s)
-            for r in stable.select(F.col("_seg").alias("s")).distinct().collect()
-        ]
+        segs = sorted(self._all_seg_ids())
         self._zonemap_refresh_segs(segs)
         return len(segs)
 
@@ -2555,10 +2608,13 @@ class DeltaStore:
 
     def _log_minus_segments(self, log: DataFrame, pruned: list[int]) -> DataFrame:
         """Drop the pruned segments from the log, rescuing any handle the
-        delta also touches (see read_where's MVCC-soundness note)."""
+        delta also touches (see read_where's MVCC-soundness note). The
+        delta's handles are the log's NULL-``_seg`` rows (delta files
+        carry no segment column), so the delta is not read a second time,
+        and a left semi join needs no distinct on its build side."""
         keep = log.filter(~F.col("_seg").isin(pruned) | F.col("_seg").isNull())
         if self._delta_has_files():
-            delta_handles = self._layer("delta").select(HANDLE).distinct()
+            delta_handles = log.filter(F.col("_seg").isNull()).select(HANDLE)
             rescue = log.filter(F.col("_seg").isin(pruned)).join(
                 F.broadcast(delta_handles), HANDLE, "left_semi"
             )
@@ -2720,10 +2776,7 @@ class DeltaStore:
         for c in cols:
             meta.setdefault(c, [])
         self._write_invidx_meta(meta)
-        segs = [
-            int(r.s)
-            for r in stable.select(F.col("_seg").alias("s")).distinct().collect()
-        ]
+        segs = sorted(self._all_seg_ids())
         self._invidx_refresh_segs(segs)
         return len(segs)
 
@@ -2747,10 +2800,7 @@ class DeltaStore:
             {c: sorted(set(v) - set(seg_ids)) for c, v in meta.items()}
         )
         present = stable.filter(F.col("_seg").isin(seg_ids))
-        have = {
-            int(r.s)
-            for r in present.select(F.col("_seg").alias("s")).distinct().collect()
-        }
+        have = set(seg_ids) & self._all_seg_ids()
         final = {}
         for c in list(meta):
             if c not in stable.columns:
@@ -3212,10 +3262,7 @@ class DeltaStore:
         meta = self._vecidx_meta()
         meta[col] = {"centroids": cents, "segs": []}
         self._write_vecidx_meta(meta)
-        segs = [
-            int(r.s)
-            for r in stable.select(F.col("_seg").alias("s")).distinct().collect()
-        ]
+        segs = sorted(self._all_seg_ids())
         self._vecidx_refresh_segs(segs)
         return len(segs)
 
@@ -3241,10 +3288,7 @@ class DeltaStore:
             }
         )
         present = stable.filter(F.col("_seg").isin(seg_ids))
-        have = {
-            int(r.s)
-            for r in present.select(F.col("_seg").alias("s")).distinct().collect()
-        }
+        have = set(seg_ids) & self._all_seg_ids()
         final = {}
         for c, m in list(meta.items()):
             if c not in stable.columns:
@@ -3416,13 +3460,17 @@ class DeltaStore:
         )
 
     def _all_seg_ids(self) -> set[int]:
-        stable = self._layer("stable")
-        if stable is None or "_seg" not in stable.columns:
-            return set()
-        return {
-            int(r.s)
-            for r in stable.select(F.col("_seg").alias("s")).distinct().collect()
-        }
+        """Ids of the stable segments that hold rows: the ``_seg=K``
+        partition dirs with a parquet file, read off the file listing
+        instead of a distinct-collect job. ``__HIVE_DEFAULT_PARTITION__``
+        (a NULL ``_seg``) names no segment and is left out."""
+        out = set()
+        for rel, _mtime, _size in cache.tree_stamp(self.stable_path()) or ():
+            top = rel.split(os.sep, 1)[0]
+            if (top.startswith("_seg=") and rel.endswith(".parquet")
+                    and top != "_seg=__HIVE_DEFAULT_PARTITION__"):
+                out.add(int(top[len("_seg="):]))
+        return out
 
     # --- full-text index ----------------------------------------------------
     #
@@ -3518,10 +3566,7 @@ class DeltaStore:
             }
         )
         present = stable.filter(F.col("_seg").isin(seg_ids))
-        have = {
-            int(r.s)
-            for r in present.select(F.col("_seg").alias("s")).distinct().collect()
-        }
+        have = set(seg_ids) & self._all_seg_ids()
         final = {}
         for c, m in list(meta.items()):
             if c not in stable.columns:
@@ -4259,18 +4304,8 @@ class DeltaStore:
         real deployment spreads this over background cycles). Returns
         (splits, merges)."""
         splits = merges = 0
-
-        def seg_counts() -> dict[int, int]:
-            stable = self.spark.read.parquet(self.stable_path())
-            return {
-                r.s: r.n
-                for r in stable.groupBy(F.col("_seg").alias("s"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-
         while splits + merges < max_ops:
-            counts = seg_counts()
+            counts = self._seg_counts()
             over = [s for s, n in counts.items() if n > max_rows]
             if not over:
                 break
@@ -4282,7 +4317,7 @@ class DeltaStore:
                 break  # unsplittable (single-handle segment) — stop
         if min_rows:
             while splits + merges < max_ops:
-                counts = seg_counts()
+                counts = self._seg_counts()
                 man = self._manifest()
                 ordered = sorted(
                     ((int(k), blo, bhi) for k, (blo, bhi) in man["bounds"].items()),
@@ -4322,8 +4357,7 @@ class DeltaStore:
             # DT_SEGMENTS still lists the one segment holding the delta
             # (system-table/read_system_table.test reads `rows` = 3
             # right after the inserts)
-            delta0 = self._layer("delta") if self._delta_has_files() else None
-            n0 = int(delta0.count()) if delta0 is not None else 0
+            n0 = self.delta_rows()
             return self.spark.createDataFrame(
                 [(None, None, None, 0, 0, n0, False, 0, 0, 0)] if n0 else [],
                 "seg int, range_lo string, range_hi string, stable_rows long,"
@@ -4416,7 +4450,6 @@ class DeltaStore:
         man = self._manifest()
         n_seg = self._num_segments()
         stable = self._layer("stable")
-        delta = self._layer("delta") if self._delta_has_files() else None
         kind = (
             man["kind"] if man else ("hash" if n_seg else
                                      ("flat" if stable is not None else "empty"))
@@ -4427,7 +4460,7 @@ class DeltaStore:
             kind,
             (man["n"] if man else (n_seg or (1 if stable is not None else 0))),
             int(stable.count()) if stable is not None else 0,
-            int(delta.count()) if delta is not None else 0,
+            self.delta_rows(),
             len(self._range_dels()),
             len(self._invidx_meta()),
             len(self._vecidx_meta() or {}),
