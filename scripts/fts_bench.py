@@ -58,7 +58,7 @@ def main() -> None:
     _, t_build = timed(lambda: store.build_fulltext_index("text"))
 
     # pick a mid-frequency term from the index itself
-    idx = spark.read.parquet(store._ftsidx_dir("text"))
+    idx = spark.read.parquet(store._index_dir("fulltext", "text"))
     term = (
         idx.groupBy("term")
         .count()

@@ -174,7 +174,7 @@ def test_truncate_table_statement(spark, tmp_path):
     assert r.op == "truncate"
     assert s.read().count() == 0
     assert s.read(ts=1).count() == 0  # history gone too (table recreated)
-    assert "v" not in s._ftsidx_meta()  # index died with the layer
+    assert "v" not in s._index_meta("fulltext")  # index died with the layer
     # schema intact: writes resume, default still materializes
     s.write_batch(
         spark.createDataFrame([(3, "c")], f"{HANDLE} long, v string"), version=2

@@ -154,7 +154,7 @@ def test_zonemap_never_stale_across_crash(spark, tmp_path):
     with pytest.raises(RuntimeError):
         store.compact_segments_incremental(ts=2)
     reopened = DeltaStore(spark, store.path)
-    zm = reopened._zonemap()
+    zm = reopened._index_meta("zonemap")
     assert "1" not in zm["segs"]  # touched entry dropped, not stale
     got = {r[HANDLE] for r in reopened.read_where("ts_col", 0, 90).collect()}
     assert 199 in got  # the moved row is found (segment 1 scanned)
@@ -203,3 +203,117 @@ def test_cold_segment_files_are_hardlinked_not_copied(spark, tmp_path):
     assert new_stable != old_stable
     for (s, f), ino in inodes_before.items():
         assert os.stat(os.path.join(new_stable, f"_seg={s}", f)).st_ino == ino
+
+
+IDX_SCHEMA = f"{HANDLE} long, v long, code string, body string, emb array<double>"
+
+
+def _idx_row(h, v=None, code=None, body=None, emb=None):
+    return (
+        h,
+        h * 10 if v is None else v,
+        f"c{h % 7}" if code is None else code,
+        f"w{h % 5} common" if body is None else body,
+        [1.0, float(h)] if emb is None else emb,
+    )
+
+
+# handle 5 (segment 0) moves to a new value band under every index
+_FRESH = _idx_row(5, v=9999, code="fresh", body="novel words", emb=[0.0, 0.0])
+
+
+def _incremental(spark, store):
+    store.write_batch(spark.createDataFrame([_FRESH], IDX_SCHEMA), version=2)
+    store.compact_segments_incremental(ts=2)
+
+
+def _ingest(spark, store):
+    store.ingest_snapshot(spark.createDataFrame([_FRESH], IDX_SCHEMA), version=2)
+
+
+def _split(spark, store):
+    store.split_segment(0)
+
+
+def _merge(spark, store):
+    store.merge_segments(0, 1)
+
+
+@pytest.mark.parametrize(
+    "op, touched, fresh",
+    [
+        (_incremental, {0}, True),
+        (_ingest, {0}, True),
+        (_split, {0, 4}, False),
+        (_merge, {0, 1}, False),
+    ],
+    ids=["incremental", "ingest", "split", "merge"],
+)
+def test_rewrite_crash_after_commit_uncovers_every_index(
+    spark, tmp_path, op, touched, fresh
+):
+    """Every segment rewrite commits its data and all four indexes in one
+    pointer swap: a crash right after it leaves the touched segments
+    uncovered by the zone map, inverted, full-text and vector indexes
+    alike (scan, never stale), every index-served read returns the
+    model's rows, and the next refresh re-registers them."""
+    from tiflash_spark.sources.delta_store import _INDEX_KINDS
+
+    store = DeltaStore(spark, str(tmp_path / "kinds"))
+    store.write_batch(
+        spark.createDataFrame([_idx_row(h) for h in range(100)], IDX_SCHEMA), version=1
+    )
+    store.compact_range_segments(ts=1, num_segments=4)
+    store.build_zonemap(["v"])
+    store.build_inverted_index(["code"])
+    store.build_fulltext_index("body")
+    store.build_vector_index("emb", n_centroids=2)
+    model = {r[0]: r for r in map(_idx_row, range(100))}
+    if fresh:
+        model[5] = _FRESH
+
+    store.failpoints = {"after_commit"}
+    with pytest.raises(RuntimeError, match="after_commit"):
+        op(spark, store)
+    reopened = DeltaStore(spark, store.path)
+
+    def covered(s):
+        return {
+            kind: any(s in segs for segs in spec.covers(reopened._index_meta(kind)).values())
+            for kind, spec in _INDEX_KINDS.items()
+        }
+
+    def check_reads():
+        def got(df):
+            return {r[HANDLE] for r in df.collect()}
+
+        assert got(reopened.read_where("v", 0, 100)) == {
+            h for h, r in model.items() if 0 <= r[1] <= 100
+        }
+        assert got(reopened.read_where("v", 9000, 10000)) == {
+            h for h, r in model.items() if 9000 <= r[1] <= 10000
+        }
+        assert got(reopened.read_where_in("code", ["fresh", "c3"])) == {
+            h for h, r in model.items() if r[2] in ("fresh", "c3")
+        }
+        for word in ("novel", "w2"):
+            assert got(reopened.fts_match_word("body", word)) == {
+                h for h, r in model.items() if word in r[3].split()
+            }
+        nearest = sorted(model, key=lambda h: (sum(x * x for x in model[h][4]), h))
+        assert [
+            r[HANDLE]
+            for r in reopened.ann_topk("emb", [0.0, 0.0], k=3, metric="l2").collect()
+        ] == nearest[:3]
+
+    for s in touched:
+        assert covered(s) == dict.fromkeys(_INDEX_KINDS, False)
+    assert all(covered(s) == dict.fromkeys(_INDEX_KINDS, True)
+               for s in reopened._all_seg_ids() - touched)
+    check_reads()
+    reopened._refresh_indexes(touched)
+    live = touched & reopened._all_seg_ids()
+    assert live
+    for s in live:
+        assert covered(s) == dict.fromkeys(_INDEX_KINDS, True)
+    check_reads()

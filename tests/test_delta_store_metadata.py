@@ -113,3 +113,23 @@ def test_layer_schema_memo_keeps_one_entry_per_layer(spark, tmp_path):
     assert sorted(k[2] for k in keys) == ["delta", "stable"]
     footers = [k for k in cache._MEMO if k[0] == "layer_footers" and k[1] == root]
     assert sorted(k[2] for k in footers) == ["delta", "stable"]
+
+
+def test_range_compaction_and_zonemap_job_counts(spark, tmp_path):
+    """The htap-shaped store's maintenance jobs, pinned: a range
+    compaction plus a two-column zone map, then one incremental compaction
+    of a delta that touches two segments. Index kinds the store does not
+    carry run no job. The counts were measured on the code before the
+    index lifecycle was shared by the four kinds, and held after."""
+    store = DeltaStore(spark, str(tmp_path / "jobs"))
+    store.write_batch(_batch(spark, range(1, 201), 1), version=1)
+
+    def build():
+        store.compact_range_segments(ts=1, num_segments=4)
+        store.build_zonemap(["v", "price"])
+
+    assert _jobs(spark, build) == 12
+    store.write_batch(_batch(spark, range(190, 211), 2), version=2)
+    store.write_batch(_batch(spark, [5, 6], 3), version=3, delete=True)
+    assert _jobs(spark, lambda: store.compact_segments_incremental(3)) == 7
+    assert sorted(store._index_meta("zonemap")["segs"]) == ["0", "1", "2", "3"]

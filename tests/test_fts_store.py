@@ -59,7 +59,7 @@ def test_match_prunes_termless_segments(spark, tmp_path):
     file-listing level — the proof the reference's index-read path gives."""
     s = _store(spark, tmp_path, DOCS)
     s.build_fulltext_index("body")
-    idx = spark.read.parquet(s._ftsidx_dir("body"))
+    idx = spark.read.parquet(s._index_dir("fulltext", "body"))
     seg_of = {
         r[HANDLE]: r._seg
         for r in spark.read.parquet(s.stable_path()).select(HANDLE, "_seg").collect()
@@ -72,7 +72,7 @@ def test_match_prunes_termless_segments(spark, tmp_path):
     confined = [t for t, ss in term_segs.items() if len(ss) == 1]
     assert confined, "need a single-segment term for the pin"
     t = confined[0]
-    covered = {int(x) for x in s._ftsidx_meta()["body"]["segs"]}
+    covered = {int(x) for x in s._index_meta("fulltext")["body"]["segs"]}
     hit = {int(x) for x in term_segs[t]}
     assert covered - hit, "expected at least one prunable segment"
     rows = s.fts_match_word("body", t).collect()
@@ -138,7 +138,7 @@ def test_refresh_on_compaction_and_ddl_invalidation(spark, tmp_path):
         version=2,
     )
     s.compact(ts=2, num_segments=2)  # full rewrite → index rebuilt
-    meta = s._ftsidx_meta()["body"]
+    meta = s._index_meta("fulltext")["body"]
     assert meta["segs"], "index must survive compaction via rebuild"
     got = sorted(r[HANDLE] for r in s.fts_match_word("body", "quick").collect())
     assert got == [1, 3, 6, 7]
@@ -148,7 +148,7 @@ def test_refresh_on_compaction_and_ddl_invalidation(spark, tmp_path):
     s.drop_column("body")
     s.write_batch(spark.createDataFrame([(8,)], f"{HANDLE} long"), version=3)
     s.compact(ts=3, num_segments=2)
-    assert "body" not in s._ftsidx_meta()
+    assert "body" not in s._index_meta("fulltext")
 
 
 def test_admin_sql_index_ddl(spark, tmp_path):
@@ -159,7 +159,7 @@ def test_admin_sql_index_ddl(spark, tmp_path):
         spark, "ALTER TABLE docs ADD FULLTEXT INDEX idx_b (body)", {"docs": s}
     ).collect()[0]
     assert (r.index_kind, r.column_name, r.segments_covered) == ("fulltext", "body", 2)
-    assert "body" in s._ftsidx_meta()
+    assert "body" in s._index_meta("fulltext")
 
     s2 = DeltaStore(spark, str(tmp_path / f"fts{next(_counter)}"))
     s2.write_batch(
@@ -173,13 +173,13 @@ def test_admin_sql_index_ddl(spark, tmp_path):
     r = run_sql(
         spark, "ALTER TABLE t ADD COLUMNAR INDEX idx_g (grp) USING INVERTED", {"t": s2}
     ).collect()[0]
-    assert r.index_kind == "inverted" and "grp" in s2._invidx_meta()
+    assert r.index_kind == "inverted" and "grp" in s2._index_meta("inverted")
     r = run_sql(
         spark,
         "ALTER TABLE t ADD VECTOR INDEX idx_v ((VEC_COSINE_DISTANCE(v))) USING HNSW",
         {"t": s2},
     ).collect()[0]
-    assert r.index_kind == "vector" and "v" in s2._vecidx_meta()
+    assert r.index_kind == "vector" and "v" in s2._index_meta("vector")
     with pytest.raises(ValueError, match="USING INVERTED"):
         run_sql(spark, "ALTER TABLE t ADD COLUMNAR INDEX i (grp) USING HNSW", {"t": s2})
 

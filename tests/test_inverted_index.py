@@ -122,19 +122,19 @@ def test_full_compact_rebuilds_index(spark, tmp_path):
         version=2,
     )
     store.compact(ts=2, num_segments=4)  # hash layout now
-    assert sorted(store._invidx_meta().get("code", [])) == [0, 1, 2, 3]
+    assert sorted(store._index_meta("inverted").get("code", [])) == [0, 1, 2, 3]
     got = {r[HANDLE] for r in store.read_where_in("code", ["late"]).collect()}
     assert got == {777}
     # un-segmented compact retires the index (no segment level to prune)
     store.compact(ts=2)
-    assert store._invidx_meta() == {}
+    assert store._index_meta("inverted") == {}
     assert store.read_where_in("code", ["late"]).count() == 1
 
 
 def test_split_and_ingest_keep_index_fresh(spark, tmp_path):
     store = _store(spark, tmp_path)
     old, new = store.split_segment(0)
-    covered = set(store._invidx_meta()["code"])
+    covered = set(store._index_meta("inverted")["code"])
     assert {old, new} <= covered and len(covered) == 5
     probe = _scrambled(10)  # lives in old segment 0's handle range
     got = {r[HANDLE] for r in store.read_where_in("code", [probe]).collect()}
@@ -165,14 +165,14 @@ def test_crash_leaves_unindexed_never_stale(spark, tmp_path):
     with pytest.raises(RuntimeError):
         store.compact_segments_incremental(ts=2)
     reopened = DeltaStore(spark, store.path)
-    covered = set(reopened._invidx_meta().get("code", []))
+    covered = set(reopened._index_meta("inverted").get("code", []))
     assert 0 not in covered  # dirty segment dropped from coverage
     # value written by the crashed compact is found (segment 0 scanned)
     got = {r[HANDLE]: r.v for r in reopened.read_where_in("code", ["fresh"]).collect()}
     assert got == {5: 555}
     # next refresh re-registers
-    reopened._invidx_refresh_segs([0])
-    assert 0 in set(reopened._invidx_meta()["code"])
+    reopened._refresh_indexes([0])
+    assert 0 in set(reopened._index_meta("inverted")["code"])
 
 
 def test_postings_live_inside_version_dir(spark, tmp_path):

@@ -92,9 +92,9 @@ def test_partition_dml_ddl_and_indexes_fan_out(spark, tmp_path):
         s.compact(ts=s.newest_version(), num_segments=1)
     run_sql(spark, "ALTER TABLE pt ADD COLUMNAR INDEX idx_v (v) USING INVERTED",
             stores)
-    assert all("v" in s._invidx_meta() for s in store.stores.values())
+    assert all("v" in s._index_meta("inverted") for s in store.stores.values())
     run_sql(spark, "ALTER TABLE pt DROP INDEX idx_v", stores)
-    assert all(s._invidx_meta() == {} for s in store.stores.values())
+    assert all(s._index_meta("inverted") == {} for s in store.stores.values())
     # information_schema exposes per-partition physical tables
     rows = run_sql(
         spark,

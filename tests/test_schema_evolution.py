@@ -256,10 +256,10 @@ def test_modify_column_invalidates_sidecar_indexes(spark, tmp_path):
     store.build_zonemap(["v", "s"])
     store.build_inverted_index(["v"])
     store.modify_column("v", "bigint")
-    zm = store._zonemap()
+    zm = store._index_meta("zonemap")
     assert "v" not in zm["cols"] and "s" in zm["cols"]
     assert all("v" not in ent for ent in zm["segs"].values())
-    assert "v" not in store._invidx_meta()
+    assert "v" not in store._index_meta("inverted")
     got = {r[HANDLE] for r in store.read_where("v", lo=5, hi=9).collect()}
     assert got == {5, 6, 7, 8, 9}
 
@@ -375,11 +375,11 @@ def test_rename_column_invalidates_indexes_and_sql_form(spark, tmp_path):
         spark, "ALTER TABLE t RENAME COLUMN g TO grp", {"t": s}
     ).collect()[0]
     assert (r.old_name, r.new_name) == ("g", "grp")
-    assert "g" not in s._invidx_meta() and "grp" not in s._invidx_meta()
+    assert "g" not in s._index_meta("inverted") and "grp" not in s._index_meta("inverted")
     # renamed column still reads and filters correctly without the index
     assert s.read_where_in("grp", [2]).count() == 4
     # fts index untouched by an unrelated rename
-    assert "body" in s._ftsidx_meta()
+    assert "body" in s._index_meta("fulltext")
     # generated-column reference blocks the rename
     s.add_generated_column("g2", "int", "grp * 2")
     import pytest as _pt

@@ -314,10 +314,10 @@ def test_drop_index_lifecycle(spark, tmp_path):
     r = run_sql(spark, "ALTER TABLE tidx DROP INDEX idx_i", stores).collect()[0]
     assert (r.index_kind, r.column_name) == ("inverted", "i")
     assert probe() == want  # exact fallback, same rows
-    assert store._invidx_meta() == {}
+    assert store._index_meta("inverted") == {}
     run_sql(spark, "ALTER TABLE tidx DROP INDEX idx_b", stores)
     assert probe() == want
-    assert store._ftsidx_meta() == {}
+    assert store._index_meta("fulltext") == {}
     with pytest.raises(ValueError, match="no index named"):
         run_sql(spark, "ALTER TABLE tidx DROP INDEX idx_i", stores)
     # re-create after drop (the reference test's final leg)

@@ -147,7 +147,7 @@ def test_compaction_refreshes_postings(spark, tmp_path):
     # after the fold the new row is IN the postings (no delta leg now)
     got = [r[HANDLE] for r in store.ann_topk("emb", query, k=10).collect()]
     assert 999 in got  # folded into postings, still in the tie group
-    meta = store._vecidx_meta()["emb"]
+    meta = store._index_meta("vector")["emb"]
     assert len(meta["segs"]) >= 4
     # full compact rebuilds quantizer + postings
     store.compact(ts=2, num_segments=4)
@@ -169,7 +169,7 @@ def test_uncovered_segment_searched_exactly(spark, tmp_path):
     with pytest.raises(RuntimeError):
         store.compact_segments_incremental(ts=2)
     reopened = DeltaStore(spark, store.path)
-    covered = set(reopened._vecidx_meta()["emb"]["segs"])
+    covered = set(reopened._index_meta("vector")["emb"]["segs"])
     assert len(covered) < len(reopened._all_seg_ids())
     got = [r[HANDLE] for r in reopened.ann_topk("emb", query, k=10).collect()]
     assert 999 in got  # found via the exact leg
@@ -179,7 +179,7 @@ def test_postings_partition_pruning(spark, tmp_path):
     """The probe reads only the probed clusters' posting dirs — pruning
     happens at the partition level of the sidecar."""
     store = _store(spark, str(tmp_path / "v7"))
-    idx_dir = store._vecidx_dir("emb")
+    idx_dir = store._index_dir("vector", "emb")
     seg_dirs = [d for d in os.listdir(idx_dir) if d.startswith("_seg=")]
     assert seg_dirs
     cl_dirs = {

@@ -125,7 +125,7 @@ def test_incremental_compaction_refreshes_dirty_entries(spark, tmp_path):
         version=2,
     )
     store.compact_segments_incremental(ts=2)
-    zm = store._zonemap()
+    zm = store._index_meta("zonemap")
     # segment 3's entry widened down to 50 — it can no longer be pruned
     assert zm["segs"]["3"]["ts_col"][0] == 50
     assert 3 not in store._zm_pruned_segs("ts_col", 0, 90)
@@ -136,14 +136,14 @@ def test_incremental_compaction_refreshes_dirty_entries(spark, tmp_path):
 def test_split_and_merge_keep_entries_fresh(spark, tmp_path):
     store = _store(spark, tmp_path)
     old, new = store.split_segment(0)
-    zm = store._zonemap()
+    zm = store._index_meta("zonemap")
     assert str(new) in zm["segs"] and str(old) in zm["segs"]
     lo_old, hi_old = zm["segs"][str(old)]["ts_col"][:2]
     lo_new, hi_new = zm["segs"][str(new)]["ts_col"][:2]
     assert lo_old == 0 and hi_new == 990 and hi_old < lo_new
     # merge back: pure-metadata union
     surv = store.merge_segments(old, new)
-    zm = store._zonemap()
+    zm = store._index_meta("zonemap")
     assert zm["segs"][str(surv)]["ts_col"] == [0, 990, 0]
     assert str(new) not in zm["segs"]
     assert store.read_where("ts_col", 0, 400).count() == 41
@@ -158,7 +158,7 @@ def test_full_compact_rebuilds_map(spark, tmp_path):
         version=2,
     )
     store.compact_range_segments(ts=2, num_segments=4)
-    zm = store._zonemap()
+    zm = store._index_meta("zonemap")
     assert set(zm["cols"]) == {"ts_col", "noise"}
     # the outlier handle makes one equal-width band empty: no dir → no
     # entry (missing always means scan, and there is nothing to scan)
@@ -166,7 +166,7 @@ def test_full_compact_rebuilds_map(spark, tmp_path):
     assert store.read_where("ts_col", 9_000, 11_000).count() == 1
     # un-segmented compact drops the map (no segment level to index)
     store.compact(ts=2)
-    assert store._zonemap() is None
+    assert store._index_meta("zonemap") is None
     # reads still work without it
     assert store.read_where("ts_col", 0, 90).count() == 10
 

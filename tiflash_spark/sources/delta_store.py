@@ -42,8 +42,11 @@ lexicographic.
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import time
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +62,121 @@ UNSET = object()
 
 # the footer entry in which Spark's parquet writer stores the Spark schema
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _read_json(path: str, default=None):
+    """A JSON sidecar's content, ``default`` when the file is absent."""
+    if not os.path.exists(path):
+        return default
+    with open(path) as fh:
+        return json.load(fh)
+
+
+def _write_json(path: str, obj) -> None:
+    """Replace a JSON sidecar atomically (tmp + os.replace): a crash
+    mid-write leaves the old complete file, never a torn one — every
+    read path parses these files."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
+
+
+# --- segment indexes: one lifecycle for every kind ---------------------------
+#
+# Reference: TiFlash writes a segment's min-max, inverted, vector and
+# full-text indexes into the DMFile they index, so one write commits a
+# segment's data and all its indexes together. Spark-first: each kind
+# keeps a meta file inside the stable version dir that says which
+# segments it covers, plus (all but the zone map, whose min/max entries
+# live in the meta itself) a posting dir per indexed column,
+# ``<prefix><col>/_seg=K/``. Presence semantics for every kind: only a
+# COVERED segment may be pruned; an absent entry means scan.
+#
+# The lifecycle is written once, over this table:
+# - a segment rewrite stages every meta WITHOUT the touched segments into
+#   the next version dir and leaves their posting partitions out of the
+#   hardlink pass (``_stage_indexes``), so a crash after the pointer swap
+#   leaves them uncovered, never stale;
+# - after the swap, ``_refresh_indexes`` unregisters the touched segments
+#   in the live meta, rewrites their rows, then re-registers them — a
+#   crash anywhere leaves them merely unindexed, never stale-indexed
+#   (which could wrongly prune);
+# - a whole-stable rewrite rebuilds every index it carried
+#   (``_rebuild_indexes``) from metas captured before the swap, since the
+#   old version dir they lived in is retired.
+# A kind with an empty meta is skipped before anything touches Spark.
+
+
+def _segs_without(covered, segs: set[int]) -> list[int]:
+    return sorted(set(covered) - segs)
+
+
+def _forget_entry(meta: dict, col: str) -> dict:
+    return {c: e for c, e in meta.items() if c != col}
+
+
+class _IndexKind(NamedTuple):
+    meta: str  # meta file inside the stable version dir
+    prefix: str | None  # per-column posting dir; None: entries in the meta
+    empty: Callable[[], dict | None]  # what an absent meta reads as
+    covers: Callable  # meta -> {indexed column: covered segment ids}
+    drop: Callable  # (meta, segment ids) -> meta without those segments
+    forget: Callable  # (meta, column) -> meta without that column
+    build: str  # method (meta, stable rows, segs, segs with rows) -> meta
+    retrain: str | None = None  # method (meta, stable) -> meta, on rebuild
+
+
+_INDEX_KINDS = {
+    "zonemap": _IndexKind(
+        "_ZONEMAP", None, lambda: None,
+        covers=lambda zm: {
+            c: {int(k) for k, e in zm["segs"].items() if c in e}
+            for c in zm["cols"]
+        },
+        drop=lambda zm, segs: dict(zm, segs={
+            k: e for k, e in zm["segs"].items() if int(k) not in segs
+        }),
+        forget=lambda zm, col: dict(
+            zm,
+            cols=_forget_entry(zm["cols"], col),
+            segs={k: _forget_entry(e, col) for k, e in zm["segs"].items()},
+        ),
+        build="_zonemap_build",
+    ),
+    "inverted": _IndexKind(
+        "_INVIDX", "_INVIDX_", dict,
+        covers=lambda m: {c: set(v) for c, v in m.items()},
+        drop=lambda m, segs: {c: _segs_without(v, segs) for c, v in m.items()},
+        forget=_forget_entry,
+        build="_inverted_build",
+    ),
+    "vector": _IndexKind(
+        "_VECIDX", "_VECIDX_", dict,
+        covers=lambda m: {c: set(e["segs"]) for c, e in m.items()},
+        drop=lambda m, segs: {
+            c: {**e, "segs": _segs_without(e["segs"], segs)} for c, e in m.items()
+        },
+        forget=_forget_entry,
+        build="_vector_build",
+        retrain="_vector_retrain",
+    ),
+    "fulltext": _IndexKind(
+        "_FTSIDX", "_FTSIDX_", dict,
+        covers=lambda m: {c: set(e["segs"]) for c, e in m.items()},
+        drop=lambda m, segs: {
+            c: {
+                **e,
+                "segs": _segs_without(e["segs"], segs),
+                "stats": {k: v for k, v in e["stats"].items() if int(k) not in segs},
+            }
+            for c, e in m.items()
+        },
+        forget=_forget_entry,
+        build="_fulltext_build",
+    ),
+}
 
 
 def _render_dec65_cols(df: DataFrame, td: dict | None) -> DataFrame:
@@ -185,17 +303,9 @@ class DeltaStore:
     # orphan dirs the next mutation sweeps.
 
     def _superblock(self) -> dict | None:
-        import json
-
-        p = os.path.join(self.path, "_CURRENT")
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return json.load(fh)
+        return _read_json(os.path.join(self.path, "_CURRENT"))
 
     def _commit_superblock(self, sb: dict) -> None:
-        import json
-
         p = os.path.join(self.path, "_CURRENT")
         tmp = p + ".tmp"
         with open(tmp, "w") as fh:
@@ -256,8 +366,6 @@ class DeltaStore:
         resurrect deleted rows. ``staged_delta``: a pre-built replacement
         delta dir (remote-compaction adoption carries the post-watermark
         tail this way) — mutually exclusive with carry_range_dels."""
-        import shutil
-
         sb = self._superblock()
         epoch = sb["epoch"] + 1
         new_stable = f"stable_v{epoch}"
@@ -289,8 +397,6 @@ class DeltaStore:
         """Delete version/staging dirs the superblock no longer
         references. Only our own naming patterns are touched. Best-effort:
         a crash mid-GC just leaves orphans for the next sweep."""
-        import shutil
-
         sb = self._superblock()
         keep = {sb["stable"], sb["delta"]}
         for name in os.listdir(self.path):
@@ -317,25 +423,10 @@ class DeltaStore:
     # handle column is implicit and immutable.
 
     def _schema_versions(self) -> list[dict]:
-        import json
-
-        p = os.path.join(self.path, "_SCHEMA")
-        if os.path.exists(p):
-            with open(p) as fh:
-                return json.load(fh)["versions"]
-        return []
+        return _read_json(os.path.join(self.path, "_SCHEMA"), {"versions": []})["versions"]
 
     def _write_schema_versions(self, versions: list[dict]) -> None:
-        """tmp + os.replace, same as the _CURRENT superblock — a crash
-        mid-write must leave the old complete manifest, never a torn one
-        (every read path parses this file)."""
-        import json
-
-        p = os.path.join(self.path, "_SCHEMA")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"versions": versions}, fh)
-        os.replace(tmp, p)
+        _write_json(os.path.join(self.path, "_SCHEMA"), {"versions": versions})
 
     def schema_version(self) -> int | None:
         vs = self._schema_versions()
@@ -367,10 +458,6 @@ class DeltaStore:
         INSERT lists; ``pk`` is the user-facing handle name (None = auto
         hidden rowid); ``dt_prec`` records DATETIME(p)/TIMESTAMP(p)
         fractional precision (MySQL default 0 — writes round to it)."""
-        import json
-
-        p = os.path.join(self.path, "_TABLEDEF")
-        tmp = p + ".tmp"
         doc = {"order": order, "pk": pk, "pk_type": pk_type}
         if dt_prec:
             doc["dt_prec"] = dt_prec
@@ -385,9 +472,7 @@ class DeltaStore:
             # BIT(n): stored as ints, declared width drives the
             # binary-as-hex rendering (0x0707 for bit(12))
             doc["bit_cols"] = bit_cols
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh)
-        os.replace(tmp, p)
+        _write_json(os.path.join(self.path, "_TABLEDEF"), doc)
 
     def update_table_def(self, **patch) -> None:
         """Merge-style table-def update: read the existing doc, overwrite
@@ -397,8 +482,6 @@ class DeltaStore:
         a metadata key pass ``delta_store.UNSET``. Use this at ALTER call
         sites instead of re-passing every positional field through
         write_table_def."""
-        import json
-
         doc = self.table_def() or {}
         for k, v in patch.items():
             if v is UNSET:
@@ -408,20 +491,10 @@ class DeltaStore:
         doc.setdefault("order", [])
         doc.setdefault("pk", None)
         doc.setdefault("pk_type", "bigint")
-        p = os.path.join(self.path, "_TABLEDEF")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh)
-        os.replace(tmp, p)
+        _write_json(os.path.join(self.path, "_TABLEDEF"), doc)
 
     def table_def(self) -> dict | None:
-        import json
-
-        p = os.path.join(self.path, "_TABLEDEF")
-        if os.path.exists(p):
-            with open(p) as fh:
-                return json.load(fh)
-        return None
+        return _read_json(os.path.join(self.path, "_TABLEDEF"))
 
     def handle_alias(self) -> str | None:
         """User-facing name of the handle column (the declared PRIMARY
@@ -669,22 +742,7 @@ class DeltaStore:
              "not_null": list(vs[-1].get("not_null", []))}
         ]
         self._write_schema_versions(vs)
-        zm = self._zonemap()
-        if zm and name in zm.get("cols", {}):
-            zm = dict(zm, cols={c: t for c, t in zm["cols"].items() if c != name})
-            zm["segs"] = {
-                k: {c: v for c, v in ent.items() if c != name}
-                for k, ent in zm["segs"].items()
-            }
-            self._write_zonemap(zm)
-        inv = self._invidx_meta()
-        if name in inv:
-            inv.pop(name)
-            self._write_invidx_meta(inv)
-        fts = self._ftsidx_meta()
-        if name in fts:
-            fts.pop(name)
-            self._write_ftsidx_meta(fts)
+        self._forget_index_column(name)
         return vs[-1]["v"]
 
     def _reorg_column_type(self, name: str, new_type: str) -> None:
@@ -710,16 +768,9 @@ class DeltaStore:
         self._write_stable_schema(
             self.spark.read.parquet(stage).schema, layer_dir=stage
         )
-        rd_carry = list(self._range_dels())
-        prior_zm = self._zonemap()
-        prior_idx = list(self._invidx_meta())
-        prior_vec = self._vecidx_meta()
-        prior_fts = list(self._ftsidx_meta())
-        self._promote(stage, retire_delta=True, carry_range_dels=rd_carry)
-        self._rebuild_zonemap(prior_zm)
-        self._rebuild_invidx(prior_idx)
-        self._rebuild_vecidx(prior_vec)
-        self._rebuild_ftsidx(prior_fts)
+        prior = self._index_metas()
+        self._promote(stage, retire_delta=True, carry_range_dels=self._range_dels())
+        self._rebuild_indexes(prior)
 
     def drop_column(self, name: str) -> int:
         """ALTER TABLE DROP COLUMN: reads prune it everywhere immediately;
@@ -800,26 +851,7 @@ class DeltaStore:
              "not_null": not_null}
         ]
         self._write_schema_versions(vs)
-        zm = self._zonemap()
-        if zm and old in zm.get("cols", {}):
-            zm = dict(zm, cols={c: t for c, t in zm["cols"].items() if c != old})
-            zm["segs"] = {
-                k: {c: v for c, v in ent.items() if c != old}
-                for k, ent in zm["segs"].items()
-            }
-            self._write_zonemap(zm)
-        for meta_get, meta_put in (
-            (self._invidx_meta, self._write_invidx_meta),
-            (self._ftsidx_meta, self._write_ftsidx_meta),
-        ):
-            m = meta_get()
-            if old in m:
-                m.pop(old)
-                meta_put(m)
-        vm = self._vecidx_meta()
-        if old in vm:
-            vm.pop(old)
-            self._write_vecidx_meta(vm)
+        self._forget_index_column(old)
         return vs[-1]["v"]
 
     def add_generated_column(self, name: str, dtype: str, expr: str) -> int:
@@ -1161,24 +1193,10 @@ class DeltaStore:
         self._write_range_dels(dels)
 
     def _range_dels(self, delta_dir: str | None = None) -> list[dict]:
-        import json
-
-        p = os.path.join(delta_dir or self.delta_path(), "_RANGE_DELS")
-        if os.path.exists(p):
-            with open(p) as fh:
-                return json.load(fh)
-        return []
+        return _read_json(os.path.join(delta_dir or self.delta_path(), "_RANGE_DELS"), [])
 
     def _write_range_dels(self, dels: list[dict], delta_dir: str | None = None) -> None:
-        import json
-
-        d = delta_dir or self.delta_path()
-        os.makedirs(d, exist_ok=True)
-        p = os.path.join(d, "_RANGE_DELS")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(dels, fh)
-        os.replace(tmp, p)
+        _write_json(os.path.join(delta_dir or self.delta_path(), "_RANGE_DELS"), dels)
 
     def _range_del_filter(self, ts: int | None, dels: list[dict] | None = None):
         """One codegen predicate hiding rows covered by a visible range
@@ -1200,13 +1218,13 @@ class DeltaStore:
             cond = covered if cond is None else (cond | covered)
         return None if cond is None else ~cond
 
-    def _apply_range_dels(
-        self, df: DataFrame, ts: int | None, dels: list[dict] | None = None
-    ) -> DataFrame:
-        """Apply tombstones to a frame that still carries VERSION (call
-        after the MVCC winner pick, before dropping internals)."""
-        flt = self._range_del_filter(ts, dels)
-        return df if flt is None else df.filter(flt)
+    def _snapshot(self, log: DataFrame, ts: int | None) -> DataFrame:
+        """The MVCC read step: the newest visible version per handle at
+        ``ts`` (operators/mvcc.py), then the visible range tombstones.
+        The frame keeps its internals for the caller to project away."""
+        out = snapshot_read(log, read_ts=ts)
+        flt = self._range_del_filter(ts)
+        return out if flt is None else out.filter(flt)
 
     # --- read path ---------------------------------------------------------
 
@@ -1218,20 +1236,16 @@ class DeltaStore:
         the property-based op-sequence test. Lives inside the stable
         version dir (``layer_dir`` stages it into a not-yet-promoted
         dir)."""
-        p = os.path.join(layer_dir or self.stable_path(), "_STABLE_SCHEMA")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(schema.json())
-        os.replace(tmp, p)
+        _write_json(
+            os.path.join(layer_dir or self.stable_path(), "_STABLE_SCHEMA"),
+            schema.jsonValue(),
+        )
 
     def _stable_schema(self):
-        p = os.path.join(self.stable_path(), "_STABLE_SCHEMA")
-        if os.path.exists(p):
-            from pyspark.sql import types as T
+        from pyspark.sql import types as T
 
-            with open(p) as fh:
-                return T.StructType.fromJson(__import__("json").load(fh))
-        return None
+        doc = _read_json(os.path.join(self.stable_path(), "_STABLE_SCHEMA"))
+        return None if doc is None else T.StructType.fromJson(doc)
 
     def _footers(self, name: str, p: str, files: tuple) -> tuple[int, bytes | None]:
         """(rows, written schema) of a layer's data files, read from their
@@ -1403,7 +1417,7 @@ class DeltaStore:
             from tiflash_spark.operators.mvcc import fast_scan
 
             return self._conform_read(fast_scan(self.log()))
-        out = self._apply_range_dels(snapshot_read(self.log(), read_ts=ts), ts)
+        out = self._snapshot(self.log(), ts)
         return self._conform_read(out)
 
     def as_view(self, name: str, ts: int | None = None,
@@ -1508,13 +1522,11 @@ class DeltaStore:
         merged = self._conform(merged, internal=True)
         stage = self._stage_dir("compact")
         if num_segments:
-            (
-                merged.withColumn("_seg", F.pmod(F.xxhash64(F.col(HANDLE)), F.lit(num_segments)))
-                .repartition("_seg")
-                .sortWithinPartitions(HANDLE)
-                .write.partitionBy("_seg")
-                .mode("overwrite")
-                .parquet(stage)
+            self._write_segmented(
+                merged.withColumn(
+                    "_seg", F.pmod(F.xxhash64(F.col(HANDLE)), F.lit(num_segments))
+                ),
+                stage,
             )
         else:
             (
@@ -1531,22 +1543,11 @@ class DeltaStore:
         # could be observed early.
         self._write_stable_schema(merged.schema, layer_dir=stage)
         if num_segments:
-            with open(os.path.join(stage, "_SEGMENTS"), "w") as fh:
-                fh.write(str(num_segments))
-        prior_zm = self._zonemap()
-        prior_idx = list(self._invidx_meta())
-        prior_vec = self._vecidx_meta()
-        prior_fts = list(self._ftsidx_meta())
+            _write_json(os.path.join(stage, "_SEGMENTS"), num_segments)
+        prior = self._index_metas()
         self._fail("staged")
         self._promote(stage, retire_delta=True, carry_range_dels=rd_carry)
-        # full stable rewrite invalidates every zone-map / inverted-index
-        # entry; rebuild (the reference writes its indexes as part of each
-        # new DMFile). A crash before this leaves NO index in the new dir
-        # — scan, never a stale prune.
-        self._rebuild_zonemap(prior_zm)
-        self._rebuild_invidx(prior_idx)
-        self._rebuild_vecidx(prior_vec)
-        self._rebuild_ftsidx(prior_fts)
+        self._rebuild_indexes(prior)
         return n
 
     def _num_segments(self) -> int | None:
@@ -1554,11 +1555,7 @@ class DeltaStore:
         from observed _seg values (max+1) is wrong when the top segment
         happens to be empty — pruning would then use a different modulus
         than the writer and silently miss handles."""
-        seg_meta = os.path.join(self.stable_path(), "_SEGMENTS")
-        if os.path.exists(seg_meta):
-            with open(seg_meta) as fh:
-                return int(fh.read().strip())
-        return None
+        return _read_json(os.path.join(self.stable_path(), "_SEGMENTS"))
 
     def read_handles(self, handles: list[int], ts: int | None = None) -> DataFrame:
         """Point reads: snapshot-read only the given handles. With a
@@ -1582,9 +1579,7 @@ class DeltaStore:
                 .collect()
             }
             log = log.filter(F.col("_seg").isin(*wanted) | F.col("_seg").isNull())
-        out = self._apply_range_dels(
-            snapshot_read(log.filter(F.col(HANDLE).isin(*handles)), read_ts=ts), ts
-        )
+        out = self._snapshot(log.filter(F.col(HANDLE).isin(*handles)), ts)
         return self._conform_read(out)
 
     def read_handles_df(self, handles_df: DataFrame, ts: int | None = None) -> DataFrame:
@@ -1611,7 +1606,7 @@ class DeltaStore:
                     F.col("_seg").isin(*wanted) | F.col("_seg").isNull()
                 )
         log = log.join(F.broadcast(handles_df), on=HANDLE, how="leftsemi")
-        out = self._apply_range_dels(snapshot_read(log, read_ts=ts), ts)
+        out = self._snapshot(log, ts)
         return self._conform_read(out)
 
     # --- PK-range segments + incremental compaction -------------------------
@@ -1628,8 +1623,6 @@ class DeltaStore:
         keeps the derivation deterministic for tests while exercising the
         same pruning machinery.
         """
-        import json
-
         from pyspark.sql import functions as F
 
         from tiflash_spark.operators.mvcc import compact as mvcc_compact
@@ -1667,13 +1660,7 @@ class DeltaStore:
             )
             merged = merged.withColumn("_seg", seg)
         stage = self._stage_dir("range")
-        (
-            merged.repartition("_seg")
-            .sortWithinPartitions(HANDLE)
-            .write.partitionBy("_seg")
-            .mode("overwrite")
-            .parquet(stage)
-        )
+        self._write_segmented(merged, stage)
         n = self.spark.read.schema(merged.schema).parquet(stage).count()
         self._write_stable_schema(merged.drop("_seg").schema, layer_dir=stage)
         if string_handle:
@@ -1716,18 +1703,11 @@ class DeltaStore:
         # layout's bounds and its data commit in one pointer swap (no
         # hash _SEGMENTS is staged, so that metadata dies with the old
         # version dir)
-        with open(os.path.join(stage, "_MANIFEST"), "w") as fh:
-            json.dump(man, fh)
-        prior_zm = self._zonemap()
-        prior_idx = list(self._invidx_meta())
-        prior_vec = self._vecidx_meta()
-        prior_fts = list(self._ftsidx_meta())
+        _write_json(os.path.join(stage, "_MANIFEST"), man)
+        prior = self._index_metas()
         self._fail("staged")
         self._promote(stage, retire_delta=True, carry_range_dels=rd_carry)
-        self._rebuild_zonemap(prior_zm)
-        self._rebuild_invidx(prior_idx)
-        self._rebuild_vecidx(prior_vec)
-        self._rebuild_ftsidx(prior_fts)
+        self._rebuild_indexes(prior)
         return n
 
     def _stable_segments(self, segs: list[int]) -> DataFrame:
@@ -1754,13 +1734,7 @@ class DeltaStore:
         }
 
     def _manifest(self) -> dict | None:
-        import json
-
-        p = os.path.join(self.stable_path(), "_MANIFEST")
-        if os.path.exists(p):
-            with open(p) as fh:
-                return json.load(fh)
-        return None
+        return _read_json(os.path.join(self.stable_path(), "_MANIFEST"))
 
     def _seg_assign_expr(self, man: dict):
         """Handle → segment id from the manifest BOUNDS (not the original
@@ -1825,11 +1799,8 @@ class DeltaStore:
                 if blo < hi and bhi > lo  # overlap
             ]
             log = log.filter(F.col("_seg").isin(wanted) | F.col("_seg").isNull())
-        out = self._apply_range_dels(
-            snapshot_read(
-                log.filter((F.col(HANDLE) >= lo) & (F.col(HANDLE) < hi)), read_ts=ts
-            ),
-            ts,
+        out = self._snapshot(
+            log.filter((F.col(HANDLE) >= lo) & (F.col(HANDLE) < hi)), ts
         )
         return self._conform_read(out)
 
@@ -1904,36 +1875,8 @@ class DeltaStore:
         rd_flt = self._range_del_filter(ts)
         if rd_flt is not None:
             merged = merged.filter(rd_flt)
-        merged = merged.withColumn("_seg", seg_of)
-        import json
-        import shutil
-
         tmp = self._stage_dir("segdata")
-        (
-            merged.repartition("_seg")
-            .sortWithinPartitions(HANDLE)
-            .write.partitionBy("_seg")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        # build the next stable version: cold segments hardlinked, dirty
-        # segment dirs moved in from the Spark output (a segment that went
-        # all-tombstone simply has no dir in the new version)
-        stage = self._stage_dir("incr")
-        dirty_set = {f"_seg={s}" for s in dirty}
-        idx_skip = self._stage_invidx(stage, dirty)
-        idx_skip |= self._stage_vecidx(stage, dirty)
-        idx_skip |= self._stage_ftsidx(stage, dirty)
-        self._link_tree(
-            self.stable_path(),
-            stage,
-            skip=dirty_set | {"_ZONEMAP", "_MANIFEST"} | idx_skip,
-        )
-        for s in dirty:
-            src = os.path.join(tmp, f"_seg={s}")
-            if os.path.exists(src):
-                os.rename(src, os.path.join(stage, f"_seg={s}"))
-        shutil.rmtree(tmp, ignore_errors=True)
+        self._write_segmented(merged.withColumn("_seg", seg_of), tmp)
         # widen the outer manifest bounds to any new handle range the delta
         # introduced, so read_range pruning stays sound; staged into the
         # new version dir so bounds and data commit together
@@ -1942,24 +1885,11 @@ class DeltaStore:
             # the outermost bounds both fixes pruning AND routes future
             # out-of-range handles consistently
             self._widen_outer_bounds(man, dlo, dhi)
-        with open(os.path.join(stage, "_MANIFEST"), "w") as fh:
-            json.dump(man, fh)
-        # zone map: carry the cold segments' entries, DROP the dirty ones
-        # — a crash between promote and refresh leaves them absent, which
-        # means scan (safe), never a stale prune (row loss)
-        zm = self._zonemap()
-        if zm:
-            zm = dict(zm, segs={
-                k: v for k, v in zm["segs"].items() if int(k) not in set(dirty)
-            })
-            self._write_zonemap(zm, layer_dir=stage)
-        self._fail("staged")
-        self._promote(stage, retire_delta=True, carry_range_dels=rd_carry)
-        # only the rewritten segments' index entries can have changed
-        self._zonemap_refresh_segs(dirty)
-        self._invidx_refresh_segs(dirty)
-        self._vecidx_refresh_segs(dirty)
-        self._ftsidx_refresh_segs(dirty)
+        # a dirty segment that went all-tombstone has no dir in the new
+        # version; the swap retires the old stable + delta in one step
+        self._commit_segments(
+            tmp, dirty, man, retire_delta=True, carry_range_dels=rd_carry
+        )
         return (len(dirty), n)
 
     def ingest_snapshot(self, df: DataFrame, version: int) -> int:
@@ -1978,8 +1908,6 @@ class DeltaStore:
         via the ``_MANIFEST`` clamp — whose pruning bounds widen to cover
         the new handle span — or flat), so every pruning path stays
         sound. Returns rows ingested."""
-        import json
-
         from pyspark.sql import functions as F
 
         fields = self.current_fields()
@@ -1996,88 +1924,35 @@ class DeltaStore:
         )
         man = self._manifest()
         n_seg = self._num_segments()
-        # write the new files into a staging dir, then build the next
-        # stable version as hardlinks-of-current + the staged files, and
-        # commit with one pointer swap (the ingest either fully happened
-        # or didn't — the reference applies an SST ingest atomically per
-        # region too)
+        # write the new files into a staging dir, then commit them with
+        # the current version's files in one pointer swap (the ingest
+        # either fully happened or didn't — the reference applies an SST
+        # ingest atomically per region too)
         tmp = self._stage_dir("ingestdata")
-        dlo = dhi = None
+        seg_of = None
         if man:
             seg_of = self._seg_assign_expr(man)
             dlo, dhi = out.agg(F.min(HANDLE), F.max(HANDLE)).collect()[0]
-            (
-                out.withColumn("_seg", seg_of)
-                .repartition("_seg")
-                .sortWithinPartitions(HANDLE)
-                .write.partitionBy("_seg")
-                .mode("overwrite")
-                .parquet(tmp)
-            )
+            if dlo is not None:
+                self._widen_outer_bounds(man, dlo, dhi)
         elif n_seg:
-            (
-                out.withColumn(
-                    "_seg", F.pmod(F.xxhash64(F.col(HANDLE)), F.lit(n_seg))
-                )
-                .repartition("_seg")
-                .sortWithinPartitions(HANDLE)
-                .write.partitionBy("_seg")
-                .mode("overwrite")
-                .parquet(tmp)
-            )
-        else:
+            seg_of = F.pmod(F.xxhash64(F.col(HANDLE)), F.lit(n_seg))
+        if seg_of is None:
             (
                 out.repartition(HANDLE)
                 .sortWithinPartitions(HANDLE)
                 .write.mode("overwrite")
                 .parquet(tmp)
             )
+        else:
+            self._write_segmented(out.withColumn("_seg", seg_of), tmp)
         touched: list[int] = []
-        if (man or n_seg) and (
-            self._zonemap() is not None
-            or self._invidx_meta()
-            or self._vecidx_meta()
-            or self._ftsidx_meta()
-        ):
-            seg_of = (
-                self._seg_assign_expr(man)
-                if man
-                else F.pmod(F.xxhash64(F.col(HANDLE)), F.lit(n_seg))
-            )
+        if seg_of is not None and self._index_metas():
             touched = [
                 int(r.s)
                 for r in out.select(seg_of.alias("s")).distinct().collect()
             ]
-        stage = self._stage_dir("ingest")
-        skip = {"_MANIFEST"} if man else set()
-        zm = self._zonemap()
-        if zm and touched:
-            skip.add("_ZONEMAP")
-        if touched:
-            skip |= self._stage_invidx(stage, touched)
-            skip |= self._stage_vecidx(stage, touched)
-            skip |= self._stage_ftsidx(stage, touched)
-        self._link_tree(self.stable_path(), stage, skip=skip)
-        self._merge_staged_files(tmp, stage)
-        if man:
-            if dlo is not None:
-                self._widen_outer_bounds(man, dlo, dhi)
-            with open(os.path.join(stage, "_MANIFEST"), "w") as fh:
-                json.dump(man, fh)
-        if zm and touched:
-            # drop touched entries in the staged map: absent ⇒ scan until
-            # the post-promote refresh lands (safe either way)
-            zm = dict(zm, segs={
-                k: v for k, v in zm["segs"].items() if int(k) not in set(touched)
-            })
-            self._write_zonemap(zm, layer_dir=stage)
-        self._fail("staged")
-        self._promote(stage, retire_delta=False)
-        if touched:
-            self._zonemap_refresh_segs(touched)
-            self._invidx_refresh_segs(touched)
-            self._vecidx_refresh_segs(touched)
-            self._ftsidx_refresh_segs(touched)
+        self._commit_segments(tmp, touched, man, replace=False)
         return out.count()
 
     @staticmethod
@@ -2087,8 +1962,6 @@ class DeltaStore:
         dirs created as needed). Hidden files (_SUCCESS etc.) are
         skipped; Spark part-file names embed a job UUID so collisions
         with hardlinked existing files cannot happen."""
-        import shutil
-
         for root, _dirs, files in os.walk(src):
             rel = os.path.relpath(root, src)
             tdir = dst if rel == "." else os.path.join(dst, rel)
@@ -2098,6 +1971,58 @@ class DeltaStore:
                 os.makedirs(tdir, exist_ok=True)
                 os.rename(os.path.join(root, f), os.path.join(tdir, f))
         shutil.rmtree(src, ignore_errors=True)
+
+    @staticmethod
+    def _write_segmented(df: DataFrame, path: str) -> None:
+        """Write rows that carry ``_seg`` as one handle-sorted partition
+        dir per segment."""
+        (
+            df.repartition("_seg")
+            .sortWithinPartitions(HANDLE)
+            .write.partitionBy("_seg")
+            .mode("overwrite")
+            .parquet(path)
+        )
+
+    def _commit_segments(
+        self,
+        data: str,
+        segs,
+        man: dict | None,
+        replace: bool = True,
+        retire_delta: bool = False,
+        carry_range_dels: list[dict] | None = None,
+    ) -> None:
+        """Commit a rewrite of the stable segments ``segs`` whose new
+        ``_seg=K`` files Spark wrote to ``data``. The next stable version
+        is staged from hardlinks of the current one (its files are
+        immutable, so versions share them) with the touched segment dirs
+        replaced by ``data``'s (``replace=False`` adds ``data``'s files to
+        them instead: the bulk ingest) and ``man`` as its ``_MANIFEST``.
+        Every index is staged without ``segs``, the `_CURRENT` swap
+        commits data, manifest and indexes together, and the touched
+        segments' index entries are refreshed after it. ``retire_delta``
+        and ``carry_range_dels`` are handed to ``_promote``."""
+        segs = sorted({int(s) for s in segs})
+        stage = self._stage_dir("commit")
+        skip = self._stage_indexes(stage, segs)
+        if man is not None:
+            skip.add("_MANIFEST")
+        if replace:
+            skip |= {f"_seg={s}" for s in segs}
+        self._link_tree(self.stable_path(), stage, skip=skip)
+        if replace:
+            # whole dirs, so each part file keeps its checksum file
+            for s in segs:
+                src = os.path.join(data, f"_seg={s}")
+                if os.path.exists(src):
+                    os.rename(src, os.path.join(stage, f"_seg={s}"))
+        self._merge_staged_files(data, stage)
+        if man is not None:
+            _write_json(os.path.join(stage, "_MANIFEST"), man)
+        self._fail("staged")
+        self._promote(stage, retire_delta=retire_delta, carry_range_dels=carry_range_dels)
+        self._refresh_indexes(segs)
 
     # --- segment lifecycle: split / merge -----------------------------------
 
@@ -2114,9 +2039,6 @@ class DeltaStore:
         per-segment count aggregate). The split point is the exact median
         handle via a distributed percentile (never a driver-side sort).
         Returns (old_seg_id, new_seg_id)."""
-        import json
-        import shutil
-
         man = self._manifest()
         if not man:
             raise ValueError("segment split needs range segments "
@@ -2154,57 +2076,21 @@ class DeltaStore:
             )
         new_id = max(int(k) for k in man["bounds"]) + 1
         tmp = self._stage_dir("splitdata")
-        (
+        self._write_segmented(
             rows.withColumn(
                 "_seg",
                 F.when(F.col(HANDLE) < mid, F.lit(seg_id)).otherwise(F.lit(new_id)),
-            )
-            .repartition("_seg")
-            .sortWithinPartitions(HANDLE)
-            .write.partitionBy("_seg")
-            .mode("overwrite")
-            .parquet(tmp)
+            ),
+            tmp,
         )
-        # next stable version: every other segment hardlinked, the two
-        # halves moved in, updated manifest staged alongside — one
-        # pointer swap commits the split (reference Segment::split is a
-        # meta-atomic segment-tree update the same way)
-        stage = self._stage_dir("split")
-        idx_skip = self._stage_invidx(stage, [seg_id, new_id])
-        idx_skip |= self._stage_vecidx(stage, [seg_id, new_id])
-        idx_skip |= self._stage_ftsidx(stage, [seg_id, new_id])
-        self._link_tree(
-            self.stable_path(),
-            stage,
-            skip={f"_seg={seg_id}", f"_seg={new_id}", "_MANIFEST", "_ZONEMAP"}
-            | idx_skip,
-        )
-        for s in (seg_id, new_id):
-            src = os.path.join(tmp, f"_seg={s}")
-            if os.path.exists(src):
-                os.rename(src, os.path.join(stage, f"_seg={s}"))
-        shutil.rmtree(tmp, ignore_errors=True)
         mid = mid if isinstance(mid, str) else int(mid)
         man["bounds"][key] = [blo, mid]
         man["bounds"][str(new_id)] = [mid, bhi]
         man["n"] = len(man["bounds"])
-        with open(os.path.join(stage, "_MANIFEST"), "w") as fh:
-            json.dump(man, fh)
-        zm = self._zonemap()
-        if zm:
-            # both halves' entries recomputed post-promote; absent ⇒ scan
-            zm = dict(zm, segs={
-                k: v
-                for k, v in zm["segs"].items()
-                if int(k) not in (seg_id, new_id)
-            })
-            self._write_zonemap(zm, layer_dir=stage)
-        self._fail("staged")
-        self._promote(stage, retire_delta=False)
-        self._zonemap_refresh_segs([seg_id, new_id])
-        self._invidx_refresh_segs([seg_id, new_id])
-        self._vecidx_refresh_segs([seg_id, new_id])
-        self._ftsidx_refresh_segs([seg_id, new_id])
+        # one pointer swap commits both halves and the new bounds
+        # (reference Segment::split is a meta-atomic segment-tree update
+        # the same way)
+        self._commit_segments(tmp, [seg_id, new_id], man)
         return (seg_id, new_id)
 
     def merge_segments(self, left_id: int, right_id: int) -> int:
@@ -2212,9 +2098,6 @@ class DeltaStore:
         reference's Segment::merge (undersized neighbors fold together so
         the segment count tracks data size both ways). Rewrites only the
         two partition dirs into one; returns the surviving segment id."""
-        import json
-        import shutil
-
         man = self._manifest()
         if not man:
             raise ValueError("segment merge needs range segments")
@@ -2228,62 +2111,11 @@ class DeltaStore:
             )
         rows = self._stable_segments([left_id, right_id])
         tmp = self._stage_dir("mergedata")
-        (
-            rows.withColumn("_seg", F.lit(left_id))
-            .repartition("_seg")
-            .sortWithinPartitions(HANDLE)
-            .write.partitionBy("_seg")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        stage = self._stage_dir("merge")
-        idx_skip = self._stage_invidx(stage, [left_id, right_id])
-        idx_skip |= self._stage_vecidx(stage, [left_id, right_id])
-        idx_skip |= self._stage_ftsidx(stage, [left_id, right_id])
-        self._link_tree(
-            self.stable_path(),
-            stage,
-            skip={f"_seg={left_id}", f"_seg={right_id}", "_MANIFEST", "_ZONEMAP"}
-            | idx_skip,
-        )
-        src = os.path.join(tmp, f"_seg={left_id}")
-        if os.path.exists(src):
-            os.rename(src, os.path.join(stage, f"_seg={left_id}"))
-        shutil.rmtree(tmp, ignore_errors=True)
+        self._write_segmented(rows.withColumn("_seg", F.lit(left_id)), tmp)
         man["bounds"][lk] = [llo, rhi]
         del man["bounds"][rk]
         man["n"] = len(man["bounds"])
-        with open(os.path.join(stage, "_MANIFEST"), "w") as fh:
-            json.dump(man, fh)
-        zm = self._zonemap()
-        if zm:
-            # pure-metadata merge: union of the two entries, no file scan
-            # — exact for the merged rows, so it can be staged pre-swap
-            zm = dict(zm, segs=dict(zm["segs"]))
-            le, re_ = zm["segs"].get(lk), zm["segs"].get(rk)
-            if le is not None and re_ is not None:
-                merged_ent = {}
-                for c in set(le) & set(re_):
-                    mns = [v for v in (le[c][0], re_[c][0]) if v is not None]
-                    mxs = [v for v in (le[c][1], re_[c][1]) if v is not None]
-                    merged_ent[c] = [
-                        min(mns) if mns else None,
-                        max(mxs) if mxs else None,
-                    ]
-                    if len(le[c]) >= 3 and len(re_[c]) >= 3:
-                        # null counts union by sum; a legacy 2-element
-                        # side leaves the merged entry null-unknown
-                        merged_ent[c].append(le[c][2] + re_[c][2])
-                zm["segs"][lk] = merged_ent
-            else:
-                zm["segs"].pop(lk, None)
-            zm["segs"].pop(rk, None)
-            self._write_zonemap(zm, layer_dir=stage)
-        self._fail("staged")
-        self._promote(stage, retire_delta=False)
-        self._invidx_refresh_segs([left_id])
-        self._vecidx_refresh_segs([left_id])
-        self._ftsidx_refresh_segs([left_id])
+        self._commit_segments(tmp, [left_id, right_id], man)
         return left_id
 
     def delta_rows(self) -> int:
@@ -2301,6 +2133,150 @@ class DeltaStore:
         decision). Conservative: any data file ⇒ True, even if every row
         in it is a tombstone — a false True only adds a no-op join."""
         return bool(cache.tree_stamp(self.delta_path()))
+
+    # --- segment indexes: the lifecycle over _INDEX_KINDS -------------------
+
+    def _index_meta(self, kind: str, layer_dir: str | None = None):
+        spec = _INDEX_KINDS[kind]
+        return _read_json(
+            os.path.join(layer_dir or self.stable_path(), spec.meta), spec.empty()
+        )
+
+    def _write_index_meta(self, kind: str, meta, layer_dir: str | None = None) -> None:
+        _write_json(
+            os.path.join(layer_dir or self.stable_path(), _INDEX_KINDS[kind].meta), meta
+        )
+
+    def _index_dir(self, kind: str, col: str, layer_dir: str | None = None) -> str:
+        return os.path.join(
+            layer_dir or self.stable_path(), _INDEX_KINDS[kind].prefix + col
+        )
+
+    def _index_metas(self, kinds=_INDEX_KINDS) -> dict:
+        """The non-empty index metas of the live stable version, by kind."""
+        metas = {k: self._index_meta(k) for k in kinds}
+        return {k: m for k, m in metas.items() if m}
+
+    def _segmented_stable(self, what: str) -> DataFrame:
+        """The stable layer, which ``what`` (an index) needs segmented."""
+        stable = self._layer("stable")
+        if stable is None or "_seg" not in stable.columns:
+            raise ValueError(f"{what} needs a segmented stable layer "
+                             "(compact with num_segments / range segments)")
+        return stable
+
+    def _build_index(self, kind: str, meta: dict) -> int:
+        """Register ``meta`` and index every stable segment under it;
+        returns segments covered."""
+        self._write_index_meta(kind, meta)
+        segs = self._all_seg_ids()
+        self._refresh_indexes(segs, kinds=(kind,))
+        return len(segs)
+
+    def _stage_indexes(self, stage: str, segs) -> set[str]:
+        """Stage every index meta without ``segs`` into ``stage``, the
+        version dir that rewrites them, and return what its hardlink pass
+        must skip: those metas and the segments' posting partitions."""
+        segs = {int(s) for s in segs}
+        skip: set[str] = set()
+        for kind, meta in self._index_metas().items():
+            spec = _INDEX_KINDS[kind]
+            self._write_index_meta(kind, spec.drop(meta, segs), layer_dir=stage)
+            skip.add(spec.meta)
+            if spec.prefix:
+                skip |= {
+                    os.path.join(spec.prefix + c, f"_seg={s}") for c in meta for s in segs
+                }
+        return skip
+
+    def _refresh_indexes(self, segs, kinds=_INDEX_KINDS) -> None:
+        """Rebuild every index's entries for ``segs`` from the current
+        stable files: unregister, rewrite, re-register. Columns a DDL
+        dropped from stable lose their index; a segment with no stable
+        rows left stays uncovered."""
+        segs = {int(s) for s in segs}
+        metas = self._index_metas(kinds)
+        if not segs or not metas:
+            return
+        stable = self._layer("stable")
+        rows = None
+        if stable is not None and "_seg" in stable.columns:
+            rows = stable.filter(F.col("_seg").isin(sorted(segs)))
+        have = segs & self._all_seg_ids()
+        for kind, meta in metas.items():
+            spec = _INDEX_KINDS[kind]
+            meta = spec.drop(meta, segs)
+            self._write_index_meta(kind, meta)
+            if rows is not None:
+                meta = self._without_dropped_columns(kind, meta, rows.columns)
+                meta = getattr(self, spec.build)(meta, rows, segs, have)
+                self._write_index_meta(kind, meta)
+
+    def _rebuild_indexes(self, prior: dict) -> None:
+        """After a whole-stable rewrite, rebuild every index in ``prior``
+        (the metas captured before the swap: the version dir they lived
+        in is retired). Until this lands the new version has NO index —
+        scan, never a stale prune; an unsegmented layout keeps none (no
+        segment level to index)."""
+        if not prior:
+            return
+        stable = self._layer("stable")
+        if stable is None or "_seg" not in stable.columns:
+            return
+        for kind, meta in prior.items():
+            spec = _INDEX_KINDS[kind]
+            meta = spec.drop(meta, set().union(*spec.covers(meta).values()))
+            meta = self._without_dropped_columns(kind, meta, stable.columns)
+            if spec.retrain:
+                meta = getattr(self, spec.retrain)(meta, stable)
+            if spec.covers(meta):
+                self._write_index_meta(kind, meta)
+        self._refresh_indexes(self._all_seg_ids())
+
+    def _without_dropped_columns(self, kind: str, meta, columns) -> dict:
+        """``meta`` without the indexed columns missing from ``columns``
+        (a DDL dropped them), whose posting dirs are removed too."""
+        spec = _INDEX_KINDS[kind]
+        for c in set(spec.covers(meta)) - set(columns):
+            meta = spec.forget(meta, c)
+            if spec.prefix:
+                shutil.rmtree(self._index_dir(kind, c), ignore_errors=True)
+        return meta
+
+    def _forget_index_column(self, name: str) -> None:
+        """Drop every index on column ``name`` (MODIFY / RENAME: the index
+        reflects the stored bytes of the old type or name); absent
+        means scan, so reads stay correct."""
+        for kind in _INDEX_KINDS:
+            self.drop_index(kind, name)
+
+    def _write_postings(
+        self, kind: str, col: str, postings: DataFrame, segs,
+        sort: str | None = None, parts: tuple[str, ...] = ("_seg",),
+    ) -> None:
+        """Replace column ``col``'s posting partitions of ``segs`` with
+        ``postings``, written partitioned by ``parts``."""
+        idx_dir = self._index_dir(kind, col)
+        tmp = self._stage_dir(kind)
+        w = postings.repartition(*parts)
+        if sort:
+            w = w.sortWithinPartitions(sort)
+        w.write.partitionBy(*parts).mode("overwrite").parquet(tmp)
+        for s in segs:
+            dst = os.path.join(idx_dir, f"_seg={s}")
+            shutil.rmtree(dst, ignore_errors=True)
+            src = os.path.join(tmp, f"_seg={s}")
+            if os.path.exists(src):
+                os.makedirs(idx_dir, exist_ok=True)
+                os.rename(src, dst)
+        shutil.rmtree(tmp, ignore_errors=True)
+
+    def _index_covers(self) -> dict[str, dict[str, set[int]]]:
+        """Per index kind: each indexed column's covered segments."""
+        return {
+            k: spec.covers(m) if (m := self._index_meta(k)) else {}
+            for k, spec in _INDEX_KINDS.items()
+        }
 
     # --- rough-set filter: per-segment zone map (min-max index) -------------
     #
@@ -2321,32 +2297,6 @@ class DeltaStore:
         "tinyint", "smallint", "int", "bigint", "float", "double",
         "string", "date", "timestamp", "timestamp_ntz",
     }
-
-    def _zonemap_path(self, layer_dir: str | None = None) -> str:
-        return os.path.join(layer_dir or self.stable_path(), "_ZONEMAP")
-
-    def _zonemap(self) -> dict | None:
-        import json
-
-        p = self._zonemap_path()
-        if os.path.exists(p):
-            with open(p) as fh:
-                return json.load(fh)
-        return None
-
-    def _write_zonemap(self, zm: dict, layer_dir: str | None = None) -> None:
-        import json
-
-        p = self._zonemap_path(layer_dir)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(zm, fh)
-        os.replace(tmp, p)
-
-    def _remove_zonemap(self) -> None:
-        p = self._zonemap_path()
-        if os.path.exists(p):
-            os.remove(p)
 
     def _zm_agg_exprs(self, cols: dict[str, str]) -> list:
         exprs = []
@@ -2375,11 +2325,7 @@ class DeltaStore:
         (reference MinMaxIndex, written per DMFile at compaction time).
         Requires a segmented stable layer (hash or range). One map-side
         partial aggregation over stable; returns segments indexed."""
-        stable = self._layer("stable")
-        if stable is None or "_seg" not in stable.columns:
-            raise ValueError("zone map needs a segmented stable layer "
-                             "(compact with num_segments / range segments)")
-        dtypes = dict(stable.dtypes)
+        dtypes = dict(self._segmented_stable("zone map").dtypes)
         for c in cols:
             if c not in dtypes:
                 raise ValueError(f"column {c!r} not in stable layer")
@@ -2387,70 +2333,27 @@ class DeltaStore:
                 raise ValueError(
                     f"column {c!r} type {dtypes[c]} not zone-mappable"
                 )
-        zm = {"cols": {c: dtypes[c] for c in cols}, "segs": {}}
-        self._write_zonemap(zm)
-        segs = sorted(self._all_seg_ids())
-        self._zonemap_refresh_segs(segs)
-        return len(segs)
+        return self._build_index(
+            "zonemap", {"cols": {c: dtypes[c] for c in cols}, "segs": {}}
+        )
 
-    def _zonemap_refresh_segs(self, segs: list[int]) -> None:
-        """Recompute zone-map entries for the given segments from their
-        current stable files (the analogue of the reference rewriting a
-        DMFile's MinMaxIndex when the file is rewritten). Segments with no
-        stable rows left lose their entry; a missing entry always means
-        'must scan', so staleness can only cost performance, never rows."""
-        zm = self._zonemap()
-        if not zm or not segs:
-            return
-        stable = self._layer("stable")
-        entries: dict[str, dict] = {}
-        if stable is not None and "_seg" in stable.columns:
-            dtypes = dict(stable.dtypes)
-            present = {
-                c: zm["cols"][c] for c in zm["cols"] if c in dtypes
-            }
-            if present:
-                rows = (
-                    stable.filter(F.col("_seg").isin([int(s) for s in segs]))
-                    .groupBy(F.col("_seg").alias("s"))
-                    .agg(*self._zm_agg_exprs(present))
-                    .collect()
-                )
-                for r in rows:
-                    entries[str(int(r.s))] = {
-                        c: [r[f"__mn_{c}"], r[f"__mx_{c}"], int(r[f"__nn_{c}"])]
-                        for c in present
-                    }
-        for s in segs:
-            k = str(int(s))
-            if k in entries:
-                zm["segs"][k] = entries[k]
-            else:
-                zm["segs"].pop(k, None)
-        self._write_zonemap(zm)
-
-    def _rebuild_zonemap(self, prior: dict | None = None) -> None:
-        """Full rebuild after a whole-stable rewrite, keeping the indexed
-        column set (minus columns a DDL dropped). ``prior`` carries the
-        pre-swap map when the old version dir (where it lived) is already
-        retired. Removes the map when the layout is no longer segmented."""
-        zm = prior if prior is not None else self._zonemap()
-        if not zm:
-            return
-        stable = self._layer("stable")
-        if stable is None or "_seg" not in stable.columns:
-            self._remove_zonemap()
-            return
-        dtypes = dict(stable.dtypes)
-        cols = [
-            c
-            for c in zm["cols"]
-            if c in dtypes and dtypes[c].split("(")[0] in self._ZM_TYPES
-        ]
-        if not cols:
-            self._remove_zonemap()
-            return
-        self.build_zonemap(cols)
+    def _zonemap_build(self, zm: dict, rows: DataFrame, segs, have) -> dict:
+        """Entries for the segments in ``rows``: [min, max, null count] of
+        every mapped column still in stable, from one grouped aggregate
+        (the reference rewrites a DMFile's MinMaxIndex with the file)."""
+        dtypes = dict(rows.dtypes)
+        cols = {c: t for c, t in zm["cols"].items() if c in dtypes}
+        if cols:
+            for r in (
+                rows.groupBy(F.col("_seg").alias("s"))
+                .agg(*self._zm_agg_exprs(cols))
+                .collect()
+            ):
+                zm["segs"][str(int(r.s))] = {
+                    c: [r[f"__mn_{c}"], r[f"__mx_{c}"], int(r[f"__nn_{c}"])]
+                    for c in cols
+                }
+        return zm
 
     def _zm_render_bound(self, bound, col_type: str):
         """Render a query bound EXACTLY the way the stored temporal
@@ -2484,7 +2387,7 @@ class DeltaStore:
         compared with the stored min/max (wrong Python type, temporal
         rendering mismatch) also ⇒ scan: the absent verdict must mean
         scan, never a silent prune (reference RSResult semantics)."""
-        zm = self._zonemap()
+        zm = self._index_meta("zonemap")
         log_cols_ok = zm and col in zm.get("cols", {})
         if not log_cols_ok:
             return []
@@ -2530,7 +2433,7 @@ class DeltaStore:
         prunable for an IS NULL predicate. Entries written before the
         null count existed (2-element [min, max]) cannot prove anything
         and are never pruned (absent verdict ⇒ scan)."""
-        zm = self._zonemap()
+        zm = self._index_meta("zonemap")
         if not zm or col not in zm.get("cols", {}):
             return []
         return [
@@ -2552,7 +2455,7 @@ class DeltaStore:
         )
         if pruned:
             log = self._log_minus_segments(log, pruned)
-        out = self._apply_range_dels(snapshot_read(log, read_ts=ts), ts)
+        out = self._snapshot(log, ts)
         # conform BEFORE filtering: a RENAMEd column's data lives under
         # prior stored names, an ADD-DEFAULT column's pre-DDL rows are
         # visibly the default (not NULL), a generated column is never
@@ -2596,7 +2499,7 @@ class DeltaStore:
         self._record_scan_profile("read_where", pruned)
         if pruned:
             log = self._log_minus_segments(log, pruned)
-        out = self._apply_range_dels(snapshot_read(log, read_ts=ts), ts)
+        out = self._snapshot(log, ts)
         # conform BEFORE filtering so predicates bind to visible names
         # (a RENAMEd column's data may live under prior stored names)
         conf = self._conform_read(out)
@@ -2649,13 +2552,11 @@ class DeltaStore:
     # ``_INVIDX_<col>/_seg=K/`` inside the stable version dir holds the
     # DISTINCT (value, segment) pairs, sorted by value within files so a
     # point lookup prunes at parquet row-group level too. The `_INVIDX`
-    # meta file lists which segments each column's index covers —
-    # presence semantics: only a COVERED segment with no matching index
-    # row may be pruned; everything else scans (RSResult's absent ⇒
-    # scan, same as the zone map). MVCC-sound via the same delta-handle
-    # rescue. At 100 TB the index is itself just a parquet table at
-    # rest, maintained per-segment by the same incremental machinery as
-    # the data (only dirty segments' partitions are rebuilt).
+    # meta file lists which segments each column's index covers; only a
+    # COVERED segment with no matching index row may be pruned (RSResult's
+    # absent ⇒ scan). MVCC-sound via the same delta-handle rescue as the
+    # zone map. At 100 TB the index is itself just a parquet table at
+    # rest, kept per segment by the lifecycle at ``_INDEX_KINDS``.
 
     # --- index name registry + DROP INDEX ------------------------------------
     #
@@ -2668,93 +2569,39 @@ class DeltaStore:
     # files the next build sweeps).
 
     def named_indexes(self) -> dict:
-        import json
-
-        p = os.path.join(self.path, "_INDEXES")
-        if os.path.exists(p):
-            with open(p) as fh:
-                return json.load(fh)
-        return {}
+        return _read_json(os.path.join(self.path, "_INDEXES"), {})
 
     def register_index_name(self, name: str, kind: str, col: str) -> None:
-        import json
-
         idx = self.named_indexes()
         idx[name] = {"kind": kind, "col": col}
-        p = os.path.join(self.path, "_INDEXES")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(idx, fh)
-        os.replace(tmp, p)
+        _write_json(os.path.join(self.path, "_INDEXES"), idx)
 
     def drop_index(self, kind: str, col: str) -> None:
-        """Remove one sidecar index: meta entry first (readers revert to
-        exact scans immediately), then the posting files."""
-        import shutil
-
-        if kind == "inverted":
-            meta_get, meta_put, d = (
-                self._invidx_meta, self._write_invidx_meta, self._invidx_dir(col)
-            )
-        elif kind == "fulltext":
-            meta_get, meta_put, d = (
-                self._ftsidx_meta, self._write_ftsidx_meta, self._ftsidx_dir(col)
-            )
-        elif kind == "vector":
-            meta_get, meta_put, d = (
-                self._vecidx_meta, self._write_vecidx_meta, self._vecidx_dir(col)
-            )
-        elif kind == "secondary":
+        """Remove one column's index: meta entry first (readers revert to
+        exact scans immediately), then its posting files."""
+        if kind == "secondary":
             # TiKV-side secondary/expression indexes: accepted as DDL
             # (name-registered, SHOW CREATE renders them) but carry no
             # sidecar here — the columnar engine scans
             return
-        else:
+        if kind not in _INDEX_KINDS:
             raise ValueError(f"unknown index kind {kind!r}")
-        m = meta_get()
-        if col in m:
-            m.pop(col)
-            meta_put(m)
-        shutil.rmtree(d, ignore_errors=True)
+        spec = _INDEX_KINDS[kind]
+        meta = self._index_meta(kind)
+        if meta and col in spec.covers(meta):
+            self._write_index_meta(kind, spec.forget(meta, col))
+        if spec.prefix:
+            shutil.rmtree(self._index_dir(kind, col), ignore_errors=True)
 
     def drop_index_by_name(self, name: str) -> tuple[str, str]:
         """DROP INDEX by its DDL name; returns (kind, col)."""
-        import json
-
         idx = self.named_indexes()
         if name not in idx:
             raise ValueError(f"no index named {name!r} (have: {sorted(idx)})")
         ent = idx.pop(name)
         self.drop_index(ent["kind"], ent["col"])
-        p = os.path.join(self.path, "_INDEXES")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(idx, fh)
-        os.replace(tmp, p)
+        _write_json(os.path.join(self.path, "_INDEXES"), idx)
         return ent["kind"], ent["col"]
-
-    def _invidx_dir(self, col: str, layer_dir: str | None = None) -> str:
-        return os.path.join(layer_dir or self.stable_path(), f"_INVIDX_{col}")
-
-    def _invidx_meta(self, layer_dir: str | None = None) -> dict:
-        import json
-
-        p = os.path.join(layer_dir or self.stable_path(), "_INVIDX")
-        if os.path.exists(p):
-            with open(p) as fh:
-                return json.load(fh)
-        return {}
-
-    def _write_invidx_meta(self, meta: dict, layer_dir: str | None = None) -> None:
-        import json
-
-        d = layer_dir or self.stable_path()
-        os.makedirs(d, exist_ok=True)
-        p = os.path.join(d, "_INVIDX")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, p)
 
     def build_inverted_index(self, cols: list[str]) -> int:
         """Index the given non-key columns for equality/IN pruning.
@@ -2762,126 +2609,38 @@ class DeltaStore:
         column over stable (compaction-time cost, like the reference
         building the index when a DMFile is written). Returns segments
         covered."""
-        stable = self._layer("stable")
-        if stable is None or "_seg" not in stable.columns:
-            raise ValueError("inverted index needs a segmented stable layer "
-                             "(compact with num_segments / range segments)")
-        dtypes = dict(stable.dtypes)
+        dtypes = dict(self._segmented_stable("inverted index").dtypes)
         for c in cols:
             if c == HANDLE or c in _INTERNAL_COLS:
                 raise ValueError(f"column {c!r} is internal — index a user column")
             if c not in dtypes:
                 raise ValueError(f"column {c!r} not in stable layer")
-        meta = self._invidx_meta()
+        meta = self._index_meta("inverted")
         for c in cols:
             meta.setdefault(c, [])
-        self._write_invidx_meta(meta)
-        segs = sorted(self._all_seg_ids())
-        self._invidx_refresh_segs(segs)
-        return len(segs)
+        return self._build_index("inverted", meta)
 
-    def _invidx_refresh_segs(self, segs: list[int]) -> None:
-        """Rebuild the index partitions for the given segments from the
-        current stable files. Crash-safe ordering: segments are first
-        UNREGISTERED from the meta (absent ⇒ scan), partitions rewritten,
-        then re-registered — a crash anywhere leaves them merely
-        unindexed, never stale-indexed (which could wrongly prune)."""
-        import shutil
-
-        meta = self._invidx_meta()
-        if not meta or not segs:
-            return
-        stable = self._layer("stable")
-        if stable is None or "_seg" not in stable.columns:
-            self._drop_inverted_indexes()
-            return
-        seg_ids = [int(s) for s in segs]
-        self._write_invidx_meta(
-            {c: sorted(set(v) - set(seg_ids)) for c, v in meta.items()}
-        )
-        present = stable.filter(F.col("_seg").isin(seg_ids))
-        have = set(seg_ids) & self._all_seg_ids()
-        final = {}
-        for c in list(meta):
-            if c not in stable.columns:
-                # DDL dropped the column — retire its index
-                shutil.rmtree(self._invidx_dir(c), ignore_errors=True)
-                continue
-            idx_dir = self._invidx_dir(c)
-            tmp = self._stage_dir("invidx")
-            (
-                present.select(F.col(c).alias("v"), "_seg")
-                .distinct()
-                .repartition("_seg")
-                .sortWithinPartitions("v")
-                .write.partitionBy("_seg")
-                .mode("overwrite")
-                .parquet(tmp)
+    def _inverted_build(self, meta: dict, rows: DataFrame, segs, have) -> dict:
+        """Postings per column: the DISTINCT (value, segment) pairs of
+        ``rows``, sorted by value."""
+        for c in meta:
+            self._write_postings(
+                "inverted", c,
+                rows.select(F.col(c).alias("v"), "_seg").distinct(), segs, sort="v",
             )
-            for s in seg_ids:
-                dst = os.path.join(idx_dir, f"_seg={s}")
-                shutil.rmtree(dst, ignore_errors=True)
-                src = os.path.join(tmp, f"_seg={s}")
-                if os.path.exists(src):
-                    os.makedirs(idx_dir, exist_ok=True)
-                    os.rename(src, dst)
-            shutil.rmtree(tmp, ignore_errors=True)
-            final[c] = sorted((set(meta[c]) - set(seg_ids)) | have)
-        self._write_invidx_meta(final)
-
-    def _drop_inverted_indexes(self) -> None:
-        import shutil
-
-        for c in list(self._invidx_meta()):
-            shutil.rmtree(self._invidx_dir(c), ignore_errors=True)
-        p = os.path.join(self.stable_path(), "_INVIDX")
-        if os.path.exists(p):
-            os.remove(p)
-
-    def _rebuild_invidx(self, prior_cols: list[str]) -> None:
-        """Full rebuild after a whole-stable rewrite, keeping the
-        previously-indexed column set minus columns a DDL dropped.
-        No-op (index gone) when the new layout is not segmented."""
-        if not prior_cols:
-            return
-        stable = self._layer("stable")
-        if stable is None or "_seg" not in stable.columns:
-            return  # index died with the old version dir — nothing to do
-        cols = [c for c in prior_cols if c in stable.columns]
-        if cols:
-            self.build_inverted_index(cols)
-
-    def _stage_invidx(self, stage: str, dirty: list[int]) -> set[str]:
-        """Stage the inverted-index metadata for a mutation that rewrites
-        ``dirty`` segments: their partitions are excluded from the
-        hardlink pass and unregistered in the staged meta, so a crash
-        after the promote leaves them unindexed (scan), never stale.
-        Returns the extra `_link_tree` skip entries."""
-        meta = self._invidx_meta()
-        if not meta:
-            return set()
-        dirty_set = {int(s) for s in dirty}
-        skip = {"_INVIDX"}
-        staged = {}
-        for c, covered in meta.items():
-            skip |= {
-                os.path.join(f"_INVIDX_{c}", f"_seg={s}") for s in dirty_set
-            }
-            staged[c] = sorted(set(covered) - dirty_set)
-        os.makedirs(stage, exist_ok=True)
-        self._write_invidx_meta(staged, layer_dir=stage)
-        return skip
+            meta[c] = sorted(set(meta[c]) | have)
+        return meta
 
     def _invidx_pruned_segs(self, col: str, values: list) -> list[int]:
         """Segment ids the inverted index PROVES cannot contain any of
         ``values``: covered by the index and absent from its postings.
         Unknown/uncovered segments are never returned."""
-        meta = self._invidx_meta()
+        meta = self._index_meta("inverted")
         covered = {int(s) for s in meta.get(col, [])}
         if not covered:
             return []
         try:
-            idx = self.spark.read.parquet(self._invidx_dir(col))
+            idx = self.spark.read.parquet(self._index_dir("inverted", col))
             hit = {
                 int(r.s)
                 for r in idx.filter(F.col("v").isin(list(values)))
@@ -2913,7 +2672,7 @@ class DeltaStore:
         self._record_scan_profile("read_where_in", pruned)
         if pruned:
             log = self._log_minus_segments(log, pruned)
-        out = self._apply_range_dels(snapshot_read(log, read_ts=ts), ts)
+        out = self._snapshot(log, ts)
         return self._conform_read(out).filter(
             F.col(col).isin(values)
         )
@@ -3060,7 +2819,7 @@ class DeltaStore:
                     upper = F.col(c) <= F.lit(hi)
                     term = upper if term is None else (term & upper)
             pred = term if pred is None else (pred & term)
-        vis = self._apply_range_dels(snapshot_read(narrow, read_ts=ts), ts)
+        vis = self._snapshot(narrow, ts)
         if fields is not None:
             # VERSION stays in scope for the ADD-DEFAULT commit gate
             vis = vis.select(
@@ -3106,9 +2865,7 @@ class DeltaStore:
                     want, log.columns
                 )
                 wide = log.select(*dict.fromkeys(keep))
-                out = self._apply_range_dels(
-                    snapshot_read(wide, read_ts=ts), ts
-                )
+                out = self._snapshot(wide, ts)
                 out = out.select(
                     F.col(HANDLE), *self._visible_exprs(want, out.columns)
                 ).filter(pred)
@@ -3120,9 +2877,7 @@ class DeltaStore:
                 for c in filter_cols:
                     if c not in wide.columns:
                         wide = wide.withColumn(c, F.lit(None))
-                out = self._apply_range_dels(
-                    snapshot_read(wide, read_ts=ts), ts
-                ).filter(pred)
+                out = self._snapshot(wide, ts).filter(pred)
             return _project(out)
 
         # phase 2, many-survivor form: bounded payload scan + semi-join
@@ -3133,9 +2888,7 @@ class DeltaStore:
             keep = [HANDLE, VERSION, DELMARK] + self._stored_sources(
                 payload_cols, pl.columns
             )
-            rows = self._apply_range_dels(
-                snapshot_read(pl.select(*dict.fromkeys(keep)), read_ts=ts), ts
-            )
+            rows = self._snapshot(pl.select(*dict.fromkeys(keep)), ts)
             rows = rows.select(
                 F.col(HANDLE), *self._visible_exprs(payload_cols, rows.columns)
             )
@@ -3143,9 +2896,7 @@ class DeltaStore:
             keep = [HANDLE, VERSION, DELMARK] + [
                 c for c in payload_cols if c in pl.columns
             ]
-            rows = self._apply_range_dels(
-                snapshot_read(pl.select(*dict.fromkeys(keep)), read_ts=ts), ts
-            )
+            rows = self._snapshot(pl.select(*dict.fromkeys(keep)), ts)
         out = rows.join(surv, HANDLE, "left_semi")
         return _project(out)
 
@@ -3164,36 +2915,13 @@ class DeltaStore:
     # postings, (b) VALIDATES them through read_handles (full MVCC:
     # updates win, tombstones and range deletes apply, values re-scored
     # from the CURRENT rows), (c) exact-scores the delta tail's handles
-    # and any uncovered segments, and (d) merges. Presence semantics as
-    # the other indexes: an uncovered segment is searched exactly, so a
-    # crash or partial refresh costs recall work, never correctness.
+    # and any uncovered segments, and (d) merges. An uncovered segment is
+    # searched exactly, so a crash or partial refresh (the lifecycle at
+    # ``_INDEX_KINDS``) costs recall work, never correctness.
 
     VECIDX_CENTROIDS = 8
     VECIDX_PROBE = 2
     VECIDX_OVERFETCH = 4
-
-    def _vecidx_dir(self, col: str, layer_dir: str | None = None) -> str:
-        return os.path.join(layer_dir or self.stable_path(), f"_VECIDX_{col}")
-
-    def _vecidx_meta(self, layer_dir: str | None = None) -> dict:
-        import json
-
-        p = os.path.join(layer_dir or self.stable_path(), "_VECIDX")
-        if os.path.exists(p):
-            with open(p) as fh:
-                return json.load(fh)
-        return {}
-
-    def _write_vecidx_meta(self, meta: dict, layer_dir: str | None = None) -> None:
-        import json
-
-        d = layer_dir or self.stable_path()
-        os.makedirs(d, exist_ok=True)
-        p = os.path.join(d, "_VECIDX")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, p)
 
     @staticmethod
     def _vec_dist2(a: list[float], b: list[float]) -> float:
@@ -3223,16 +2951,23 @@ class DeltaStore:
         self, col: str, n_centroids: int | None = None, iterations: int = 2
     ) -> int:
         """Build the IVF posting sidecar for an array<float/double>
-        column. Deterministic coarse quantizer: seeds = the vectors of
-        the n smallest handles, refined with ``iterations`` Lloyd steps
-        (means collected to the driver — n_centroids × dim scalars).
-        Returns segments covered."""
-        n_centroids = n_centroids or self.VECIDX_CENTROIDS
-        stable = self._layer("stable")
-        if stable is None or "_seg" not in stable.columns:
-            raise ValueError("vector index needs a segmented stable layer")
+        column. Returns segments covered."""
+        stable = self._segmented_stable("vector index")
         if col not in stable.columns:
             raise ValueError(f"column {col!r} not in stable layer")
+        centroids = self._vec_centroids(
+            stable, col, n_centroids or self.VECIDX_CENTROIDS, iterations
+        )
+        meta = self._index_meta("vector")
+        meta[col] = {"centroids": centroids, "segs": []}
+        return self._build_index("vector", meta)
+
+    def _vec_centroids(
+        self, stable: DataFrame, col: str, n_centroids: int, iterations: int = 2
+    ) -> list[list[float]]:
+        """Deterministic coarse quantizer: seeds = the vectors of the n
+        smallest handles, refined with ``iterations`` Lloyd steps (means
+        collected to the driver — n_centroids × dim scalars)."""
         rows = stable.filter(F.col(col).isNotNull())
         seeds = [
             [float(v) for v in r.vec]
@@ -3259,104 +2994,35 @@ class DeltaStore:
             for r in means:
                 new[r._cl] = [float(r[f"m{i}"]) for i in range(dim)]
             cents = new
-        meta = self._vecidx_meta()
-        meta[col] = {"centroids": cents, "segs": []}
-        self._write_vecidx_meta(meta)
-        segs = sorted(self._all_seg_ids())
-        self._vecidx_refresh_segs(segs)
-        return len(segs)
+        return cents
 
-    def _vecidx_refresh_segs(self, segs: list[int]) -> None:
-        """Rebuild posting partitions for the given segments. Same
-        crash-safe ordering as the inverted index: unregister → rewrite
-        → re-register, so postings are never stale, only absent (an
-        absent segment is searched exactly)."""
-        import shutil
-
-        meta = self._vecidx_meta()
-        if not meta or not segs:
-            return
-        stable = self._layer("stable")
-        if stable is None or "_seg" not in stable.columns:
-            self._drop_vector_indexes()
-            return
-        seg_ids = [int(s) for s in segs]
-        self._write_vecidx_meta(
-            {
-                c: {**m, "segs": sorted(set(m["segs"]) - set(seg_ids))}
-                for c, m in meta.items()
-            }
-        )
-        present = stable.filter(F.col("_seg").isin(seg_ids))
-        have = set(seg_ids) & self._all_seg_ids()
-        final = {}
-        for c, m in list(meta.items()):
-            if c not in stable.columns:
-                shutil.rmtree(self._vecidx_dir(c), ignore_errors=True)
-                continue
-            assign = self._vecidx_assign_expr(c, m["centroids"])
-            idx_dir = self._vecidx_dir(c)
-            tmp = self._stage_dir("vecidx")
-            (
-                present.filter(F.col(c).isNotNull())
-                .select(HANDLE, F.col(c).alias("vec"), "_seg", assign.alias("_cl"))
-                .repartition("_seg", "_cl")
-                .write.partitionBy("_seg", "_cl")
-                .mode("overwrite")
-                .parquet(tmp)
-            )
-            for s in seg_ids:
-                dst = os.path.join(idx_dir, f"_seg={s}")
-                shutil.rmtree(dst, ignore_errors=True)
-                src = os.path.join(tmp, f"_seg={s}")
-                if os.path.exists(src):
-                    os.makedirs(idx_dir, exist_ok=True)
-                    os.rename(src, dst)
-            shutil.rmtree(tmp, ignore_errors=True)
-            final[c] = {**m, "segs": sorted((set(m["segs"]) - set(seg_ids)) | have)}
-        self._write_vecidx_meta(final)
-
-    def _drop_vector_indexes(self) -> None:
-        import shutil
-
-        for c in list(self._vecidx_meta()):
-            shutil.rmtree(self._vecidx_dir(c), ignore_errors=True)
-        p = os.path.join(self.stable_path(), "_VECIDX")
-        if os.path.exists(p):
-            os.remove(p)
-
-    def _rebuild_vecidx(self, prior: dict) -> None:
-        """After a whole-stable rewrite: rebuild each indexed column with
-        a fresh quantizer (the data may have shifted)."""
-        if not prior:
-            return
-        stable = self._layer("stable")
-        if stable is None or "_seg" not in stable.columns:
-            return
-        for c, m in prior.items():
-            if c in stable.columns:
-                try:
-                    self.build_vector_index(c, n_centroids=len(m["centroids"]))
-                except ValueError:
-                    continue  # e.g. all vectors gone
-
-    def _stage_vecidx(self, stage: str, dirty: list[int]) -> set[str]:
-        """Staged-meta + skip entries for a mutation rewriting ``dirty``
-        segments (mirrors _stage_invidx)."""
-        meta = self._vecidx_meta()
-        if not meta:
-            return set()
-        dirty_set = {int(s) for s in dirty}
-        skip = {"_VECIDX"}
-        staged = {}
+    def _vector_retrain(self, meta: dict, stable: DataFrame) -> dict:
+        """A whole-stable rewrite trains each column's quantizer afresh
+        (the data may have shifted); a column left with no vector loses
+        its index."""
+        out = {}
         for c, m in meta.items():
-            skip |= {
-                os.path.join(f"_VECIDX_{c}", f"_seg={s}") for s in dirty_set
-            }
-            staged[c] = {**m, "segs": sorted(set(m["segs"]) - dirty_set)}
-        os.makedirs(stage, exist_ok=True)
-        self._write_vecidx_meta(staged, layer_dir=stage)
-        return skip
+            try:
+                cents = self._vec_centroids(stable, c, len(m["centroids"]))
+            except ValueError:
+                continue  # e.g. all vectors gone
+            out[c] = {**m, "centroids": cents}
+        return out
+
+    def _vector_build(self, meta: dict, rows: DataFrame, segs, have) -> dict:
+        """IVF postings per column: (handle, vector) copies of ``rows``,
+        partitioned by segment and coarse cluster."""
+        for c, m in meta.items():
+            assign = self._vecidx_assign_expr(c, m["centroids"])
+            self._write_postings(
+                "vector", c,
+                rows.filter(F.col(c).isNotNull()).select(
+                    HANDLE, F.col(c).alias("vec"), "_seg", assign.alias("_cl")
+                ),
+                segs, parts=("_seg", "_cl"),
+            )
+            meta[c] = {**m, "segs": sorted(set(m["segs"]) | have)}
+        return meta
 
     def ann_topk(
         self,
@@ -3390,7 +3056,7 @@ class DeltaStore:
             raise ValueError(f"metric must be 'cosine' or 'l2', not {metric!r}")
         n_probe = n_probe or self.VECIDX_PROBE
         overfetch = overfetch or self.VECIDX_OVERFETCH
-        meta = self._vecidx_meta().get(col)
+        meta = self._index_meta("vector").get(col)
         qlit = F.array(*[F.lit(float(v)) for v in query])
 
         def scored(df: DataFrame) -> DataFrame:
@@ -3414,7 +3080,7 @@ class DeltaStore:
             range(len(meta["centroids"])),
             key=lambda i: self._vec_dist2(meta["centroids"][i], query),
         )[:n_probe]
-        idx = self.spark.read.parquet(self._vecidx_dir(col)).filter(
+        idx = self.spark.read.parquet(self._index_dir("vector", col)).filter(
             F.col("_cl").isin(probe) & F.col("_seg").isin(list(covered))
         )
         cand_handles = [
@@ -3448,7 +3114,7 @@ class DeltaStore:
             log = self.log().filter(F.col("_seg").isin(list(uncovered)))
             if delta_handles:
                 log = log.filter(~F.col(HANDLE).isin(delta_handles))
-            vis = self._apply_range_dels(snapshot_read(log, read_ts=ts), ts)
+            vis = self._snapshot(log, ts)
             legs.append(scored(vis.filter(F.col(col).isNotNull())))
         out = legs[0]
         for leg in legs[1:]:
@@ -3483,46 +3149,18 @@ class DeltaStore:
     # rows, sorted by term within files so a term lookup prunes at parquet
     # row-group level, plus per-segment corpus stats (n_docs, sum_dl) in
     # the `_FTSIDX` meta so BM25's N/avgdl combine incrementally across
-    # segment refreshes. Same crash-safe unregister → rewrite →
-    # re-register maintenance as the inverted/vector indexes, and the same
-    # MVCC posture as ann_topk: the index nominates candidates and prunes
+    # segment refreshes (the lifecycle at ``_INDEX_KINDS``). Same MVCC
+    # posture as ann_topk: the index nominates candidates and prunes
     # segments; visibility and scores are decided on CURRENT values
     # through the snapshot read path, so a stale index can only cost
     # recall inside an unrefreshed window, never add or mis-score rows.
-
-    def _ftsidx_dir(self, col: str, layer_dir: str | None = None) -> str:
-        return os.path.join(layer_dir or self.stable_path(), f"_FTSIDX_{col}")
-
-    def _ftsidx_meta(self, layer_dir: str | None = None) -> dict:
-        import json
-
-        p = os.path.join(layer_dir or self.stable_path(), "_FTSIDX")
-        if os.path.exists(p):
-            with open(p) as fh:
-                return json.load(fh)
-        return {}
-
-    def _write_ftsidx_meta(self, meta: dict, layer_dir: str | None = None) -> None:
-        import json
-
-        d = layer_dir or self.stable_path()
-        os.makedirs(d, exist_ok=True)
-        p = os.path.join(d, "_FTSIDX")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, p)
 
     def build_fulltext_index(self, col: str) -> int:
         """Index a string column for full-text match/scored search.
         Requires a segmented stable layer. One tokenize+explode shuffle
         over stable per build (the reference builds its index when a
         DMFile is written). Returns segments covered."""
-        stable = self._layer("stable")
-        if stable is None or "_seg" not in stable.columns:
-            raise ValueError("full-text index needs a segmented stable layer "
-                             "(compact with num_segments / range segments)")
-        dtypes = dict(stable.dtypes)
+        dtypes = dict(self._segmented_stable("full-text index").dtypes)
         if col == HANDLE or col in _INTERNAL_COLS:
             raise ValueError(f"column {col!r} is internal — index a user column")
         if col not in dtypes:
@@ -3531,58 +3169,27 @@ class DeltaStore:
             raise ValueError(
                 f"full-text index needs a string column, {col!r} is {dtypes[col]}"
             )
-        meta = self._ftsidx_meta()
+        meta = self._index_meta("fulltext")
         meta.setdefault(col, {"segs": [], "stats": {}})
-        self._write_ftsidx_meta(meta)
-        segs = sorted(self._all_seg_ids())
-        self._ftsidx_refresh_segs(segs)
-        return len(segs)
+        return self._build_index("fulltext", meta)
 
-    def _ftsidx_refresh_segs(self, segs: list[int]) -> None:
-        """Rebuild postings partitions + per-segment stats for the given
-        segments. Crash-safe ordering as the other indexes: unregister →
-        rewrite → re-register (absent ⇒ scan, never stale)."""
-        import shutil
-
+    def _fulltext_build(self, meta: dict, rows: DataFrame, segs, have) -> dict:
+        """Postings per column — (term, handle, tf, dl) rows of ``rows``,
+        sorted by term — plus each segment's (n_docs, sum_dl) stats."""
         from tiflash_spark.pipeline.fulltext import tokenize
 
-        meta = self._ftsidx_meta()
-        if not meta or not segs:
-            return
-        stable = self._layer("stable")
-        if stable is None or "_seg" not in stable.columns:
-            self._drop_fulltext_indexes()
-            return
-        seg_ids = [int(s) for s in segs]
-        self._write_ftsidx_meta(
-            {
-                c: {
-                    "segs": sorted(set(m["segs"]) - set(seg_ids)),
-                    "stats": {
-                        k: v for k, v in m["stats"].items() if int(k) not in seg_ids
-                    },
-                }
-                for c, m in meta.items()
-            }
-        )
-        present = stable.filter(F.col("_seg").isin(seg_ids))
-        have = set(seg_ids) & self._all_seg_ids()
-        final = {}
-        for c, m in list(meta.items()):
-            if c not in stable.columns:
-                shutil.rmtree(self._ftsidx_dir(c), ignore_errors=True)
-                continue
+        for c, m in meta.items():
             # index EVERY stable version of a handle (presence over any
             # version keeps segment pruning sound for reads at older ts);
             # tf/dl are the per-version max, so one version never inflates
             # another's counts
-            docs = present.filter(F.col(c).isNotNull()).select(
+            docs = rows.filter(F.col(c).isNotNull()).select(
                 HANDLE,
                 "_seg",
                 F.col(VERSION).alias("_v"),
                 tokenize(F.col(c)).alias("_toks"),
             )
-            rows = docs.select(
+            terms = docs.select(
                 HANDLE,
                 "_seg",
                 "_v",
@@ -3590,7 +3197,7 @@ class DeltaStore:
                 F.explode("_toks").alias("term"),
             )
             postings = (
-                rows.groupBy("_seg", "term", HANDLE, "_v")
+                terms.groupBy("_seg", "term", HANDLE, "_v")
                 .agg(
                     F.count(F.lit(1)).cast("int").alias("tf"),
                     F.max("dl").alias("dl"),
@@ -3598,23 +3205,7 @@ class DeltaStore:
                 .groupBy("_seg", "term", HANDLE)
                 .agg(F.max("tf").alias("tf"), F.max("dl").alias("dl"))
             )
-            idx_dir = self._ftsidx_dir(c)
-            tmp = self._stage_dir("ftsidx")
-            (
-                postings.repartition("_seg")
-                .sortWithinPartitions("term")
-                .write.partitionBy("_seg")
-                .mode("overwrite")
-                .parquet(tmp)
-            )
-            for s in seg_ids:
-                dst = os.path.join(idx_dir, f"_seg={s}")
-                shutil.rmtree(dst, ignore_errors=True)
-                src = os.path.join(tmp, f"_seg={s}")
-                if os.path.exists(src):
-                    os.makedirs(idx_dir, exist_ok=True)
-                    os.rename(src, dst)
-            shutil.rmtree(tmp, ignore_errors=True)
+            self._write_postings("fulltext", c, postings, segs, sort="term")
             dlh = docs.groupBy("_seg", HANDLE).agg(
                 F.max(F.size("_toks")).alias("dl")
             )
@@ -3627,58 +3218,11 @@ class DeltaStore:
             }
             for s in have:
                 stats.setdefault(str(s), [0, 0])  # covered, all-NULL segment
-            final[c] = {
-                "segs": sorted((set(m["segs"]) - set(seg_ids)) | have),
-                "stats": {
-                    **{k: v for k, v in m["stats"].items() if int(k) not in seg_ids},
-                    **stats,
-                },
+            meta[c] = {
+                "segs": sorted(set(m["segs"]) | have),
+                "stats": {**m["stats"], **stats},
             }
-        self._write_ftsidx_meta(final)
-
-    def _drop_fulltext_indexes(self) -> None:
-        import shutil
-
-        for c in list(self._ftsidx_meta()):
-            shutil.rmtree(self._ftsidx_dir(c), ignore_errors=True)
-        p = os.path.join(self.stable_path(), "_FTSIDX")
-        if os.path.exists(p):
-            os.remove(p)
-
-    def _rebuild_ftsidx(self, prior_cols: list[str]) -> None:
-        """Full rebuild after a whole-stable rewrite (columns a DDL
-        dropped are retired; no-op when the new layout is unsegmented)."""
-        if not prior_cols:
-            return
-        stable = self._layer("stable")
-        if stable is None or "_seg" not in stable.columns:
-            return
-        for c in prior_cols:
-            if c in stable.columns:
-                self.build_fulltext_index(c)
-
-    def _stage_ftsidx(self, stage: str, dirty: list[int]) -> set[str]:
-        """Staged-meta + hardlink-skip entries for a mutation rewriting
-        ``dirty`` segments (mirrors _stage_invidx)."""
-        meta = self._ftsidx_meta()
-        if not meta:
-            return set()
-        dirty_set = {int(s) for s in dirty}
-        skip = {"_FTSIDX"}
-        staged = {}
-        for c, m in meta.items():
-            skip |= {
-                os.path.join(f"_FTSIDX_{c}", f"_seg={s}") for s in dirty_set
-            }
-            staged[c] = {
-                "segs": sorted(set(m["segs"]) - dirty_set),
-                "stats": {
-                    k: v for k, v in m["stats"].items() if int(k) not in dirty_set
-                },
-            }
-        os.makedirs(stage, exist_ok=True)
-        self._write_ftsidx_meta(staged, layer_dir=stage)
-        return skip
+        return meta
 
 
     def _fts_prune_state(self, col: str, w: str) -> tuple[list[int], list | None]:
@@ -3686,14 +3230,14 @@ class DeltaStore:
         (prunable segment ids, bounded hit-handle list or None).
         Handle-level path only when every segment is covered (the
         reference's row bitmap); any failure degrades to scan."""
-        meta = self._ftsidx_meta().get(col)
+        meta = self._index_meta("fulltext").get(col)
         log = self.log()
         pruned: list[int] = []
         hit_handles: list | None = None
         if meta and meta["segs"] and "_seg" in log.columns:
             covered = {int(s) for s in meta["segs"]}
             try:
-                idx = self.spark.read.parquet(self._ftsidx_dir(col))
+                idx = self.spark.read.parquet(self._index_dir("fulltext", col))
                 # ONE probe job yields both the hit segments and (when
                 # bounded) the hit handles — the local index path is
                 # driver-job-bound, so every fused round-trip matters
@@ -3755,7 +3299,7 @@ class DeltaStore:
         log = self.log()
         if pruned:
             log = self._log_minus_segments(log, pruned)
-        out = self._apply_range_dels(snapshot_read(log, read_ts=ts), ts)
+        out = self._snapshot(log, ts)
         return self._conform_read(out).filter(pred())
 
     @staticmethod
@@ -3846,7 +3390,7 @@ class DeltaStore:
         log = self.log()
         if pruned:
             log = self._log_minus_segments(log, sorted(pruned))
-        out = self._apply_range_dels(snapshot_read(log, read_ts=ts), ts)
+        out = self._snapshot(log, ts)
         return self._conform_read(out).filter(pred())
 
     def fts_match_boolean(
@@ -3925,7 +3469,7 @@ class DeltaStore:
         log = self.log()
         if pruned:
             log = self._log_minus_segments(log, sorted(pruned))
-        out = self._apply_range_dels(snapshot_read(log, read_ts=ts), ts)
+        out = self._snapshot(log, ts)
         return self._conform_read(out).filter(pred())
 
     def fts_match_where(
@@ -3978,7 +3522,7 @@ class DeltaStore:
                     pruned_set |= set(self._zm_pruned_segs(c, arg[0], arg[1]))
         if pruned_set:
             log = self._log_minus_segments(log, sorted(pruned_set))
-        out = self._apply_range_dels(snapshot_read(log, read_ts=ts), ts)
+        out = self._snapshot(log, ts)
         return self._conform_read(out).filter(full_pred)
 
     FTS_OVERFETCH = 4
@@ -4009,7 +3553,7 @@ class DeltaStore:
         terms = [t for t in _re.split(TOKEN_RE, query.lower()) if t]
         if not terms:
             raise ValueError("empty query after tokenization")
-        meta = self._ftsidx_meta().get(col)
+        meta = self._index_meta("fulltext").get(col)
         log = self.log()
         seg_aware = meta and meta["segs"] and "_seg" in log.columns
         covered = {int(s) for s in meta["segs"]} if seg_aware else set()
@@ -4039,7 +3583,7 @@ class DeltaStore:
         cand_truncated = False
         if covered:
             try:
-                idx = self.spark.read.parquet(self._ftsidx_dir(col))
+                idx = self.spark.read.parquet(self._index_dir("fulltext", col))
                 hits = idx.filter(
                     F.col("term").isin(terms) & F.col("_seg").isin(list(covered))
                 )
@@ -4102,7 +3646,7 @@ class DeltaStore:
                     ulog = ulog.join(
                         F.broadcast(delta_df), on=HANDLE, how="left_anti"
                     )
-                vis = self._apply_range_dels(snapshot_read(ulog, read_ts=ts), ts)
+                vis = self._snapshot(ulog, ts)
                 legs.append(self._conform_read(vis))
             if not legs:
                 return self.spark.createDataFrame(
@@ -4156,7 +3700,7 @@ class DeltaStore:
         if covered:
             try:
                 df_rows = (
-                    self.spark.read.parquet(self._ftsidx_dir(col))
+                    self.spark.read.parquet(self._index_dir("fulltext", col))
                     .filter(
                         F.col("term").isin(terms)
                         & F.col("_seg").isin(list(covered))
@@ -4352,18 +3896,26 @@ class DeltaStore:
         order as the rebalance policy's seg_counts probe."""
         man = self._manifest()
         stable = self._layer("stable")
+        covers = self._index_covers()
+
+        def coverage(seg):
+            return self._coverage_columns(
+                covers, "cols", lambda c: sum(seg in v for v in c.values())
+            )
+
+        ddl = (
+            "seg int, range_lo string, range_hi string, stable_rows long,"
+            " stable_bytes long, delta_rows long, "
+            + ", ".join(d for d, _ in coverage(None))
+        )
         if stable is None:
             # delta-only table (writes replicated, never compacted):
             # DT_SEGMENTS still lists the one segment holding the delta
             # (system-table/read_system_table.test reads `rows` = 3
             # right after the inserts)
             n0 = self.delta_rows()
-            return self.spark.createDataFrame(
-                [(None, None, None, 0, 0, n0, False, 0, 0, 0)] if n0 else [],
-                "seg int, range_lo string, range_hi string, stable_rows long,"
-                " stable_bytes long, delta_rows long, zonemap boolean,"
-                " inverted_cols int, vector_cols int, fulltext_cols int",
-            )
+            row = (None, None, None, 0, 0, n0, *[v for _, v in coverage(None)])
+            return self.spark.createDataFrame([row] if n0 else [], ddl)
         segmented = "_seg" in stable.columns
         if segmented:
             rows = {
@@ -4397,29 +3949,15 @@ class DeltaStore:
                         total += os.path.getsize(os.path.join(root, f))
             return total
 
-        zm = self._zonemap()
-        inv = self._invidx_meta()
-        vec = self._vecidx_meta()
-        fts = self._ftsidx_meta()
         out = []
         for s in sorted(rows, key=lambda k: (k is None, k)):
             if segmented and s is not None:
                 seg_dir = os.path.join(self.stable_path(), f"_seg={s}")
                 blo, bhi = (man["bounds"].get(str(s), (None, None)) if man
                             else (None, None))
-                zm_cov = bool(zm and str(s) in zm.get("segs", {}))
-                inv_cov = sum(1 for c, segs in inv.items() if s in segs)
-                vec_cov = sum(
-                    1 for c, m in (vec or {}).items()
-                    if s in m.get("segs", [])
-                )
-                fts_cov = sum(
-                    1 for c, m in fts.items() if s in m.get("segs", [])
-                )
             else:
                 seg_dir = self.stable_path()
                 blo = bhi = None
-                zm_cov, inv_cov, vec_cov, fts_cov = False, 0, 0, 0
             out.append(
                 (
                     s,
@@ -4428,18 +3966,25 @@ class DeltaStore:
                     rows[s],
                     _dir_bytes(seg_dir),
                     drows.get(s, 0),
-                    zm_cov,
-                    inv_cov,
-                    vec_cov,
-                    fts_cov,
+                    *[v for _, v in coverage(s)],
                 )
             )
-        return self.spark.createDataFrame(
-            out,
-            "seg int, range_lo string, range_hi string, stable_rows long,"
-            " stable_bytes long, delta_rows long, zonemap boolean,"
-            " inverted_cols int, vector_cols int, fulltext_cols int",
-        )
+        return self.spark.createDataFrame(out, ddl)
+
+    @staticmethod
+    def _coverage_columns(covers: dict, suffix: str, count) -> list[tuple]:
+        """The system tables' index columns as (DDL, value), one per kind
+        in ``covers`` (``_index_covers``): ``count`` of the kind's
+        {column: covered segments} map, as ``<kind>_<suffix> int`` for a
+        posting kind and as a ``<kind> boolean`` flag for the zone map."""
+        out = []
+        for kind, c in covers.items():
+            n = count(c)
+            if _INDEX_KINDS[kind].prefix:
+                out.append((f"{kind}_{suffix} int", n))
+            else:
+                out.append((f"{kind} boolean", bool(n)))
+        return out
 
     def system_dt_tables(self) -> DataFrame:
         """The DT_TABLES system-table analogue (reference
@@ -4454,6 +3999,11 @@ class DeltaStore:
             man["kind"] if man else ("hash" if n_seg else
                                      ("flat" if stable is not None else "empty"))
         )
+        # DT_TABLES lists the zone-map flag after the index counts
+        cov = sorted(
+            self._coverage_columns(self._index_covers(), "indexes", len),
+            key=lambda dv: dv[0].endswith("boolean"),
+        )
         row = (
             self.path,
             self.schema_version(),
@@ -4462,15 +4012,11 @@ class DeltaStore:
             int(stable.count()) if stable is not None else 0,
             self.delta_rows(),
             len(self._range_dels()),
-            len(self._invidx_meta()),
-            len(self._vecidx_meta() or {}),
-            len(self._ftsidx_meta()),
-            self._zonemap() is not None,
+            *[v for _, v in cov],
         )
         return self.spark.createDataFrame(
             [row],
             "path string, schema_version int, layout string, n_segments int,"
-            " stable_rows long, delta_rows long, range_tombstones int,"
-            " inverted_indexes int, vector_indexes int, fulltext_indexes int,"
-            " zonemap boolean",
+            " stable_rows long, delta_rows long, range_tombstones int, "
+            + ", ".join(d for d, _ in cov),
         )

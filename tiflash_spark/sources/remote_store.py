@@ -65,7 +65,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tiflash_spark.operators.mvcc import DELMARK, HANDLE, VERSION, snapshot_read
+from tiflash_spark.operators.mvcc import DELMARK, HANDLE, VERSION
 from tiflash_spark.sources.delta_store import DeltaStore
 
 
@@ -752,10 +752,10 @@ class ReadNodeStore:
                     allowMissingColumns=True,
                 )
             tail_dels = [d for d in self._tail._range_dels() if d["v"] > wm]
-        out = snapshot_read(log, read_ts=ts)
-        out = self._ds._apply_range_dels(out, ts)
-        if tail_dels:
-            out = self._ds._apply_range_dels(out, ts, dels=tail_dels)
+        out = self._ds._snapshot(log, ts)
+        flt = self._ds._range_del_filter(ts, tail_dels) if tail_dels else None
+        if flt is not None:
+            out = out.filter(flt)
         out = out.drop(VERSION, DELMARK)
         out = out.drop("_seg") if "_seg" in out.columns else out
         return self._ds._conform(out, internal=False)
