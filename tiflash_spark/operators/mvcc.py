@@ -7,7 +7,7 @@ read at snapshot `ts` sort-merges delta+stable by handle, keeps the newest
 version <= ts and drops delete-marked rows
 (DMVersionFilterBlockInputStream.h:30-44, modes MVCC/COMPACT). Read modes
 Normal / Fast / Raw (ReadMode.h:20-39): Fast skips the version dedup and
-only drops delete marks.
+only drops delete marks; Raw is the log itself (``DeltaStore.log()``).
 
 Spark-first: the log is just a table; snapshot read = one window dedup —
   row_number() OVER (PARTITION BY handle ORDER BY version DESC) = 1
@@ -108,11 +108,6 @@ def fast_scan(log: DataFrame) -> DataFrame:
     """Fast read mode: skip the sort-merge MVCC dedup, just drop delete rows
     (ReadMode.h:27-33 — trades snapshot consistency for throughput)."""
     return log.filter(F.col(DELMARK) == 0)
-
-
-def raw_scan(log: DataFrame) -> DataFrame:
-    """Raw read mode: everything, hidden columns included (ReadMode.h:35)."""
-    return log
 
 
 def compact(log: DataFrame, compact_ts: int) -> DataFrame:

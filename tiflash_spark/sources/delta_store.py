@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiflash_spark import cache
-from tiflash_spark.operators.mvcc import DELMARK, HANDLE, VERSION, snapshot_read
+from tiflash_spark.operators.mvcc import DELMARK, HANDLE, VERSION, fast_scan, snapshot_read
 
 
 _INTERNAL_COLS = (VERSION, DELMARK, "_seg")
@@ -246,6 +246,43 @@ def _render_time_cols(df: DataFrame, td: dict | None) -> DataFrame:
             ),
         )
     return df
+
+
+def register_view(store, name: str, ts: int | None = None,
+                  mode: str = "normal") -> None:
+    """Register ``store.read(ts, mode)`` as a temp view so spark.sql
+    queries the replicated table by name — the TiDB-side `SELECT ...`
+    over a TiFlash replica. It is ``as_view`` of DeltaStore,
+    PartitionedStore and ReadNodeStore alike, so each view shows what
+    that store's own read returns. Plan-time snapshot: re-register after
+    mutations (or at a fixed ts for a stable-read view, the reference's
+    stale read — docs/design/2023-02-21-tiflash-supports-stale-read.md).
+    A declared PRIMARY KEY surfaces under its own name (the hidden
+    rowid IS the clustered pk, MutableSupport.h:44); tables declared
+    through CREATE TABLE without a clustered pk hide the auto rowid
+    from the view, matching MySQL's `SELECT *` (TiDB exposes
+    _tidb_rowid only when named explicitly — a temp view cannot
+    express name-only visibility, and every reference script reads
+    through `*` or declared names). Stores built directly against the
+    DeltaStore API (no table def) keep the handle visible."""
+    df = store.read(ts, mode=mode)
+    td = store.table_def()
+    alias = store.handle_alias()
+    if alias:
+        df = df.withColumnRenamed(HANDLE, alias)
+    elif td is not None:
+        df = df.drop(HANDLE)
+    if td and td.get("order"):
+        # SELECT * shows columns in DECLARED order — generated columns
+        # sit at their declared position, not appended
+        # (mpp/late_materialization_generate_column.test); columns ADDed
+        # later follow in schema order
+        first = [c for c in td["order"] if c in df.columns]
+        rest = [c for c in df.columns if c not in first]
+        if first and df.columns != first + rest:
+            df = df.select(*(first + rest))
+    df = _render_time_cols(df, td)
+    _render_dec65_cols(df, td).createOrReplaceTempView(name)
 
 
 class DeltaStore:
@@ -908,14 +945,6 @@ class DeltaStore:
             k: list(v) for k, v in (vs[-1].get("renames", {}) if vs else {}).items()
         }
 
-    def _conform_read(self, out: DataFrame) -> DataFrame:
-        """Read-path conform: keep VERSION visible through _conform (the
-        ADD-COLUMN default gate needs the row's commit version), drop it
-        afterwards along with the other internals."""
-        drops = [DELMARK] + (["_seg"] if "_seg" in out.columns else [])
-        conf = self._conform(out.drop(*drops), internal=False)
-        return conf.drop(VERSION) if VERSION in conf.columns else conf
-
     def _visible_exprs(self, names: list[str], df_cols: list[str]) -> list:
         """Column expressions computing the given VISIBLE columns over a
         frame of RAW stored columns — rename coalesce (files keep their
@@ -1198,16 +1227,16 @@ class DeltaStore:
     def _write_range_dels(self, dels: list[dict], delta_dir: str | None = None) -> None:
         _write_json(os.path.join(delta_dir or self.delta_path(), "_RANGE_DELS"), dels)
 
-    def _range_del_filter(self, ts: int | None, dels: list[dict] | None = None):
+    def _range_del_filter(self, ts: int | None, dels: list[dict] = ()):
         """One codegen predicate hiding rows covered by a visible range
         tombstone: handle in [lo, hi) AND row version <= tombstone
         version (and tombstone version <= read ts). None when there are
         no applicable tombstones. The list is small by construction —
-        compaction GCs applied entries, like the reference. ``dels``
-        overrides the store's own list (read nodes merge a write node's
-        newer tombstones into a pinned checkpoint snapshot)."""
+        compaction GCs applied entries, like the reference. ``dels`` adds
+        tombstones to the store's own (a read node merges a write node's
+        newer tombstones into its pinned checkpoint snapshot)."""
         cond = None
-        for d in self._range_dels() if dels is None else dels:
+        for d in self._range_dels() + list(dels):
             if ts is not None and d["v"] > ts:
                 continue  # tombstone not visible at this snapshot
             covered = (
@@ -1218,13 +1247,28 @@ class DeltaStore:
             cond = covered if cond is None else (cond | covered)
         return None if cond is None else ~cond
 
-    def _snapshot(self, log: DataFrame, ts: int | None) -> DataFrame:
-        """The MVCC read step: the newest visible version per handle at
-        ``ts`` (operators/mvcc.py), then the visible range tombstones.
-        The frame keeps its internals for the caller to project away."""
+    def _snapshot(self, log: DataFrame, ts: int | None, dels: list[dict] = ()) -> DataFrame:
+        """The MVCC pick: the newest visible version per handle at ``ts``
+        (operators/mvcc.py), then the visible range tombstones (the
+        store's plus ``dels``). The frame keeps its internals, which the
+        late-materialization scans project themselves."""
         out = snapshot_read(log, read_ts=ts)
-        flt = self._range_del_filter(ts)
+        flt = self._range_del_filter(ts, dels)
         return out if flt is None else out.filter(flt)
+
+    def _visible(self, log: DataFrame, ts: int | None, mode: str = "normal",
+                 dels: list[dict] = ()) -> DataFrame:
+        """The read step every front end shares (reference
+        DMVersionFilterBlockInputStream per ReadMode): the MVCC pick with
+        range tombstones in normal mode, or fastscan's delete-mark filter
+        alone in fast mode, then the conform to the current schema.
+        VERSION stays in scope through the conform (the ADD-COLUMN
+        default gate needs the row's commit version) and is dropped
+        after it with the other internals."""
+        out = fast_scan(log) if mode == "fast" else self._snapshot(log, ts, dels)
+        drops = [DELMARK] + (["_seg"] if "_seg" in out.columns else [])
+        conf = self._conform(out.drop(*drops), internal=False)
+        return conf.drop(VERSION) if VERSION in conf.columns else conf
 
     # --- read path ---------------------------------------------------------
 
@@ -1413,47 +1457,9 @@ class DeltaStore:
         ReadMode.h Fast): skip the MVCC version filter — delete marks
         are not applied to earlier versions, so deleted rows stay
         visible until GC actually reclaims them."""
-        if mode == "fast":
-            from tiflash_spark.operators.mvcc import fast_scan
+        return self._visible(self.log(), ts, mode)
 
-            return self._conform_read(fast_scan(self.log()))
-        out = self._snapshot(self.log(), ts)
-        return self._conform_read(out)
-
-    def as_view(self, name: str, ts: int | None = None,
-                mode: str = "normal") -> None:
-        """Register a snapshot read as a temp view so spark.sql queries
-        the replicated table by name — the TiDB-side `SELECT ...` over a
-        TiFlash replica. Plan-time snapshot: re-register after mutations
-        (or at a fixed ts for a stable-read view, the reference's stale
-        read — docs/design/2023-02-21-tiflash-supports-stale-read.md).
-        A declared PRIMARY KEY surfaces under its own name (the hidden
-        rowid IS the clustered pk, MutableSupport.h:44); tables declared
-        through CREATE TABLE without a clustered pk hide the auto rowid
-        from the view, matching MySQL's `SELECT *` (TiDB exposes
-        _tidb_rowid only when named explicitly — a temp view cannot
-        express name-only visibility, and every reference script reads
-        through `*` or declared names). Stores built directly against the
-        DeltaStore API (no table def) keep the handle visible."""
-        df = self.read(ts, mode=mode)
-        alias = self.handle_alias()
-        if alias:
-            df = df.withColumnRenamed(HANDLE, alias)
-        elif self.table_def() is not None:
-            df = df.drop(HANDLE)
-        td = self.table_def()
-        if td and td.get("order"):
-            # SELECT * shows columns in DECLARED order — generated
-            # columns sit at their declared position, not appended
-            # (mpp/late_materialization_generate_column.test); columns
-            # ADDed later follow in schema order
-            first = [c for c in td["order"] if c in df.columns]
-            rest = [c for c in df.columns if c not in first]
-            if first and df.columns != first + rest:
-                df = df.select(*(first + rest))
-        df = _render_time_cols(df, td)
-        df = _render_dec65_cols(df, td)
-        df.createOrReplaceTempView(name)
+    as_view = register_view
 
     # --- maintenance -------------------------------------------------------
 
@@ -1579,8 +1585,7 @@ class DeltaStore:
                 .collect()
             }
             log = log.filter(F.col("_seg").isin(*wanted) | F.col("_seg").isNull())
-        out = self._snapshot(log.filter(F.col(HANDLE).isin(*handles)), ts)
-        return self._conform_read(out)
+        return self._visible(log.filter(F.col(HANDLE).isin(*handles)), ts)
 
     def read_handles_df(self, handles_df: DataFrame, ts: int | None = None) -> DataFrame:
         """Point reads driven by a DataFrame of handles: broadcast
@@ -1606,8 +1611,7 @@ class DeltaStore:
                     F.col("_seg").isin(*wanted) | F.col("_seg").isNull()
                 )
         log = log.join(F.broadcast(handles_df), on=HANDLE, how="leftsemi")
-        out = self._snapshot(log, ts)
-        return self._conform_read(out)
+        return self._visible(log, ts)
 
     # --- PK-range segments + incremental compaction -------------------------
 
@@ -1799,10 +1803,7 @@ class DeltaStore:
                 if blo < hi and bhi > lo  # overlap
             ]
             log = log.filter(F.col("_seg").isin(wanted) | F.col("_seg").isNull())
-        out = self._snapshot(
-            log.filter((F.col(HANDLE) >= lo) & (F.col(HANDLE) < hi)), ts
-        )
-        return self._conform_read(out)
+        return self._visible(log.filter((F.col(HANDLE) >= lo) & (F.col(HANDLE) < hi)), ts)
 
     def compact_segments_incremental(self, ts: int) -> tuple[int, int]:
         """Incremental delta merge: rewrite ONLY the range segments whose
@@ -1959,14 +1960,16 @@ class DeltaStore:
     def _merge_staged_files(src: str, dst: str) -> None:
         """Move the data files of a staged Spark write into an
         under-construction version dir (same relative layout, partition
-        dirs created as needed). Hidden files (_SUCCESS etc.) are
-        skipped; Spark part-file names embed a job UUID so collisions
-        with hardlinked existing files cannot happen."""
+        dirs created as needed). Each part file keeps its ``.part-*.crc``
+        checksum file, so Hadoop verifies it on read; the job markers
+        (``_SUCCESS`` and its ``._SUCCESS.crc``) are skipped. Spark
+        part-file names embed a job UUID so collisions with hardlinked
+        existing files cannot happen."""
         for root, _dirs, files in os.walk(src):
             rel = os.path.relpath(root, src)
             tdir = dst if rel == "." else os.path.join(dst, rel)
             for f in files:
-                if f.startswith(("_", ".")):
+                if f.startswith(("_", "._")):
                     continue
                 os.makedirs(tdir, exist_ok=True)
                 os.rename(os.path.join(root, f), os.path.join(tdir, f))
@@ -2453,17 +2456,7 @@ class DeltaStore:
             if "_seg" in log.columns and not self._ddl_shadowed(col)
             else []
         )
-        if pruned:
-            log = self._log_minus_segments(log, pruned)
-        out = self._snapshot(log, ts)
-        # conform BEFORE filtering: a RENAMEd column's data lives under
-        # prior stored names, an ADD-DEFAULT column's pre-DDL rows are
-        # visibly the default (not NULL), a generated column is never
-        # stored at all — the predicate must bind to VISIBLE values
-        conf = self._conform_read(out)
-        return conf.filter(
-            F.col(col).isNull() if col in conf.columns else F.lit(True)
-        )
+        return self._pruned_read("read_where_null", log, pruned, ts, F.col(col).isNull())
 
     def read_where(self, col: str, lo=None, hi=None, ts: int | None = None) -> DataFrame:
         """Snapshot read with a range predicate ``lo <= col <= hi`` on an
@@ -2491,30 +2484,54 @@ class DeltaStore:
         if lo is None and hi is None:
             raise ValueError("read_where needs at least one bound")
         log = self.log()
-        pruned = (
-            self._zm_pruned_segs(col, lo, hi)
-            if "_seg" in log.columns and not self._ddl_shadowed(col)
-            else []
-        )
-        self._record_scan_profile("read_where", pruned)
-        if pruned:
-            log = self._log_minus_segments(log, pruned)
-        out = self._snapshot(log, ts)
-        # conform BEFORE filtering so predicates bind to visible names
-        # (a RENAMEd column's data may live under prior stored names)
-        conf = self._conform_read(out)
-        if lo is not None:
-            conf = conf.filter(F.col(col) >= F.lit(lo))
+        pruned = self._conj_pruned_segs(log, [(col, "range", (lo, hi))])
+        bounds = [F.col(col) >= F.lit(lo)] if lo is not None else []
         if hi is not None:
-            conf = conf.filter(F.col(col) <= F.lit(hi))
-        return conf
+            bounds.append(F.col(col) <= F.lit(hi))
+        return self._pruned_read("read_where", log, pruned, ts, *bounds)
 
-    def _log_minus_segments(self, log: DataFrame, pruned: list[int]) -> DataFrame:
+    def _conj_pruned_segs(self, log: DataFrame, norm: list[tuple]) -> list[int]:
+        """Segments some conjunct's index proves hold no match: the
+        inverted index for IN lists (``_norm_conj`` form), the zone map
+        for ranges. A segment any conjunct excludes cannot hold a
+        surviving row, so the lists union. Columns whose visible values
+        DDL shadows are never pruned on (``_ddl_shadowed``)."""
+        pruned: list[int] = []
+        if "_seg" not in log.columns:
+            return pruned
+        for c, kind, arg in norm:
+            if self._ddl_shadowed(c):
+                continue
+            if kind == "in":
+                segs = self._invidx_pruned_segs(c, arg)
+            else:
+                segs = self._zm_pruned_segs(c, *arg)
+            pruned += [s for s in segs if s not in pruned]
+        return pruned
+
+    def _pruned_read(self, method: str, log: DataFrame, pruned, ts: int | None,
+                     *preds) -> DataFrame:
+        """The tail of every index-pruned scan: record the scan profile,
+        drop the pruned segments (with the delta rescue), take the
+        visible rows, then filter by each of ``preds``. The filters come
+        AFTER the conform so they bind to VISIBLE values: a RENAMEd
+        column's data lives under prior stored names, an ADD-DEFAULT
+        column's pre-DDL rows are visibly the default, a generated
+        column is never stored at all."""
+        self._record_scan_profile(method, pruned)
+        out = self._visible(self._log_minus_segments(log, pruned), ts)
+        for pred in preds:
+            out = out.filter(pred)
+        return out
+
+    def _log_minus_segments(self, log: DataFrame, pruned) -> DataFrame:
         """Drop the pruned segments from the log, rescuing any handle the
         delta also touches (see read_where's MVCC-soundness note). The
         delta's handles are the log's NULL-``_seg`` rows (delta files
         carry no segment column), so the delta is not read a second time,
         and a left semi join needs no distinct on its build side."""
+        if not pruned:
+            return log
         keep = log.filter(~F.col("_seg").isin(pruned) | F.col("_seg").isNull())
         if self._delta_has_files():
             delta_handles = log.filter(F.col("_seg").isNull()).select(HANDLE)
@@ -2664,18 +2681,8 @@ class DeltaStore:
             raise ValueError("read_where_in needs at least one value")
         values = list(values)
         log = self.log()
-        pruned = (
-            self._invidx_pruned_segs(col, values)
-            if "_seg" in log.columns and not self._ddl_shadowed(col)
-            else []
-        )
-        self._record_scan_profile("read_where_in", pruned)
-        if pruned:
-            log = self._log_minus_segments(log, pruned)
-        out = self._snapshot(log, ts)
-        return self._conform_read(out).filter(
-            F.col(col).isin(values)
-        )
+        pruned = self._conj_pruned_segs(log, [(col, "in", values)])
+        return self._pruned_read("read_where_in", log, pruned, ts, F.col(col).isin(values))
 
     # --- late materialization -----------------------------------------------
     #
@@ -2745,20 +2752,7 @@ class DeltaStore:
         fetches payload for survivors of the full conjunction."""
         if not preds:
             raise ValueError("read_late_conj needs at least one predicate")
-        norm: list[tuple] = []
-        for p in preds:
-            if len(p) == 2:
-                c, vals = p
-                if not vals:
-                    raise ValueError(f"empty IN list for column {c!r}")
-                norm.append((c, "in", list(vals)))
-            elif len(p) == 3:
-                c, lo, hi = p
-                if lo is None and hi is None:
-                    raise ValueError(f"unbounded range predicate on {c!r}")
-                norm.append((c, "range", (lo, hi)))
-            else:
-                raise ValueError(f"bad predicate {p!r}")
+        norm = self._norm_conj(preds)
         fields = self.current_fields()
         all_cols = (
             [n for n, _ in fields]
@@ -2775,18 +2769,9 @@ class DeltaStore:
             raise ValueError(f"payload columns {unknown} not in current schema")
 
         log = self.log()
-        if "_seg" in log.columns:
-            pruned: set[int] = set()
-            for c, kind, arg in norm:
-                if self._ddl_shadowed(c):
-                    continue  # stored-byte indexes can't see visible values
-                if kind == "in":
-                    pruned |= set(self._invidx_pruned_segs(c, arg))
-                else:
-                    pruned |= set(self._zm_pruned_segs(c, arg[0], arg[1]))
-            self._record_scan_profile("read_late_conj", pruned)
-            if pruned:
-                log = self._log_minus_segments(log, sorted(pruned))
+        pruned = self._conj_pruned_segs(log, norm)
+        self._record_scan_profile("read_late_conj", pruned)
+        log = self._log_minus_segments(log, sorted(pruned))
 
         # phase 1: the filter-column stream — narrow by construction.
         # Scan the STORED sources (rename chains, generated-expression
@@ -2806,19 +2791,7 @@ class DeltaStore:
             for c in filter_cols:  # column added by DDL, no file has it yet
                 if c not in narrow.columns:
                     narrow = narrow.withColumn(c, F.lit(None))
-        pred = None
-        for c, kind, arg in norm:
-            if kind == "in":
-                term = F.col(c).isin(arg)
-            else:
-                lo, hi = arg
-                term = None
-                if lo is not None:
-                    term = F.col(c) >= F.lit(lo)
-                if hi is not None:
-                    upper = F.col(c) <= F.lit(hi)
-                    term = upper if term is None else (term & upper)
-            pred = term if pred is None else (pred & term)
+        pred = self._conj_expr(norm)
         vis = self._snapshot(narrow, ts)
         if fields is not None:
             # VERSION stays in scope for the ADD-DEFAULT commit gate
@@ -3091,12 +3064,7 @@ class DeltaStore:
             .collect()
         ]
         # delta handles: new/updated rows the postings don't know about
-        delta = self._layer("delta")
-        delta_handles = (
-            [r[HANDLE] for r in delta.select(HANDLE).distinct().collect()]
-            if delta is not None
-            else []
-        )
+        delta_handles = self._delta_handles()
         pool = list(dict.fromkeys(cand_handles + delta_handles))
         self._record_scan_profile("ann_topk", [], inlist=len(pool))
         legs = []
@@ -3114,8 +3082,7 @@ class DeltaStore:
             log = self.log().filter(F.col("_seg").isin(list(uncovered)))
             if delta_handles:
                 log = log.filter(~F.col(HANDLE).isin(delta_handles))
-            vis = self._snapshot(log, ts)
-            legs.append(scored(vis.filter(F.col(col).isNotNull())))
+            legs.append(scored(self._visible(log, ts).filter(F.col(col).isNotNull())))
         out = legs[0]
         for leg in legs[1:]:
             out = out.unionByName(leg)
@@ -3279,28 +3246,31 @@ class DeltaStore:
         from tiflash_spark.pipeline.fulltext import tokenize
 
         w = word.lower()
-        pred = lambda: F.array_contains(tokenize(F.col(col)), w)  # noqa: E731
+        pred = F.array_contains(tokenize(F.col(col)), w)
         pruned, hit_handles = self._fts_prune_state(col, w)
         if hit_handles is not None:
-            delta_handles = (
-                [
-                    r[HANDLE]
-                    for r in self._layer("delta").select(HANDLE).distinct().collect()
-                ]
-                if self._delta_has_files()
-                else []
-            )
-            pool = list(dict.fromkeys(hit_handles + delta_handles))
-            self._record_scan_profile("fts_match_word", pruned, inlist=len(pool))
-            if not pool:
-                return self.read(ts).filter(pred()).limit(0)
-            return self.read_handles(pool, ts=ts).filter(pred())
-        self._record_scan_profile("fts_match_word", pruned)
-        log = self.log()
-        if pruned:
-            log = self._log_minus_segments(log, pruned)
-        out = self._snapshot(log, ts)
-        return self._conform_read(out).filter(pred())
+            return self._hit_pool_read("fts_match_word", hit_handles, pred, ts, pruned)
+        return self._pruned_read("fts_match_word", self.log(), pruned, ts, pred)
+
+    def _delta_handles(self) -> list:
+        """The handles the delta tail touches: one distinct job, none
+        when the delta holds no data file."""
+        if not self._delta_has_files():
+            return []
+        return [r[HANDLE] for r in self._layer("delta").select(HANDLE).distinct().collect()]
+
+    def _hit_pool_read(self, method: str, hits: list, pred, ts: int | None,
+                       pruned=()) -> DataFrame:
+        """The index-served tail of a full-text match: the index's hit
+        handles plus every handle the delta touches (rows the postings
+        do not know), read as point lookups and re-verified by ``pred``
+        on their CURRENT values. An empty pool reads as a typed empty
+        frame."""
+        pool = list(dict.fromkeys(list(hits) + self._delta_handles()))
+        self._record_scan_profile(method, pruned, inlist=len(pool))
+        if not pool:
+            return self.read(ts).filter(pred).limit(0)
+        return self.read_handles(pool, ts=ts).filter(pred)
 
     @staticmethod
     def _norm_conj(preds: list[tuple]) -> list[tuple]:
@@ -3357,41 +3327,20 @@ class DeltaStore:
         if not terms:
             raise ValueError("empty phrase after tokenization")
         norm_phrase = " ".join(terms)
-        pred = lambda: F.concat(  # noqa: E731
+        pred = F.concat(
             F.lit(" "), F.array_join(tokenize(F.col(col)), " "), F.lit(" ")
         ).contains(f" {norm_phrase} ")
         if len(terms) == 1:
-            return self.fts_match_word(col, terms[0], ts=ts).filter(pred())
+            return self.fts_match_word(col, terms[0], ts=ts).filter(pred)
         states = [self._fts_prune_state(col, t) for t in terms]
         hit_sets = [s[1] for s in states]
         if all(h is not None for h in hit_sets):
-            inter = set(hit_sets[0])
-            for h in hit_sets[1:]:
-                inter &= set(h)
-            delta_handles = (
-                [
-                    r[HANDLE]
-                    for r in self._layer("delta").select(HANDLE).distinct().collect()
-                ]
-                if self._delta_has_files()
-                else []
-            )
-            pool = list(dict.fromkeys(sorted(inter) + delta_handles))
-            self._record_scan_profile("fts_match_phrase", [], inlist=len(pool))
-            if not pool:
-                return self.read(ts).filter(pred()).limit(0)
-            return self.read_handles(pool, ts=ts).filter(pred())
+            inter = set(hit_sets[0]).intersection(*hit_sets[1:])
+            return self._hit_pool_read("fts_match_phrase", sorted(inter), pred, ts)
         # scan path: a segment ANY term's postings exclude cannot hold
         # the phrase — union the prunable sets
-        pruned: set[int] = set()
-        for p, _ in states:
-            pruned |= set(p)
-        self._record_scan_profile("fts_match_phrase", sorted(pruned))
-        log = self.log()
-        if pruned:
-            log = self._log_minus_segments(log, sorted(pruned))
-        out = self._snapshot(log, ts)
-        return self._conform_read(out).filter(pred())
+        pruned = sorted(set().union(*(p for p, _ in states)))
+        return self._pruned_read("fts_match_phrase", self.log(), pruned, ts, pred)
 
     def fts_match_boolean(
         self,
@@ -3440,37 +3389,15 @@ class DeltaStore:
         hit_sets = [s[1] for s in states]
         if all(h is not None for h in hit_sets):
             if must:
-                cand = set(hit_sets[0])
-                for h in hit_sets[1:]:
-                    cand &= set(h)
+                cand = set(hit_sets[0]).intersection(*hit_sets[1:])
             else:
-                cand = set().union(*map(set, hit_sets))
-            delta_handles = (
-                [
-                    r[HANDLE]
-                    for r in self._layer("delta").select(HANDLE).distinct().collect()
-                ]
-                if self._delta_has_files()
-                else []
-            )
-            pool = list(dict.fromkeys(sorted(cand) + delta_handles))
-            self._record_scan_profile("fts_match_boolean", [], inlist=len(pool))
-            if not pool:
-                return self.read(ts).filter(pred()).limit(0)
-            return self.read_handles(pool, ts=ts).filter(pred())
+                cand = set().union(*hit_sets)
+            return self._hit_pool_read("fts_match_boolean", sorted(cand), pred(), ts)
         # scan path: prune only by what MUST terms exclude (a segment
         # missing any must term holds no match); should/must_not cannot
         # prune
-        pruned: set[int] = set()
-        if must:
-            for p, _ in states:
-                pruned |= set(p)
-        self._record_scan_profile("fts_match_boolean", sorted(pruned))
-        log = self.log()
-        if pruned:
-            log = self._log_minus_segments(log, sorted(pruned))
-        out = self._snapshot(log, ts)
-        return self._conform_read(out).filter(pred())
+        pruned = sorted(set().union(*(p for p, _ in states))) if must else []
+        return self._pruned_read("fts_match_boolean", self.log(), pruned, ts, pred())
 
     def fts_match_where(
         self,
@@ -3500,30 +3427,10 @@ class DeltaStore:
             full_pred = full_pred & sp
         pruned, hit_handles = self._fts_prune_state(col, w)
         if hit_handles is not None:
-            delta_handles = (
-                [
-                    r[HANDLE]
-                    for r in self._layer("delta").select(HANDLE).distinct().collect()
-                ]
-                if self._delta_has_files()
-                else []
-            )
-            pool = list(dict.fromkeys(hit_handles + delta_handles))
-            if not pool:
-                return self.read(ts).filter(full_pred).limit(0)
-            return self.read_handles(pool, ts=ts).filter(full_pred)
+            return self._hit_pool_read("fts_match_where", hit_handles, full_pred, ts, pruned)
         log = self.log()
-        pruned_set = set(pruned)
-        if "_seg" in log.columns:
-            for c, kind, arg in norm:
-                if kind == "in":
-                    pruned_set |= set(self._invidx_pruned_segs(c, arg))
-                else:
-                    pruned_set |= set(self._zm_pruned_segs(c, arg[0], arg[1]))
-        if pruned_set:
-            log = self._log_minus_segments(log, sorted(pruned_set))
-        out = self._snapshot(log, ts)
-        return self._conform_read(out).filter(full_pred)
+        pruned = sorted(set(pruned) | set(self._conj_pruned_segs(log, norm)))
+        return self._pruned_read("fts_match_where", log, pruned, ts, full_pred)
 
     FTS_OVERFETCH = 4
 
@@ -3646,8 +3553,7 @@ class DeltaStore:
                     ulog = ulog.join(
                         F.broadcast(delta_df), on=HANDLE, how="left_anti"
                     )
-                vis = self._snapshot(ulog, ts)
-                legs.append(self._conform_read(vis))
+                legs.append(self._visible(ulog, ts))
             if not legs:
                 return self.spark.createDataFrame(
                     [], f"{HANDLE} long, n_terms long, bm25 double"

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiflash_spark.operators.mvcc import HANDLE
-from tiflash_spark.sources.delta_store import DeltaStore
+from tiflash_spark.sources.delta_store import DeltaStore, register_view
 
 __all__ = ["PartitionedStore"]
 
@@ -293,29 +293,7 @@ class PartitionedStore:
         hs = [h for h in hs if h is not None]
         return max(hs) if hs else None
 
-    def as_view(self, name: str, ts: int | None = None,
-                mode: str = "normal") -> None:
-        df = self.read(ts, mode=mode)
-        alias = self.handle_alias()
-        if alias:
-            df = df.withColumnRenamed(HANDLE, alias)
-        elif self.table_def() is not None:
-            # no clustered pk: hide the auto rowid from `SELECT *`, the
-            # DeltaStore.as_view contract (MySQL exposes _tidb_rowid only
-            # when named explicitly)
-            df = df.drop(HANDLE)
-        td = self.table_def()
-        if td and td.get("order"):
-            # declared column order for SELECT * (DeltaStore.as_view
-            # contract)
-            first = [c for c in td["order"] if c in df.columns]
-            rest = [c for c in df.columns if c not in first]
-            if first and df.columns != first + rest:
-                df = df.select(*(first + rest))
-        from tiflash_spark.sources.delta_store import _render_time_cols
-
-        df = _render_time_cols(df, td)
-        df.createOrReplaceTempView(name)
+    as_view = register_view
 
     def truncate_table(self) -> None:
         for p in self.parts:

@@ -65,8 +65,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tiflash_spark.operators.mvcc import DELMARK, HANDLE, VERSION
-from tiflash_spark.sources.delta_store import DeltaStore
+from tiflash_spark.operators.mvcc import HANDLE, VERSION
+from tiflash_spark.sources.delta_store import DeltaStore, register_view
 
 
 # root-level store metadata shipped inside every checkpoint: the schema
@@ -581,27 +581,36 @@ class ReadNodeStore:
         the checkpoint watermark (visible at ``ts``). Empty when there
         is no tail or the read is at/below the watermark — historical
         reads are served wholly by the pinned snapshot."""
-        if self._tail is None:
-            return [], []
-        wm = self.watermark
-        if ts is not None and ts <= wm:
-            return [], []
+        tail = self._tail_rows(ts)
+        handles = (
+            [] if tail is None
+            else [r[HANDLE] for r in tail.select(HANDLE).distinct().collect()]
+        )
+        return handles, self._tail_dels(ts)
+
+    def _tail_rows(self, ts: int | None) -> DataFrame | None:
+        """The WN delta rows committed after the checkpoint watermark and
+        visible at ``ts``; None without a tail or for a read at/below the
+        watermark."""
+        if self._tail is None or (ts is not None and ts <= self.watermark):
+            return None
         tail = self._tail._layer("delta")
-        handles = []
-        if tail is not None:
-            flt = F.col(VERSION) > F.lit(wm)
-            if ts is not None:
-                flt = flt & (F.col(VERSION) <= F.lit(ts))
-            handles = [
-                r[HANDLE]
-                for r in tail.filter(flt).select(HANDLE).distinct().collect()
-            ]
-        dels = [
-            d
-            for d in self._tail._range_dels()
-            if d["v"] > wm and (ts is None or d["v"] <= ts)
+        if tail is None:
+            return None
+        flt = F.col(VERSION) > F.lit(self.watermark)
+        if ts is not None:
+            flt = flt & (F.col(VERSION) <= F.lit(ts))
+        return tail.filter(flt)
+
+    def _tail_dels(self, ts: int | None) -> list[dict]:
+        """The WN range tombstones newer than the watermark, visible at
+        ``ts``."""
+        if self._tail is None or (ts is not None and ts <= self.watermark):
+            return []
+        return [
+            d for d in self._tail._range_dels()
+            if d["v"] > self.watermark and (ts is None or d["v"] <= ts)
         ]
-        return handles, dels
 
     def _tail_merge(self, base: DataFrame, pred, ts: int | None) -> DataFrame:
         """Merge the WN tail into a pruned read's result: checkpoint
@@ -661,20 +670,7 @@ class ReadNodeStore:
             return self._ds.ann_topk(col, query, k=k, **kw)
         from tiflash_spark.functions.vector import vec_cosine_similarity
 
-        wm = self.watermark
-        tail = self._tail._layer("delta")
-        tail_handles = (
-            [
-                r[HANDLE]
-                for r in tail.filter(F.col(VERSION) > F.lit(wm))
-                .select(HANDLE)
-                .distinct()
-                .collect()
-            ]
-            if tail is not None
-            else []
-        )
-        tail_dels = [d for d in self._tail._range_dels() if d["v"] > wm]
+        tail_handles, tail_dels = self._tail_state(None)
         base = self._ds.ann_topk(col, query, k=k * 4, **kw)
         if not tail_handles and not tail_dels:
             return base.limit(k)
@@ -739,23 +735,14 @@ class ReadNodeStore:
             col, query, k=k, ts=ts, vis_rows=vis, **kw
         )
 
-    def read(self, ts: int | None = None) -> DataFrame:
-        """Snapshot read at ``ts`` over checkpoint ∪ write-node tail."""
+    def read(self, ts: int | None = None, mode: str = "normal") -> DataFrame:
+        """Snapshot read at ``ts`` over checkpoint ∪ write-node tail: the
+        checkpoint store's own read step over both logs, with the tail's
+        range tombstones added to the checkpoint's."""
         log = self._ds.log()
-        tail_dels: list[dict] = []
-        if self._tail is not None:
-            wm = self.watermark
-            tail = self._tail._layer("delta")
-            if tail is not None:
-                log = log.unionByName(
-                    tail.filter(F.col(VERSION) > F.lit(wm)),
-                    allowMissingColumns=True,
-                )
-            tail_dels = [d for d in self._tail._range_dels() if d["v"] > wm]
-        out = self._ds._snapshot(log, ts)
-        flt = self._ds._range_del_filter(ts, tail_dels) if tail_dels else None
-        if flt is not None:
-            out = out.filter(flt)
-        out = out.drop(VERSION, DELMARK)
-        out = out.drop("_seg") if "_seg" in out.columns else out
-        return self._ds._conform(out, internal=False)
+        tail = self._tail_rows(ts)
+        if tail is not None:
+            log = log.unionByName(tail, allowMissingColumns=True)
+        return self._ds._visible(log, ts, mode, dels=self._tail_dels(ts))
+
+    as_view = register_view
