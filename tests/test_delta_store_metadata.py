@@ -3,7 +3,8 @@ layer's schema is inferred once per version of its files, or once per
 written schema when every footer carries the same one; segment ids are
 read off the listing and the delta's size off the parquet footers. A warm
 snapshot view, lookup or below-threshold maintain therefore builds
-without running a Spark job, and a new file still shows on the next read."""
+without running a Spark job, on a read node with a write-node tail too,
+and a new file still shows on the next read."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import uuid
 
 from tiflash_spark import cache
 from tiflash_spark.operators.mvcc import HANDLE
+from tiflash_spark.sources import remote_store as rs
 from tiflash_spark.sources.delta_store import DeltaStore
 
 SCHEMA = f"{HANDLE} long, v long, price double"
@@ -73,6 +75,31 @@ def test_warm_reads_and_noop_maintain_run_no_job(spark, tmp_path):
     assert store.delta_rows() == 21 + 2 + 2
     after = {r[HANDLE]: r.v for r in store.read().collect()}
     assert len(after) == 210 and after[500] == after[501] == 4
+
+
+def test_read_node_with_tail_builds_pruned_reads_without_a_job(spark, tmp_path):
+    """The write-node tail is part of the read node's delta, so its
+    range, handle and zone-map-pruned reads build like a local store's."""
+    wn = _segmented_store(spark, str(tmp_path / "wn"))
+    rs.checkpoint(wn, str(tmp_path / "s3"), version=3)
+    rn = rs.ReadNodeStore(spark, str(tmp_path / "s3"), tail_from=wn)
+    wn.write_batch(_batch(spark, [7, 150, 500], 4), version=4)
+    wn.delete_range(100, 110, version=5)
+    frames = {}
+
+    def build(store):
+        frames[store] = (
+            store.read_range(90, 220),
+            store.read_handles([1, 5, 7, 105, 195, 500]),
+            store.read_where("v", lo=4),
+        )
+
+    build(rn)  # warms the layer schema memos of both nodes
+    assert _jobs(spark, lambda: build(rn)) == 0
+    build(wn)
+    for got, want in zip(frames[rn], frames[wn]):
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert {r[HANDLE] for r in frames[rn][2].collect()} == {7, 150, 500}
 
 
 def test_footer_delta_rows_match_layer_count(spark, tmp_path):

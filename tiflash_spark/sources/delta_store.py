@@ -1227,16 +1227,14 @@ class DeltaStore:
     def _write_range_dels(self, dels: list[dict], delta_dir: str | None = None) -> None:
         _write_json(os.path.join(delta_dir or self.delta_path(), "_RANGE_DELS"), dels)
 
-    def _range_del_filter(self, ts: int | None, dels: list[dict] = ()):
+    def _range_del_filter(self, ts: int | None):
         """One codegen predicate hiding rows covered by a visible range
         tombstone: handle in [lo, hi) AND row version <= tombstone
         version (and tombstone version <= read ts). None when there are
         no applicable tombstones. The list is small by construction —
-        compaction GCs applied entries, like the reference. ``dels`` adds
-        tombstones to the store's own (a read node merges a write node's
-        newer tombstones into its pinned checkpoint snapshot)."""
+        compaction GCs applied entries, like the reference."""
         cond = None
-        for d in self._range_dels() + list(dels):
+        for d in self._range_dels():
             if ts is not None and d["v"] > ts:
                 continue  # tombstone not visible at this snapshot
             covered = (
@@ -1247,17 +1245,16 @@ class DeltaStore:
             cond = covered if cond is None else (cond | covered)
         return None if cond is None else ~cond
 
-    def _snapshot(self, log: DataFrame, ts: int | None, dels: list[dict] = ()) -> DataFrame:
+    def _snapshot(self, log: DataFrame, ts: int | None) -> DataFrame:
         """The MVCC pick: the newest visible version per handle at ``ts``
-        (operators/mvcc.py), then the visible range tombstones (the
-        store's plus ``dels``). The frame keeps its internals, which the
-        late-materialization scans project themselves."""
+        (operators/mvcc.py), then the visible range tombstones. The frame
+        keeps its internals, which the late-materialization scans project
+        themselves."""
         out = snapshot_read(log, read_ts=ts)
-        flt = self._range_del_filter(ts, dels)
+        flt = self._range_del_filter(ts)
         return out if flt is None else out.filter(flt)
 
-    def _visible(self, log: DataFrame, ts: int | None, mode: str = "normal",
-                 dels: list[dict] = ()) -> DataFrame:
+    def _visible(self, log: DataFrame, ts: int | None, mode: str = "normal") -> DataFrame:
         """The read step every front end shares (reference
         DMVersionFilterBlockInputStream per ReadMode): the MVCC pick with
         range tombstones in normal mode, or fastscan's delete-mark filter
@@ -1265,7 +1262,7 @@ class DeltaStore:
         VERSION stays in scope through the conform (the ADD-COLUMN
         default gate needs the row's commit version) and is dropped
         after it with the other internals."""
-        out = fast_scan(log) if mode == "fast" else self._snapshot(log, ts, dels)
+        out = fast_scan(log) if mode == "fast" else self._snapshot(log, ts)
         drops = [DELMARK] + (["_seg"] if "_seg" in out.columns else [])
         conf = self._conform(out.drop(*drops), internal=False)
         return conf.drop(VERSION) if VERSION in conf.columns else conf
@@ -3198,10 +3195,10 @@ class DeltaStore:
         Handle-level path only when every segment is covered (the
         reference's row bitmap); any failure degrades to scan."""
         meta = self._index_meta("fulltext").get(col)
-        log = self.log()
+        segs = self._all_seg_ids()
         pruned: list[int] = []
         hit_handles: list | None = None
-        if meta and meta["segs"] and "_seg" in log.columns:
+        if meta and meta["segs"] and segs:
             covered = {int(s) for s in meta["segs"]}
             try:
                 idx = self.spark.read.parquet(self._index_dir("fulltext", col))
@@ -3218,7 +3215,7 @@ class DeltaStore:
                 if len(pairs) <= self.LM_INLIST_LIMIT:
                     hit = {int(r.s) for r in pairs}
                     pruned = sorted(covered - hit)
-                    if covered == self._all_seg_ids():
+                    if covered == segs:
                         hit_handles = [r[HANDLE] for r in pairs]
                 else:
                     # unbounded hit-list: fall back to the segment-only
@@ -3442,7 +3439,6 @@ class DeltaStore:
         ts: int | None = None,
         k1: float = 1.2,
         b: float = 0.75,
-        vis_rows: DataFrame | None = None,
         preds: list[tuple] | None = None,
     ) -> DataFrame:
         """Top-k (handle, n_terms, bm25) by BM25 over the snapshot
@@ -3461,8 +3457,7 @@ class DeltaStore:
         if not terms:
             raise ValueError("empty query after tokenization")
         meta = self._index_meta("fulltext").get(col)
-        log = self.log()
-        seg_aware = meta and meta["segs"] and "_seg" in log.columns
+        seg_aware = meta and meta["segs"] and self._all_seg_ids()
         covered = {int(s) for s in meta["segs"]} if seg_aware else set()
         # corpus stats: combined per-segment build-time stats
         if covered:
@@ -3470,23 +3465,6 @@ class DeltaStore:
             sum_dl = sum(m[1] for m in meta["stats"].values())
         else:
             n_docs = sum_dl = 0
-        if vis_rows is not None:
-            # caller-supplied visible rows (e.g. a read node's tail-merged
-            # view): score them directly; stats come from the index when
-            # covered, else exactly from the supplied rows
-            if not covered:
-                stats_src = vis_rows.filter(F.col(col).isNotNull()).agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.coalesce(
-                        F.sum(F.size(tokenize(F.col(col)))), F.lit(0)
-                    ).alias("t"),
-                ).collect()[0]
-                n_docs, sum_dl = int(stats_src.n), int(stats_src.t)
-            if preds:
-                vis_rows = vis_rows.filter(self._conj_expr(self._norm_conj(preds)))
-            return self._fts_score_rows(
-                vis_rows, col, terms, k, n_docs, sum_dl, covered, k1, b
-            )
         cand_truncated = False
         if covered:
             try:

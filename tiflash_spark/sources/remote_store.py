@@ -35,24 +35,26 @@ rename/immutable-file based so the layout maps 1:1 onto object keys):
   protocol: a crash mid-upload leaves an orphan data dir that the next
   checkpoint sweeps, never a manifest naming missing files.
 - ``ReadNodeStore`` pins the latest manifest at construction (a
-  DisaggSnapshot): all reads — full MVCC scans, handle/range/equality
-  pruned reads, ANN — serve that immutable snapshot with the exact
-  same code paths as a local store, because the checkpoint IS a valid
-  store directory. ``refresh()`` re-pins; ``tail_from=<write node>``
-  additionally merges the WN's delta rows and range tombstones NEWER
-  than the checkpoint watermark into full reads, the RN→WN memtable
-  fetch from the design doc.
+  DisaggSnapshot): every read — full MVCC scans, handle/range/equality
+  pruned reads, full-text and ANN — serves that immutable snapshot with
+  the exact same code paths as a local store, because the checkpoint IS
+  a valid store directory. ``refresh()`` re-pins; ``tail_from=<write
+  node>`` is the RN→WN memtable fetch from the design doc: the WN's
+  delta rows and range tombstones NEWER than the checkpoint watermark
+  become part of the pinned store's delta, so the segment read path
+  runs once over checkpoint ∪ tail — no read method merges the tail on
+  its own.
 - ``restore_store`` is FastAddPeer: materialize a brand-new WRITABLE
   write node from the latest checkpoint in O(hardlink) time.
 
 Scale notes: a checkpoint never reads or shuffles data (pure metadata +
 link/copy of immutable files); read nodes scale horizontally because
 they hold no state beyond the pinned manifest; the watermark guarantees
-tail-merge correctness (a delta row is merged from the WN iff its
-commit version is strictly above what the checkpoint already contains,
-so a row is never double-counted — MVCC winner-pick dedups the overlap
-anyway, making the filter an optimization AND a correctness fence for
-delete tombstones).
+tail correctness (a delta row or range tombstone is taken from the WN
+iff its commit version is strictly above what the checkpoint already
+contains, so a row is never double-counted — MVCC winner-pick dedups
+the overlap anyway, making the filter an optimization AND a correctness
+fence for delete tombstones).
 """
 
 from __future__ import annotations
@@ -65,8 +67,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tiflash_spark.operators.mvcc import HANDLE, VERSION
-from tiflash_spark.sources.delta_store import DeltaStore, register_view
+from tiflash_spark.operators.mvcc import VERSION
+from tiflash_spark.sources.delta_store import DeltaStore
 
 
 # root-level store metadata shipped inside every checkpoint: the schema
@@ -484,29 +486,64 @@ def adopt_remote_compaction(
     return store._superblock()["epoch"]
 
 
+class _TailedCheckpoint(DeltaStore):
+    """A pinned checkpoint whose delta also holds the write node's tail:
+    the write node's delta rows and range tombstones committed after the
+    checkpoint watermark. Every read of :class:`DeltaStore` then serves
+    checkpoint ∪ tail through its own MVCC pick, delta rescue and
+    delta-handle pool."""
+
+    def __init__(self, spark: SparkSession, path: str, tail: DeltaStore,
+                 watermark: int):
+        super().__init__(spark, path)
+        self._tail = tail
+        self._watermark = watermark
+
+    def _layer(self, name: str) -> DataFrame | None:
+        own = super()._layer(name)
+        tail = self._tail._layer(name) if name == "delta" else None
+        if tail is None:
+            return own
+        tail = tail.filter(F.col(VERSION) > F.lit(self._watermark))
+        return tail if own is None else own.unionByName(tail, allowMissingColumns=True)
+
+    def _delta_has_files(self) -> bool:
+        return super()._delta_has_files() or self._tail._delta_has_files()
+
+    def _range_dels(self, delta_dir: str | None = None) -> list[dict]:
+        own = super()._range_dels(delta_dir)
+        if delta_dir is not None:
+            return own
+        return own + [d for d in self._tail._range_dels() if d["v"] > self._watermark]
+
+
 class ReadNodeStore:
     """A stateless read node: serves MVCC reads from a pinned remote
-    checkpoint (DisaggSnapshot analogue). All pruned/indexed read paths
-    of :class:`DeltaStore` work unchanged because the checkpoint is a
+    checkpoint (DisaggSnapshot analogue). Every read method of
+    :class:`DeltaStore` works unchanged because the checkpoint is a
     complete store directory; mutations raise :class:`ReadOnlyStoreError`.
 
-    ``tail_from``: the live write node. Reads then merge the WN's delta
-    rows and range tombstones with commit version strictly above the
-    checkpoint watermark — the design doc's "RN asks WN for the
-    memtable tail" — giving read-your-writes freshness without
-    re-uploading. Pruned/indexed reads stay index-served from the
-    checkpoint and post-merge the (small) tail at result level
-    (``_tail_merge``); ANN over-fetches checkpoint candidates and
-    re-scores through the merged view. Historical reads at or below the
-    watermark are served wholly by the pinned snapshot.
+    ``tail_from``: the live write node. Its delta rows and range
+    tombstones with commit version strictly above the checkpoint
+    watermark — the design doc's "RN asks WN for the memtable tail" —
+    are read as part of the pinned store's delta, giving read-your-writes
+    freshness without re-uploading: full, pruned, index-served, ANN and
+    full-text reads all see them through the store's own delta handling.
+    Historical reads at or below the watermark see none of the tail, as
+    every tail row and tombstone is newer than the read.
     """
 
     _MUTATORS = (
-        "write_batch", "delete_range", "compact", "compact_range_segments",
-        "compact_segments_incremental", "ingest_snapshot", "split_segment",
-        "merge_segments", "maintain", "add_column", "drop_column",
+        "write_batch", "write_log_batch", "delete_range", "truncate_table",
+        "compact", "compact_range_segments", "compact_segments_incremental",
+        "ingest_snapshot", "split_segment", "merge_segments",
+        "rebalance_segments", "maintain",
+        "write_table_def", "update_table_def", "add_column", "drop_column",
+        "rename_column", "modify_column", "set_column_nullable",
+        "set_column_default", "add_generated_column",
         "build_zonemap", "build_inverted_index", "build_vector_index",
-        "build_fulltext_index",
+        "build_fulltext_index", "register_index_name", "drop_index",
+        "drop_index_by_name",
     )
 
     def __init__(
@@ -553,12 +590,14 @@ class ReadNodeStore:
                 self.last_sync_downloads = self.remote_root.sync_tree_to_local(
                     f"{self.store_id}/{m['dir']}", local, reuse_from=prev_local
                 )
-                self._ds = DeltaStore(self.spark, local)
             else:
-                ckpt = os.path.join(
+                local = os.path.join(
                     _store_dir(self.remote_root, self.store_id), m["dir"]
                 )
-                self._ds = DeltaStore(self.spark, ckpt)
+            self._ds = (
+                DeltaStore(self.spark, local) if self._tail is None
+                else _TailedCheckpoint(self.spark, local, self._tail, m["watermark"])
+            )
             self.manifest = m
         return m
 
@@ -575,174 +614,3 @@ class ReadNodeStore:
                 "pinned immutable checkpoint"
             )
         return getattr(self._ds, name)
-
-    def _tail_state(self, ts: int | None) -> tuple[list, list[dict]]:
-        """Handles and range tombstones the WN tail contributes beyond
-        the checkpoint watermark (visible at ``ts``). Empty when there
-        is no tail or the read is at/below the watermark — historical
-        reads are served wholly by the pinned snapshot."""
-        tail = self._tail_rows(ts)
-        handles = (
-            [] if tail is None
-            else [r[HANDLE] for r in tail.select(HANDLE).distinct().collect()]
-        )
-        return handles, self._tail_dels(ts)
-
-    def _tail_rows(self, ts: int | None) -> DataFrame | None:
-        """The WN delta rows committed after the checkpoint watermark and
-        visible at ``ts``; None without a tail or for a read at/below the
-        watermark."""
-        if self._tail is None or (ts is not None and ts <= self.watermark):
-            return None
-        tail = self._tail._layer("delta")
-        if tail is None:
-            return None
-        flt = F.col(VERSION) > F.lit(self.watermark)
-        if ts is not None:
-            flt = flt & (F.col(VERSION) <= F.lit(ts))
-        return tail.filter(flt)
-
-    def _tail_dels(self, ts: int | None) -> list[dict]:
-        """The WN range tombstones newer than the watermark, visible at
-        ``ts``."""
-        if self._tail is None or (ts is not None and ts <= self.watermark):
-            return []
-        return [
-            d for d in self._tail._range_dels()
-            if d["v"] > self.watermark and (ts is None or d["v"] <= ts)
-        ]
-
-    def _tail_merge(self, base: DataFrame, pred, ts: int | None) -> DataFrame:
-        """Merge the WN tail into a pruned read's result: checkpoint
-        rows of tail-touched handles are replaced by their tail-merged
-        MVCC winners (updates win, deletes drop, new rows appear), and
-        tombstones newer than the watermark hide checkpoint rows — every
-        checkpoint row's version is <= the watermark, so a newer range
-        tombstone covers it unconditionally within its handle range."""
-        handles, dels = self._tail_state(ts)
-        if not handles and not dels:
-            return base
-        out = base
-        for d in dels:
-            out = out.filter(
-                ~((F.col(HANDLE) >= F.lit(d["lo"])) & (F.col(HANDLE) < F.lit(d["hi"])))
-            )
-        if handles:
-            out = out.filter(~F.col(HANDLE).isin(handles))
-            fresh = self.read(ts).filter(F.col(HANDLE).isin(handles)).filter(pred)
-            out = out.unionByName(fresh)
-        return out
-
-    def read_range(self, lo, hi, ts: int | None = None) -> DataFrame:
-        base = self._ds.read_range(lo, hi, ts)
-        return self._tail_merge(
-            base, (F.col(HANDLE) >= F.lit(lo)) & (F.col(HANDLE) < F.lit(hi)), ts
-        )
-
-    def read_handles(self, handles: list, ts: int | None = None) -> DataFrame:
-        base = self._ds.read_handles(handles, ts)
-        return self._tail_merge(base, F.col(HANDLE).isin(list(handles)), ts)
-
-    def read_where(self, col: str, lo=None, hi=None, ts: int | None = None) -> DataFrame:
-        base = self._ds.read_where(col, lo, hi, ts)
-        pred = F.lit(True)
-        if lo is not None:
-            pred = pred & (F.col(col) >= F.lit(lo))
-        if hi is not None:
-            pred = pred & (F.col(col) <= F.lit(hi))
-        return self._tail_merge(base, pred, ts)
-
-    def read_where_in(self, col: str, values: list, ts: int | None = None) -> DataFrame:
-        base = self._ds.read_where_in(col, values, ts)
-        return self._tail_merge(base, F.col(col).isin(list(values)), ts)
-
-    def ann_topk(self, col: str, query: list[float], k: int = 10, **kw) -> DataFrame:
-        """Snapshot-consistent ANN over checkpoint ∪ write-node tail:
-        the checkpoint index supplies candidates (over-fetched so tail
-        deletes cannot under-fill k), the tail's handles are scored
-        exactly, and everything is re-scored through the tail-merged
-        MVCC view — updates win, deletes drop, brand-new vectors rank.
-        This is the reference read-node model: index candidates + exact
-        search of the un-indexed memtable, merged under one snapshot
-        (DeltaMerge/Remote/RNSegmentInputStream + the vector-index
-        delta-exact-search posture)."""
-        if self._tail is None:
-            return self._ds.ann_topk(col, query, k=k, **kw)
-        from tiflash_spark.functions.vector import vec_cosine_similarity
-
-        tail_handles, tail_dels = self._tail_state(None)
-        base = self._ds.ann_topk(col, query, k=k * 4, **kw)
-        if not tail_handles and not tail_dels:
-            return base.limit(k)
-        pool = list(
-            dict.fromkeys([r[HANDLE] for r in base.select(HANDLE).collect()]
-                          + tail_handles)
-        )
-        if not pool:
-            return base.limit(0)
-        qlit = F.array(*[F.lit(float(v)) for v in query])
-        vis = self.read().filter(
-            F.col(HANDLE).isin(pool) & F.col(col).isNotNull()
-        )
-        return (
-            vis.select(
-                HANDLE,
-                F.round(
-                    vec_cosine_similarity(
-                        F.transform(F.col(col), lambda x: x.cast("double")), qlit
-                    ),
-                    6,
-                ).alias("score"),
-            )
-            .orderBy(F.col("score").desc(), F.col(HANDLE))
-            .limit(k)
-        )
-
-    def fts_match_word(self, col: str, word: str, ts: int | None = None) -> DataFrame:
-        """Full-text match over checkpoint ∪ write-node tail: the pinned
-        index prunes the checkpoint read; tail-touched handles are
-        re-evaluated on their tail-merged winners with the same
-        tokenizer (the FullTextIndex read-node posture — index hits +
-        exact search of the un-indexed tail)."""
-        from tiflash_spark.pipeline.fulltext import tokenize
-
-        base = self._ds.fts_match_word(col, word, ts)
-        return self._tail_merge(
-            base, F.array_contains(tokenize(F.col(col)), word.lower()), ts
-        )
-
-    def fts_search_scored(
-        self, col: str, query: str, k: int = 10, ts: int | None = None, **kw
-    ) -> DataFrame:
-        """BM25 search over checkpoint ∪ tail: checkpoint index supplies
-        over-fetched candidates, tail handles join the pool, and the
-        whole pool is re-scored on the tail-merged visible values (df /
-        N / avgdl from the pinned index stats — scores for brand-new
-        tail docs use the same checkpoint statistics, the reference's
-        index-stats posture)."""
-        handles, dels = self._tail_state(ts)
-        if not handles and not dels:
-            return self._ds.fts_search_scored(col, query, k=k, ts=ts, **kw)
-        base = self._ds.fts_search_scored(col, query, k=k * 4, ts=ts, **kw)
-        pool = list(
-            dict.fromkeys([r[HANDLE] for r in base.select(HANDLE).collect()]
-                          + handles)
-        )
-        if not pool:
-            return base.limit(0)
-        vis = self.read(ts).filter(F.col(HANDLE).isin(pool))
-        return self._ds.fts_search_scored(
-            col, query, k=k, ts=ts, vis_rows=vis, **kw
-        )
-
-    def read(self, ts: int | None = None, mode: str = "normal") -> DataFrame:
-        """Snapshot read at ``ts`` over checkpoint ∪ write-node tail: the
-        checkpoint store's own read step over both logs, with the tail's
-        range tombstones added to the checkpoint's."""
-        log = self._ds.log()
-        tail = self._tail_rows(ts)
-        if tail is not None:
-            log = log.unionByName(tail, allowMissingColumns=True)
-        return self._ds._visible(log, ts, mode, dels=self._tail_dels(ts))
-
-    as_view = register_view
