@@ -368,9 +368,9 @@ def test_tail_aware_ann_on_read_node(spark, tmp_path):
 
 def test_tail_aware_pruned_reads(spark, wn, tmp_path):
     """Pruned reads with a WN tail: index-served from the checkpoint,
-    tail post-merged — updates win, deletes drop, new rows appear, and
-    newer range tombstones hide checkpointed rows; historical reads at
-    the watermark stay pinned."""
+    with the tail read as delta — updates win, deletes drop, new rows
+    appear, and newer range tombstones hide checkpointed rows; historical
+    reads at the watermark stay pinned."""
     remote = str(tmp_path / "s3")
     rs.checkpoint(wn, remote, version=2)
     rn = ReadNodeStore(spark, remote, tail_from=wn)
