@@ -34,7 +34,9 @@ SHOW = [
     ("q2_min_cost_supplier", "correlated min over partsupp: single-pass window MIN (r10: the agg+join-back built the 5-table tree twice)"),
     ("fulltext_search",
      "persisted term-bucketed index: bucket-pruned lookup + doc agg (no corpus scan)"),
-    ("fulltext_bm25", "BM25 over the persisted index: term rows + doclen join; (n_docs, avgdl) read from the at-rest stats row (r10)"),
+    ("fulltext_bm25",
+     "BM25 in one scan of the persisted index: tf and dl on the posting row, "
+     "df_t a bucket-local window count, (n_docs, avgdl) as literals"),
     ("q18_large_orders", "agg-subquery semi pattern: shuffle reuse on l_orderkey"),
     ("window_ranking", "7 window fns sharing one exchange"),
     ("rollup_revenue", "Expand node for grouping sets"),

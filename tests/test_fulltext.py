@@ -64,10 +64,10 @@ def test_bucketed_postings_join_no_shuffle(spark, postings, tmp_path):
     """Term-bucketed posting lists co-locate a term↔term intersection:
     at most the final agg exchanges (the index bucket join itself must
     not shuffle) — the analogue of per-pack index locality."""
-    from tiflash_spark.pipeline.fulltext import save_postings_bucketed
     from tiflash_spark.plans.explain import exchange_count
 
-    save_postings_bucketed(postings.drop("positions"), "ft_idx_test", buckets=4)
+    w = postings.drop("positions").write.mode("overwrite").bucketBy(4, "term").sortBy("term")
+    w.saveAsTable("ft_idx_test")
     idx = spark.table("ft_idx_test")
     a = idx.filter(F.col("term") == "quick")
     b = idx.filter(F.col("term") == "fox")
@@ -82,10 +82,9 @@ def test_keyword_search_on_bucketed_index_is_lookup_shaped(spark, postings, tmp_
     """The MEASURED search plan over the at-rest index: bucket-pruned term
     filter + one doc_id agg + TopN — at most 2 exchanges, no full-corpus
     rescan (the index build is amortized at write time)."""
-    from tiflash_spark.pipeline.fulltext import save_postings_bucketed
     from tiflash_spark.plans.explain import exchange_count
 
-    save_postings_bucketed(postings, "ft_idx_plan", buckets=4)
+    postings.write.mode("overwrite").bucketBy(4, "term").sortBy("term").saveAsTable("ft_idx_plan")
     idx = spark.table("ft_idx_plan")
     q = keyword_search(idx, ["quick", "fox"], mode="all", k=5)
     assert exchange_count(q) <= 2
@@ -99,19 +98,20 @@ def test_bm25_scores_and_ranking_divergence(spark):
     the rare term; scores match a hand computation."""
     import math
 
-    from tiflash_spark.pipeline.fulltext import bm25_search, build_doc_lengths
+    from tiflash_spark.pipeline.fulltext import bm25_search, corpus_stats_of
 
-    docs = [
+    docs = spark.createDataFrame([
         Row(doc_id=1, text="common common common common common common"),
         Row(doc_id=2, text="common rare"),
         Row(doc_id=3, text="common filler filler"),
         Row(doc_id=4, text="filler filler filler filler"),
-    ]
-    postings = build_postings(spark.createDataFrame(docs)).persist()
-    doclen = build_doc_lengths(postings)
+    ])
+    postings = build_postings(docs).persist()
+    stats = corpus_stats_of(docs)
+    assert stats == (4.0, 15 / 4)
     got = {
         r.doc_id: (r.n_terms, r.bm25)
-        for r in bm25_search(postings, doclen, ["common", "rare"], k=10).collect()
+        for r in bm25_search(postings, ["common", "rare"], stats, k=10).collect()
     }
 
     # hand computation (k1=1.2, b=0.75; N=4, avgdl=(6+2+3+4)/4)
@@ -125,6 +125,7 @@ def test_bm25_scores_and_ranking_divergence(spark):
     df_by = {"common": 3, "rare": 1}
     assert got[1][1] == pytest.approx(score({"common": 6}, 6, df_by), abs=1e-4)
     assert got[2][1] == pytest.approx(score({"common": 1, "rare": 1}, 2, df_by), abs=1e-4)
+    assert got[3][1] == pytest.approx(score({"common": 1}, 3, df_by), abs=1e-4)
     assert got[2] == (2, got[2][1])
     # ranking divergence: doc 1 wins on raw tf, doc 2 wins on BM25
     tf_rank = [r.doc_id for r in keyword_search(postings, ["common", "rare"], "any", 10).collect()]
@@ -133,11 +134,35 @@ def test_bm25_scores_and_ranking_divergence(spark):
     assert bm_rank[0] == 2
 
 
+def _bm25_joined(postings, terms, k1=1.2, b=0.75):
+    """BM25 in its join form: doc lengths as the per-doc SUM(tf), df_t
+    and (N, avgdl) aggregated and joined back — the formulation the
+    one-scan bm25_search must reproduce row for row."""
+    hits = postings.filter(F.col("term").isin(*terms)).select("term", "doc_id", "tf")
+    df_t = hits.groupBy("term").agg(F.count("doc_id").alias("df"))
+    doclen = postings.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
+    corpus = doclen.agg(
+        F.count(F.lit(1)).cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")
+    )
+    idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
+    norm = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+    contrib = idf * (F.col("tf") * F.lit(k1 + 1.0)) / (F.col("tf") + norm)
+    scored = (
+        hits.join(df_t, "term").join(doclen, "doc_id").crossJoin(corpus)
+        .groupBy("doc_id")
+        .agg(
+            F.count("term").cast("long").alias("n_terms"),
+            F.round(F.sum(contrib), 4).alias("bm25"),
+        )
+    )
+    return corpus, scored.orderBy(F.col("bm25").desc(), F.col("doc_id"))
+
+
 def test_corpus_stats_persisted_matches_inline(spark, tmp_path, monkeypatch):
-    """corpus_stats (round 10: (n_docs, avgdl) stored beside the index at
-    build time) returns the same values as the inline doclen aggregate,
-    persists to a 1-row parquet, and yields the same BM25 result when
-    passed to bm25_search."""
+    """corpus_stats ((n_docs, avgdl) as plan literals, fetched once per
+    corpus version) equals the count/avg of the per-doc SUM(tf) doc
+    lengths, and bm25_search with it returns exactly the rows of the
+    join form that aggregates doc lengths and stats from the postings."""
     import os
     import shutil
 
@@ -147,40 +172,41 @@ def test_corpus_stats_persisted_matches_inline(spark, tmp_path, monkeypatch):
     docs = spark.createDataFrame(DOCS)
     monkeypatch.setattr(ft, "load_table", lambda _s, _d, _n: docs)
     sf_dir = str(tmp_path / "sfY")
-    postings, doclen = ft.index_tables(spark, sf_dir)
+    postings = ft.index_tables(spark, sf_dir)
+    table = f"ft_postings_{cache.sf_tag(sf_dir)}"
     try:
-        stats = ft.corpus_stats(spark, sf_dir, doclen)
-        loc = os.path.join(cache.warehouse_path(spark), f"ft_stats_{cache.sf_tag(sf_dir)}")
-        assert os.path.isdir(loc)
-        inline = doclen.agg(
-            F.count(F.lit(1)).cast("double").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-        ).collect()[0]
-        got = stats.collect()
-        assert len(got) == 1
-        assert (got[0].n_docs, got[0].avgdl) == (inline.n_docs, inline.avgdl)
-        with_stats = ft.bm25_search(
-            postings, doclen, ["quick", "fox"], k=10, stats=stats
-        ).collect()
-        without = ft.bm25_search(postings, doclen, ["quick", "fox"], k=10).collect()
-        assert with_stats == without
+        stats = ft.corpus_stats(spark, sf_dir)
+        corpus, joined = _bm25_joined(postings, ["quick", "fox"])
+        inline = corpus.collect()[0]
+        assert stats == (inline.n_docs, inline.avgdl)
+        got = ft.bm25_search(postings, ["quick", "fox"], stats, k=10).collect()
+        assert got == joined.limit(10).collect()
+        assert len(got) == 3
     finally:
-        for t in (f"ft_postings_{cache.sf_tag(sf_dir)}", f"ft_doclen_{cache.sf_tag(sf_dir)}"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            shutil.rmtree(
-                os.path.join(cache.warehouse_path(spark), t.lower()), ignore_errors=True
-            )
-        shutil.rmtree(
-            os.path.join(cache.warehouse_path(spark), f"ft_stats_{cache.sf_tag(sf_dir)}"),
-            ignore_errors=True,
-        )
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        shutil.rmtree(os.path.join(cache.warehouse_path(spark), table.lower()), ignore_errors=True)
+
+
+def _jobs(spark, fn) -> int:
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"fulltext-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "fulltext jobs")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_index_tables_reregister_from_files(spark, tmp_path, monkeypatch):
     """index_tables survives a catalog wipe: dropping the (external) table
-    entries and calling again re-registers from the on-disk bucketed files
-    — no rebuild, bucket locality preserved."""
+    entry and calling again re-registers from the on-disk bucketed files
+    — no rebuild (the files are untouched), doc lengths and bucket
+    locality preserved."""
     import os
+    import shutil
 
     from tiflash_spark import cache
     from tiflash_spark.pipeline import fulltext as ft
@@ -191,27 +217,95 @@ def test_index_tables_reregister_from_files(spark, tmp_path, monkeypatch):
         ft, "load_table", lambda _s, _d, _n: docs
     )
     sf_dir = str(tmp_path / "sfX")
-    p1, d1 = ft.index_tables(spark, sf_dir)
+    table = f"ft_postings_{cache.sf_tag(sf_dir)}"
+    p1 = ft.index_tables(spark, sf_dir)
     n_postings = p1.count()
+    doc_lengths = {(r.doc_id, r.dl) for r in p1.select("doc_id", "dl").collect()}
     wh = cache.warehouse_path(spark)
-    loc = os.path.join(wh, f"ft_postings_{cache.sf_tag(sf_dir)}".lower())
+    loc = os.path.join(wh, table.lower())
     assert os.path.isdir(loc)
+    files = {f: os.stat(os.path.join(loc, f)).st_mtime_ns for f in os.listdir(loc)}
     # external tables: DROP keeps files
-    spark.sql(f"DROP TABLE ft_postings_{cache.sf_tag(sf_dir)}")
-    spark.sql(f"DROP TABLE ft_doclen_{cache.sf_tag(sf_dir)}")
+    spark.sql(f"DROP TABLE {table}")
     assert os.path.isdir(loc)
-    p2, d2 = ft.index_tables(spark, sf_dir)
+    p2 = ft.index_tables(spark, sf_dir)
+    assert {f: os.stat(os.path.join(loc, f)).st_mtime_ns for f in os.listdir(loc)} == files
     assert p2.count() == n_postings
-    assert d2.count() == len({r.doc_id for r in p1.select("doc_id").collect()})
+    assert {(r.doc_id, r.dl) for r in p2.select("doc_id", "dl").collect()} == doc_lengths
     # re-registered table still answers lookup-shaped plans
     q = keyword_search(p2, ["quick", "fox"], mode="all", k=5)
     assert exchange_count(q) <= 2
     assert {r.doc_id for r in q.collect()} == {1, 2, 4}
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    shutil.rmtree(loc, ignore_errors=True)
+
+
+def test_postings_carry_doc_length(spark):
+    """``dl`` on every posting row is the document's token count: the
+    SUM(tf) of its rows and size(tokenize(text)). A document with empty,
+    punctuation-only or NULL text has no postings and is not counted in
+    n_docs."""
+    import re
+
+    from tiflash_spark.pipeline.fulltext import TOKEN_RE, corpus_stats_of
+
+    rows = [(r.doc_id, r.text) for r in DOCS] + [(6, ""), (7, "?! --"), (8, None)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    postings = build_postings(docs)
+    per_doc = {
+        r.doc_id: (r.dl_min, r.dl_max, r.sum_tf)
+        for r in postings.groupBy("doc_id")
+        .agg(
+            F.min("dl").alias("dl_min"),
+            F.max("dl").alias("dl_max"),
+            F.sum("tf").alias("sum_tf"),
+        )
+        .collect()
+    }
+    want = {}
+    for d, text in rows:
+        n = len([t for t in re.split(TOKEN_RE, (text or "").lower()) if t])
+        if n:
+            want[d] = n
+    assert per_doc == {d: (n, n, n) for d, n in want.items()}
+    assert dict(postings.dtypes)["dl"] == "bigint"
+    assert corpus_stats_of(docs) == (float(len(want)), sum(want.values()) / len(want))
+
+
+def test_bm25_cold_build_jobs_and_one_postings_scan(spark, tmp_path):
+    """A cold fulltext_bm25 over a freshly landed corpus builds its index
+    in one pass and its stats in one aggregate (≤ 4 build jobs: each is a
+    shuffle stage plus its result) and executes in ≤ 2 jobs; a second
+    build on the same copy runs none. The executed plan's one scan is
+    the postings table, and it broadcasts nothing."""
+    import os
     import shutil
 
-    for t in (f"ft_postings_{cache.sf_tag(sf_dir)}", f"ft_doclen_{cache.sf_tag(sf_dir)}"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(wh, t.lower()), ignore_errors=True)
+    from tests.conftest import SF_SMALL
+    from tiflash_spark import cache
+    from tiflash_spark.pipeline import fulltext as ft
+
+    sf_dir = tmp_path / "sf_ft_jobs"
+    sf_dir.mkdir()
+    shutil.copy(os.path.join(SF_SMALL, "documents.parquet"), sf_dir / "documents.parquet")
+    sf_dir = str(sf_dir)
+    # landing registers the table, which reads its footer schema
+    ft.load_table(spark, sf_dir, "documents")
+    table = f"ft_postings_{cache.sf_tag(sf_dir)}"
+    try:
+        frames = []
+        assert _jobs(spark, lambda: frames.append(ft.fulltext_bm25(spark, sf_dir))) <= 4
+        rows = []
+        assert _jobs(spark, lambda: rows.extend(frames[0].collect())) <= 2
+        assert _jobs(spark, lambda: ft.fulltext_bm25(spark, sf_dir)) == 0
+        assert rows == ft.fulltext_bm25(spark, SF_SMALL).collect()
+        plan = frames[0]._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("FileScan") == final.count(f"default.{table.lower()}") == 1
+        assert "BroadcastExchange" not in plan
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        shutil.rmtree(os.path.join(cache.warehouse_path(spark), table.lower()), ignore_errors=True)
 
 
 def test_boolean_search_semantics(spark):

@@ -6,6 +6,7 @@ sidecar instead of serving stale rows (existence-only checks did not)."""
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 from pyspark.sql import Row
@@ -47,18 +48,47 @@ def test_ft_index_and_stats_rebuild_on_source_rewrite(spark, tmp_path):
     sf_dir = str(tmp_path / "sf_stale_ft")
     os.makedirs(sf_dir)
     _write_docs(spark, sf_dir, ["alpha beta", "alpha gamma"])
-    postings, doclen = index_tables(spark, sf_dir)
+    postings = index_tables(spark, sf_dir)
     assert postings.count() == 4  # alpha x2, beta, gamma
-    stats0 = corpus_stats(spark, sf_dir, doclen).collect()[0]
-    assert stats0.n_docs == 2.0
+    assert corpus_stats(spark, sf_dir) == (2.0, 2.0)
 
     time.sleep(0.01)
     _write_docs(spark, sf_dir, ["alpha beta", "alpha gamma", "delta delta epsilon"])
-    postings, doclen = index_tables(spark, sf_dir)
+    postings = index_tables(spark, sf_dir)
     # stale index would still show 4 posting rows / 2 docs
     assert postings.count() == 6
-    stats1 = corpus_stats(spark, sf_dir, doclen).collect()[0]
-    assert stats1.n_docs == 3.0
+    assert corpus_stats(spark, sf_dir) == (3.0, 7 / 3)
+
+
+def test_ft_index_rebuilds_files_bucketed_another_way(spark, tmp_path):
+    """Postings files of an older layout (64 buckets, no dl) stamped with
+    the source's own stamp are stale: registered under the corpus-sized
+    bucket count, a term lookup would prune to the wrong file. The bucket
+    count is part of the stamp, so index_tables rebuilds them."""
+    from pyspark.sql import functions as F
+
+    from tiflash_spark import cache
+    from tiflash_spark.pipeline.fulltext import build_postings, index_tables
+
+    sf_dir = str(tmp_path / "sf_rebucket_ft")
+    os.makedirs(sf_dir)
+    _write_docs(spark, sf_dir, ["alpha beta", "alpha gamma"])
+    name = f"ft_postings_{cache.sf_tag(sf_dir)}"
+    loc = os.path.join(cache.warehouse_path(spark), name)
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    old = build_postings(docs).drop("dl").write.mode("overwrite").bucketBy(64, "term")
+    old.sortBy("term").option("path", loc).saveAsTable(name)
+    with open(os.path.join(loc, "_SOURCE_STAMP"), "w") as fh:
+        fh.write(cache._table_stamp(sf_dir, "documents"))
+    spark.sql(f"DROP TABLE {name}")  # as a new session finds it
+
+    postings = index_tables(spark, sf_dir)
+    assert "dl" in postings.columns
+    assert postings.filter(F.col("term") == "alpha").count() == 2
+    with open(os.path.join(loc, "_SOURCE_STAMP")) as fh:
+        assert fh.read().endswith("/1")
+    spark.sql(f"DROP TABLE {name}")
+    shutil.rmtree(loc)
 
 
 def test_quant_scales_rebuild_on_source_rewrite(spark, tmp_path):

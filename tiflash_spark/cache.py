@@ -19,8 +19,8 @@ write or compaction time. The engine follows the same rule in one place:
   the session's warehouse, derived from one source table of a scale
   factor (its name carries :func:`sf_tag`). Its ``_SOURCE_STAMP`` file
   holds the source's ``<mtime_ns>-<size>`` (``absent`` for a missing
-  source); a mismatch rebuilds it. Without a local warehouse the caller
-  builds inline.
+  source; a bucketed table appends ``/<buckets>``); a mismatch rebuilds
+  it. Without a local warehouse the caller builds inline.
 
 Why this is safe: every memoized value is derived metadata that plans are
 built from (physical schemas of parquet files and of DeltaStore layers,
@@ -233,7 +233,9 @@ def bucketed(
     3) otherwise build, write bucketed, register, stamp."""
     wh = warehouse_path(spark)
     loc = os.path.join(wh, name.lower()) if wh else None
-    stamp = _table_stamp(sf_dir, table)
+    # files bucketed another way would prune to the wrong bucket: the
+    # count is part of the stamp
+    stamp = f"{_table_stamp(sf_dir, table)}/{buckets}"
     fresh = loc is None or _fresh(loc, stamp)
     if spark.catalog.tableExists(name):
         if fresh:

@@ -1068,10 +1068,8 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         index_tables,
     )
 
-    postings, doclen = index_tables(spark, sf_dir)
     bm = bm25_search(
-        postings, doclen, SEARCH_TERMS, k=N_CAND,
-        stats=corpus_stats(spark, sf_dir, doclen),
+        index_tables(spark, sf_dir), SEARCH_TERMS, corpus_stats(spark, sf_dir), k=N_CAND
     ).select("doc_id", "bm25")
     bm_r = bm.withColumn(
         "bm25_rank",

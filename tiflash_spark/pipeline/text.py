@@ -575,7 +575,7 @@ LM_OOV_PROB = 1e-6
 
 def _lm_vocab_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The bounded top-V unigram LM (tok, p), persisted BESIDE the token
-    table like ft_stats sits beside the postings: the model of a
+    table, as an index's corpus stats sit beside it: the model of a
     corpus-quality scorer is index metadata, built once per scale factor
     at index time — per query it is a ≤LM_TOP_V-row parquet read instead
     of a full doc-term aggregation pass (measured r11, 8 interleaved
