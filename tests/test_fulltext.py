@@ -272,6 +272,64 @@ def test_postings_carry_doc_length(spark):
     assert corpus_stats_of(docs) == (float(len(want)), sum(want.values()) / len(want))
 
 
+def test_postings_unique_per_term_doc_id(spark):
+    """build_postings is a GROUP BY term, doc_id for any input: two
+    documents sharing a doc_id, of different lengths, fold into one row
+    per term (tf summed, dl the largest length holding it), so the plain COUNTs of
+    keyword, boolean and BM25 search never see a duplicate."""
+    docs = spark.createDataFrame(
+        [(1, "fox dog"), (1, "fox fox cat"), (2, "dog")], "doc_id long, text string"
+    )
+    rows = {(r.term, r.doc_id): (r.dl, r.tf) for r in build_postings(docs).collect()}
+    assert rows == {
+        ("fox", 1): (3, 3), ("dog", 1): (2, 1), ("cat", 1): (3, 1), ("dog", 2): (1, 1),
+    }
+
+
+def test_postings_bucket_count_follows_corpus_size(spark, tmp_path, monkeypatch):
+    """One postings bucket per BUCKET_BYTES of documents.parquet, rounded
+    up to a power of two and capped at MAX_BUCKETS. A multi-bucket index
+    answers keyword, boolean and BM25 search exactly as the one-partition
+    frame it was written from."""
+    import os
+    import shutil
+
+    from tiflash_spark import cache
+    from tiflash_spark.pipeline import fulltext as ft
+
+    sf_dir = tmp_path / "sf_ft_buckets"
+    sf_dir.mkdir()
+    path = str(sf_dir / "documents.parquet")
+    docs = spark.createDataFrame(DOCS)
+    docs.coalesce(1).write.parquet(path)
+    sf_dir = str(sf_dir)
+    size = sum(f[2] for f in cache.tree_stamp(path))
+    for per, want in ((size, 1), (-(-size // 2), 2), (-(-size // 3), 4), (1, ft.MAX_BUCKETS)):
+        monkeypatch.setattr(ft, "BUCKET_BYTES", per)
+        assert ft.postings_buckets(sf_dir) == want
+
+    monkeypatch.setattr(ft, "BUCKET_BYTES", -(-size // 3))
+    table = f"ft_postings_{cache.sf_tag(sf_dir)}"
+    loc = os.path.join(cache.warehouse_path(spark), table.lower())
+    try:
+        postings = ft.index_tables(spark, sf_dir)
+        with open(os.path.join(loc, "_SOURCE_STAMP")) as fh:
+            assert fh.read().endswith("/4")
+        spec = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").filter("col_name = 'Num Buckets'")
+        assert spec.collect()[0].data_type == "4"
+        ref = build_postings(docs).coalesce(1)
+        stats = ft.corpus_stats_of(docs)
+        for search in (
+            lambda p: keyword_search(p, ["quick", "fox"], "all"),
+            lambda p: ft.boolean_search(p, ["fox"], ["quick"], ["lazy"]),
+            lambda p: ft.bm25_search(p, ["quick", "dog", "fox"], stats),
+        ):
+            assert search(postings).collect() == search(ref).collect()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        shutil.rmtree(loc, ignore_errors=True)
+
+
 def test_bm25_cold_build_jobs_and_one_postings_scan(spark, tmp_path):
     """A cold fulltext_bm25 over a freshly landed corpus builds its index
     in one pass and its stats in one aggregate (≤ 4 build jobs: each is a

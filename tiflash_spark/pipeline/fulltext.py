@@ -40,6 +40,11 @@ from tiflash_spark.cache import bucketed, literal_memo, sf_tag, source_stamp, tr
 from tiflash_spark.catalog import load_table
 
 TOKEN_RE = "[^a-z0-9]+"
+# Measured on a 4-core host over 1-64 buckets, the four full-text
+# consumers warm plus a cold fulltext_bm25: one bucket was fastest at
+# 0.06, 0.6, 5.9 and 18 MB of documents, and 4 or 16 buckets at 57 MB,
+# where one bucket was 18% slower warm. 24 MB per bucket gives 4 there.
+BUCKET_BYTES = 24 << 20
 MAX_BUCKETS = 64
 
 
@@ -48,17 +53,32 @@ def tokenize(col) -> "F.Column":
     return F.filter(F.split(F.lower(col), TOKEN_RE), lambda t: t != "")
 
 
+def doc_length(text) -> "F.Column":
+    """A document's length: its token count, not positive for empty or
+    NULL text. BM25's per-row ``dl`` (build_postings) and its (N, avgdl)
+    (corpus_stats_of) both come from here, so they cannot drift apart."""
+    return F.size(tokenize(text)).cast("long")
+
+
 def build_postings(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(term, doc_id, dl, tf, positions) posting rows from a document table.
-    ``dl`` is the document's token count, so BM25 reads its length norm
-    from the same row as tf. A document with empty or NULL text has no
-    tokens and so no postings."""
-    toks = docs.select(F.col(id_col).alias("doc_id"), tokenize(F.col(text_col)).alias("toks"))
-    return toks.select(
-        "doc_id",
-        F.size("toks").cast("long").alias("dl"),
-        F.posexplode("toks").alias("pos", "term"),
-    ).groupBy("term", "doc_id", "dl").agg(
+    """(term, doc_id, dl, tf, positions) posting rows from a document table,
+    one per (term, doc_id) — a GROUP BY term, doc_id. ``dl`` is the
+    document's length (doc_length), so BM25 reads its length norm from the
+    same row as tf. A document with empty or NULL text has no tokens and so
+    no postings.
+
+    CONTRACT: ``doc_id`` is the corpus key (500 of 500 rows distinct at
+    sf0.01). Documents sharing a doc_id would fold into one: tf and
+    positions merged, dl the largest length among those holding the term."""
+    toks = docs.select(
+        F.col(id_col).alias("doc_id"),
+        tokenize(F.col(text_col)).alias("toks"),
+        doc_length(F.col(text_col)).alias("dl"),
+    )
+    return toks.select("doc_id", "dl", F.posexplode("toks").alias("pos", "term")).groupBy(
+        "term", "doc_id"
+    ).agg(
+        F.max("dl").alias("dl"),
         F.count(F.lit(1)).alias("tf"),
         F.sort_array(F.collect_list("pos")).alias("positions"),
     )
@@ -67,17 +87,15 @@ def build_postings(docs: DataFrame, text_col: str = "text", id_col: str = "doc_i
 # --- persisted index fixture (built once per sf, reused across queries) -----
 
 
-def postings_buckets(spark: SparkSession, sf_dir: str) -> int:
-    """Term buckets for a corpus: one per ``spark.sql.files.maxPartitionBytes``
-    of ``documents.parquet``, rounded up to a power of two, at most
-    MAX_BUCKETS. A small corpus is one bucket, so each scan of it is one
-    task instead of MAX_BUCKETS near-empty ones."""
+def postings_buckets(sf_dir: str) -> int:
+    """Term buckets for a corpus: one per BUCKET_BYTES of
+    ``documents.parquet``, rounded up to a power of two, at most
+    MAX_BUCKETS. More buckets let a lookup read fewer posting bytes, but
+    each is a file per write task and a task per bucketed scan."""
     # one parquet file, or a directory of part files
     path = os.path.join(sf_dir, "documents.parquet")
     files = tree_stamp(path) or [source_stamp(path) or ("", 0, 0)]
-    size = sum(f[2] for f in files)
-    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    n = -(-size // split)
+    n = -(-sum(f[2] for f in files) // BUCKET_BYTES)
     return min(MAX_BUCKETS, 1 << max(n - 1, 0).bit_length())
 
 
@@ -94,7 +112,7 @@ def index_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"ft_postings_{sf_tag(sf_dir)}",
         lambda: build_postings(load_table(spark, sf_dir, "documents")),
         ("term",),
-        postings_buckets(spark, sf_dir),
+        postings_buckets(sf_dir),
     )
 
 
@@ -102,7 +120,7 @@ def corpus_stats_of(docs: DataFrame, text_col: str = "text") -> tuple[float, flo
     """(n_docs, avgdl) over the documents with at least one token — the
     documents that have postings — in one aggregate job."""
     row = (
-        docs.select(F.size(tokenize(F.col(text_col))).cast("long").alias("dl"))
+        docs.select(doc_length(F.col(text_col)).alias("dl"))
         .filter(F.col("dl") > 0)
         .agg(F.count(F.lit(1)).cast("double").alias("n_docs"), F.avg("dl").alias("avgdl"))
         .first()
@@ -205,10 +223,10 @@ def bm25_search(
     an exchange. Then one doc_id aggregate and the top-k.
 
     CONTRACT (shared with keyword_search): ``postings`` is unique per
-    (term, doc_id) — build_postings is a GROUP BY — so df_t and n_terms
-    are plain COUNTs instead of COUNT(DISTINCT): same value, no
-    distinct-aggregate Expand. And ``doc_id`` is the corpus key (500 of
-    500 rows distinct at sf0.01), so ``dl`` is one document's length.
+    (term, doc_id) — build_postings is a GROUP BY term, doc_id — so df_t
+    and n_terms are plain COUNTs instead of COUNT(DISTINCT): same value,
+    no distinct-aggregate Expand. And ``doc_id`` is the corpus key (see
+    build_postings), so ``dl`` is one document's length.
     """
     n_docs, avgdl = stats
     hits = postings.filter(F.col("term").isin(*terms)).select(
