@@ -40,10 +40,10 @@ from tiflash_spark.cache import bucketed, literal_memo, sf_tag, source_stamp, tr
 from tiflash_spark.catalog import load_table
 
 TOKEN_RE = "[^a-z0-9]+"
-# Measured on a 4-core host over 1-64 buckets, the four full-text
-# consumers warm plus a cold fulltext_bm25: one bucket was fastest at
-# 0.06, 0.6, 5.9 and 18 MB of documents, and 4 or 16 buckets at 57 MB,
-# where one bucket was 18% slower warm. 24 MB per bucket gives 4 there.
+# Measured on a 4-core host over 1-64 buckets (the four full-text consumers
+# warm, fulltext_bm25 cold): one bucket was fastest at 0.06-5.9 MB of
+# documents, and at 18 MB tied 4 buckets warm and was 17% faster cold; at
+# 57 MB 4 or 16 buckets were fastest. 24 MB per bucket gives 1, then 4.
 BUCKET_BYTES = 24 << 20
 MAX_BUCKETS = 64
 
