@@ -275,8 +275,8 @@ def test_postings_carry_doc_length(spark):
 def test_postings_unique_per_term_doc_id(spark):
     """build_postings is a GROUP BY term, doc_id for any input: two
     documents sharing a doc_id, of different lengths, fold into one row
-    per term (tf summed, dl the largest length holding it), so the plain COUNTs of
-    keyword, boolean and BM25 search never see a duplicate."""
+    per term (tf summed, dl the largest length holding it), so the plain
+    COUNTs of keyword, boolean and BM25 search never see a duplicate."""
     docs = spark.createDataFrame(
         [(1, "fox dog"), (1, "fox fox cat"), (2, "dog")], "doc_id long, text string"
     )
